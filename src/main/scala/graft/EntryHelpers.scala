@@ -153,13 +153,37 @@ private[graft] object EntryHelpers {
    */
   private[graft] def eventsNs(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val e = s.read.parquet(pq(dir, "events"))
+    tsAsNanos(s.read.parquet(pq(dir, "events")))
+  }
+
+  /**
+   * The events table as a FILE STREAM, `ts` normalized as in
+   * [[eventsNs]] (the nanos flag is set here, before the stream starts:
+   * a running query reads with the session conf copied at its start). A
+   * file stream needs a directory (a file path fails with "basePath must
+   * be a directory"), so the one input file is copied into a fresh
+   * `staging` dir with a plain file copy — no Spark job — and the stream
+   * reads it in place: one file, so one data batch. Callers filter and
+   * project on the stream and delete `staging` with their checkpoint.
+   */
+  private[graft] def eventsStream(s: SparkSession, dir: String,
+      staging: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val src = java.nio.file.Paths.get(pq(dir, "events"))
+    val dst = java.nio.file.Paths.get(staging)
+    org.apache.commons.io.FileUtils.deleteQuietly(dst.toFile)
+    java.nio.file.Files.createDirectories(dst)
+    java.nio.file.Files.copy(src, dst.resolve(src.getFileName))
+    tsAsNanos(s.readStream.schema(s.read.parquet(src.toString).schema)
+      .parquet(staging))
+  }
+
+  private def tsAsNanos(e: DataFrame): DataFrame =
     e.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => e
       case _ => e.withColumn("ts",
         unix_micros(col("ts").cast("timestamp")) * lit(1000L))
     }
-  }
 
   /** Make `name` writable as a managed table: drop any registration AND
     * delete an orphaned warehouse location (the metastore is per-session
@@ -205,26 +229,26 @@ private[graft] object EntryHelpers {
   }
 
   /**
-   * Run a STREAMING replay under a small `spark.sql.shuffle.partitions`
-   * (restored afterwards). Stateful streaming cost at replay scale is
-   * dominated by the state store: every trigger commits one delta file
-   * PER STATE PARTITION to the checkpoint, so 32 partitions of toy state
-   * pay 32 filesystem commits a trigger for kilobytes of actual state.
-   * Eight partitions cut that 4x while leaving results identical — state
-   * keys hash to partitions, and every stream contract here is
-   * partition-independent. (On a real cluster the state would be sized to
-   * executors via this same knob; the point is it is a KNOB, not a plan
-   * property.) Results are unaffected; only checkpoint-commit fan-out is.
+   * Run a STREAMING replay with `spark.sql.shuffle.partitions` set to
+   * `parts` (restored afterwards). That conf is the number of state
+   * partitions of every stateful operator in the replay, and each trigger
+   * commits one state-store delta file per state partition to the
+   * checkpoint. The sessions' own default is their core count (4 in the
+   * test session and on a 4-core bench box, 32 on a 32-core one), so a
+   * fixed count here is what makes the commit fan-out the same on every
+   * box. Toy-state replays (at most a few thousand keys) pass 1: one
+   * commit per stateful operator per trigger. Replays with no
+   * Spark-managed state pass 8, which only sizes their batch shuffles.
+   * Results are unaffected: state keys hash to partitions, and every
+   * stream contract here is partition-independent.
    */
-  private[graft] def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
+  private[graft] def withStreamShuffle[T](s: SparkSession, parts: Int)(
+      body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, "8")
+    s.conf.set(key, parts.toString)
     try body finally s.conf.set(key, prev)
   }
-
-
-
 
   /**
    * Exact-pair verification shared by the hash-prefiltered dedup queries:

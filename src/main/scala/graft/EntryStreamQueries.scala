@@ -41,7 +41,7 @@ private[graft] object EntryStreamQueries {
     // prove exactly-once accounting; the ledger's totals equal DuckDB
     // over everything that ever arrived. Still zero page I/O — a live
     // corpus's token census at footer cost.
-    "stream_token_accounting" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_token_accounting" -> ((s, dir) => withStreamShuffle(s, 8) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       val src = "/tmp/graft_stracct_src_" + suffix
       val out = scratch("graft_stracct_out_" + suffix)
@@ -93,7 +93,7 @@ private[graft] object EntryStreamQueries {
     // the streaming wrapper replays. src2's budget exceeds its totals
     // (never gated), src0/src1/src3 close mid-stream, 16 sources have no
     // budget and never pass.
-    "stream_budget_gate" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_budget_gate" -> ((s, dir) => withStreamShuffle(s, 8) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val out = freshTable(s, "graft_bg_out_" + suffix)
       val state = freshTable(s, "graft_bg_state_" + suffix)
@@ -125,7 +125,7 @@ private[graft] object EntryStreamQueries {
     // accumulate one row per (group, item) per trigger and counts only
     // grow here, so max() per key is the final sketch no matter how
     // AvailableNow batched the replay.
-    "stream_heavy_hitters" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_heavy_hitters" -> ((s, dir) => withStreamShuffle(s, 1) {
       import s.implicits._
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_hh_" + suffix)
@@ -159,14 +159,10 @@ private[graft] object EntryStreamQueries {
     // append mode needs no watermark and the replay must equal the batch
     // left as-of exactly. Unmatched events survive with null dims (LEFT
     // semantics — the streaming enrich never drops events).
-    "stream_asof_enrich" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_asof_enrich" -> ((s, dir) => withStreamShuffle(s, 8) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_asof_" + suffix)
-      eventsNs(s, dir)
-        .filter(col("user_id") < 30)
-        .select(col("user_id"), expr("ts div 1000").as("e_ts"), col("event_id"))
-        .write.mode("overwrite").parquet(staging)
-      // dim keys outside the staged events' key set are unreachable under
+      // dim keys outside the streamed events' key set are unreachable under
       // the left equi-join — filter them BEFORE the history aggregate so
       // the per-batch broadcast carries only matchable keys
       val ord = s.read.parquet(pq(dir, "orders"))
@@ -174,17 +170,21 @@ private[graft] object EntryStreamQueries {
         .groupBy(col("o_custkey").as("user_id"),
           unix_micros(col("o_orderdate").cast("timestamp")).as("o_ts"))
         .agg(max(col("o_orderkey")).as("o_key"))
-      val stream = s.readStream.schema(s.read.parquet(staging).schema).parquet(staging)
       val sink = "graft_stream_asof_sink_" + suffix
       val ckpt = scratchTempDir("graft_asof_ckpt")
       try {
-        graft.streaming.StreamOps.enrichAsOf(stream, ord,
-            Seq("user_id"), "e_ts", "o_ts")
+        graft.streaming.StreamOps.enrichAsOf(
+            eventsStream(s, dir, staging)
+              .filter(col("user_id") < 30)
+              .select(col("user_id"), expr("ts div 1000").as("e_ts"),
+                col("event_id")),
+            ord, Seq("user_id"), "e_ts", "o_ts")
           .writeStream.format("memory").queryName(sink).outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt.toString)
           .start().awaitTermination()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
+      } finally Seq(ckpt, new java.io.File(staging))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
       s.table(sink)
         .select(col("user_id"), col("e_ts"), col("event_id"), col("o_ts"), col("o_key"))
     }),
@@ -193,34 +193,34 @@ private[graft] object EntryStreamQueries {
     // STREAMING gap sessionization through the custom-state operator:
     // closedSessions (flatMapGroupsWithState, O(1) state per user) replays
     // the events table via AvailableNow; the oracle recomputes the same
-    // sessions relationally (gaps-and-islands). Staged as ONE file so the
-    // run is a single batch: every emitted session is successor-closed
-    // (= all but each user's last island — watermark timeouts, spec-covered
-    // separately, are kept out of reach by a huge delay so the emitted set
-    // is closed-form). Values are staged integer-valued (floor(v*100)) so
-    // the double session sums are bit-stable on both engines.
-    "stream_sessions" -> ((s, dir) => withStreamShuffle(s) {
+    // sessions relationally (gaps-and-islands). The stream reads the ONE
+    // events file in place, so the run is a single data batch: every
+    // emitted session is successor-closed (= all but each user's last
+    // island — watermark timeouts, spec-covered separately, are kept out
+    // of reach by a huge delay so the emitted set is closed-form). Values
+    // are projected integer-valued (floor(v*100)) so the double session
+    // sums are bit-stable on both engines.
+    "stream_sessions" -> ((s, dir) => withStreamShuffle(s, 1) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_sess_" + suffix)
-      eventsNs(s, dir)
-        .filter(col("user_id") < 20)
-        .select(col("user_id"),
-          timestamp_millis(expr("ts div 1000000")).as("ts"),
-          floor(col("value") * 100).cast("double").as("value"))
-        .coalesce(1).write.mode("overwrite").parquet(staging)
       val sink = "graft_stream_sess_sink_" + suffix
       val ckpt = scratchTempDir("graft_sess_ckpt")
       try {
         import s.implicits._
         graft.streaming.StreamOps.closedSessions(
-            s.readStream.schema(s.read.parquet(staging).schema).parquet(staging)
+            eventsStream(s, dir, staging)
+              .filter(col("user_id") < 20)
+              .select(col("user_id"),
+                timestamp_millis(expr("ts div 1000000")).as("ts"),
+                floor(col("value") * 100).cast("double").as("value"))
               .as[graft.streaming.UserEvent],
             gapMs = 6L * 3600 * 1000, watermark = "2400 hours")
           .writeStream.format("memory").queryName(sink).outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt.toString)
           .start().awaitTermination()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
+      } finally Seq(ckpt, new java.io.File(staging))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
       s.table(sink).select(col("user_id"),
         unix_millis(col("session_start")).as("s_start"),
         unix_millis(col("session_end")).as("s_end"),
@@ -238,7 +238,7 @@ private[graft] object EntryStreamQueries {
     // emitted set is then ALL islands per user, and the oracle is the full
     // gaps-and-islands recompute with no last-island exclusion. Parquet
     // sink: the memory sink cannot resume from a checkpoint.
-    "stream_sessions_final" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_sessions_final" -> ((s, dir) => withStreamShuffle(s, 1) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_sessf_" + suffix)
       val outDir = scratch("graft_stream_sessf_out_" + suffix)
@@ -295,7 +295,7 @@ private[graft] object EntryStreamQueries {
     // user, so max_by picks each user's final state — which must equal
     // the plain batch group-by. Values staged integer-valued for
     // bit-stable double accumulation.
-    "stream_running_totals" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_running_totals" -> ((s, dir) => withStreamShuffle(s, 1) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_rt_" + suffix)
       eventsNs(s, dir)
@@ -330,23 +330,22 @@ private[graft] object EntryStreamQueries {
     // memory-sink table equals the batch group-by no matter how the input
     // splits into batches. The oracle explodes each event into its three
     // containing windows (window = 3 x slide, epoch-aligned).
-    "stream_window_counts" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_window_counts" -> ((s, dir) => withStreamShuffle(s, 1) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_win_" + suffix)
-      eventsNs(s, dir)
-        .select(timestamp_millis(expr("ts div 1000000")).as("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(staging)
       val sink = "graft_stream_win_sink_" + suffix
       val ckpt = scratchTempDir("graft_win_ckpt")
       try {
         graft.streaming.StreamOps.windowedCounts(
-            s.readStream.schema(s.read.parquet(staging).schema).parquet(staging),
+            eventsStream(s, dir, staging)
+              .select(timestamp_millis(expr("ts div 1000000")).as("ts")),
             "ts", "30 minutes", "10 minutes", watermark = "2400 hours")
           .writeStream.format("memory").queryName(sink).outputMode("complete")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt.toString)
           .start().awaitTermination()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
+      } finally Seq(ckpt, new java.io.File(staging))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
       s.table(sink)
         .select(unix_millis(col("window_start")).as("window_start"), col("n_events"))
     }),
@@ -356,24 +355,23 @@ private[graft] object EntryStreamQueries {
     // (user_id, event_type) emits each key once; projecting the keys makes
     // the emitted SET closed-form (payload of the surviving row is
     // arrival-order-dependent and deliberately not part of the contract).
-    "stream_dedup" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_dedup" -> ((s, dir) => withStreamShuffle(s, 1) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_dedup_" + suffix)
-      eventsNs(s, dir)
-        .select(col("user_id"), col("event_type"),
-          timestamp_millis(expr("ts div 1000000")).as("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(staging)
       val sink = "graft_stream_dedup_sink_" + suffix
       val ckpt = scratchTempDir("graft_dedup_ckpt")
       try {
         graft.streaming.StreamOps.dedupStream(
-            s.readStream.schema(s.read.parquet(staging).schema).parquet(staging),
+            eventsStream(s, dir, staging)
+              .select(col("user_id"), col("event_type"),
+                timestamp_millis(expr("ts div 1000000")).as("ts")),
             "ts", Seq("user_id", "event_type"), watermark = "2400 hours")
           .writeStream.format("memory").queryName(sink).outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt.toString)
           .start().awaitTermination()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
+      } finally Seq(ckpt, new java.io.File(staging))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
       s.table(sink).select(col("user_id"), col("event_type"))
     }),
 
@@ -387,7 +385,7 @@ private[graft] object EntryStreamQueries {
     // state independent of micro-batch boundaries (the split-invariance
     // contract on StreamOps.ingestIncrements); the oracle recomputes that
     // same fixpoint in closed form.
-    "stream_ingest" -> ((s, dir) => withStreamShuffle(s) {
+    "stream_ingest" -> ((s, dir) => withStreamShuffle(s, 8) {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val band = freshTable(s, "graft_si_band_" + suffix)
       val docs = freshTable(s, "graft_si_docs_" + suffix)
