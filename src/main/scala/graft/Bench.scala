@@ -1,114 +1,87 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/**
+ * The timed query inventory: every query (or the `SPARK_GRAFT_ONLY`
+ * subset) once, through [[Harness.time]], over `SPARK_GRAFT_SF_DIR`.
+ * Prints a full JSON line and a compact final line; the full per-query
+ * record is also written to `SPARK_GRAFT_BENCHFULL`. Any failed query
+ * makes the exit code 2.
+ *
+ * Usage: `sbt "runMain graft.Bench"`
+ */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.local.dir", EntryHelpers.sparkLocalDir)
-      .config("spark.sql.warehouse.dir", EntryHelpers.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: exercise codegen, shuffle, parquet and window paths
-    // once so the first timed query measures steady state, not JVM/JIT and
-    // classloading warmup (worth several seconds on the first query).
-    try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      spark.range(0, 100000, 1, 8)
-        .withColumn("g", pmod(col("id"), lit(64)))
-        .withColumn("rn", row_number().over(Window.partitionBy(col("g")).orderBy(col("id"))))
-        .groupBy(col("g")).agg(sum(col("id")), count(lit(1)), max(col("rn")))
-        .collect()
-      spark.read.parquet(s"$sfDir/nation.parquet").count()
-    } catch { case _: Throwable => () }
-    // A failed query must be visible as an error, not recorded as a timing
-    // (a broken query would otherwise read as a fast one).
-    //
-    // Action: count the PHYSICAL plan's rows via queryExecution.toRdd, not
-    // df.count() — under count() Catalyst prunes unreferenced projections,
-    // so a pure-select query (fingerprints, quality scores, feature
-    // extraction) would be timed with the very expression under benchmark
-    // optimized away. toRdd executes the plan exactly as written.
-    // Optional subset (comma-separated names): the suite-pressure bisect
-    // tool — run halves of the inventory in separate JVMs and compare
-    // against the same queries' full-suite times. Names are trimmed and
-    // validated: a typo must fail the run, not silently bench a
-    // different (or empty) set and read as a timing change.
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(names.nonEmpty && unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}" +
-          (if (names.isEmpty) " (empty set)" else ""))
-    }
-    // ambient context AT START: same-day full-suite runs have measured
-    // 1.0-1.3x apart with pairwise-DISJOINT riser sets purely from
-    // page-cache reclaim between runs (r17, BASELINE.md) — the
-    // artifact carries the numbers that adjudicate that, so a riser
-    // analysis never has to reconstruct the box state forensically
-    def loadNow: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    def cachedMb: Long =
+    // Optional subset: the suite-pressure bisect tool — run halves of the
+    // inventory in separate JVMs and compare against the same queries'
+    // full-suite times.
+    val names = Harness.select(sys.env.get("SPARK_GRAFT_ONLY")).sorted
+    Harness.run(sfDir) { spark =>
+      val (loadStart, cachedStartMb) = (Harness.load(), cachedMb)
+      val queries = SparkEntry.queries
+      val results = names.map { name =>
+        val (secs, error) = Harness.time(spark, sfDir, queries(name))
+        (name, secs, error)
+      }
+      val load = Harness.load()
+      val fullLn = fullLine(results, load, loadStart, cachedStartMb, cachedMb,
+        sfDir)
+      // The per-round artifact keeps only the TAIL of this process's
+      // output, so anything that must survive truncation prints LAST: the
+      // complete record also goes to a file (path overridable for
+      // per-round naming), and the final stdout line is the compact one.
+      val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCHFULL", "BENCHFULL.json")
       try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files
-          .readAllLines(java.nio.file.Paths.get("/proc/meminfo")).asScala
-          .collectFirst { case l if l.startsWith("Cached:") =>
-            l.split("\\s+")(1).toLong / 1024 }
-          .getOrElse(-1L)
-      } catch { case _: Throwable => -1L }
-    val (loadStart, cachedStartMb) = (loadNow, cachedMb)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val outcome =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
-        catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200)) }
-      (name, (System.nanoTime() - t0) / 1e9, outcome)
+        java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
+          (fullLn + "\n").getBytes("UTF-8"))
+      } catch { case e: Throwable =>
+        System.err.println(s"benchfull write failed: $e")
+      }
+      println(fullLn)
+      println(finalLine(results, load, fullPath, sfDir))
+      if (results.exists(_._3.isDefined)) 2 else 0
     }
-    val qs = results.map { case (k, v, _) => Json.str(k) + ":" + v }
+  }
+
+  /** (query, seconds, error) */
+  type Result = (String, Double, Option[String])
+
+  private def times(results: Seq[Result]): String =
+    results.map { case (k, v, _) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
+
+  /** The complete record: every query's time and every error, plus the
+    * ambient load and page-cache context at start and end. */
+  def fullLine(results: Seq[Result], load: Double, loadStart: Double,
+      cachedStartMb: Long, cachedEndMb: Long, sfDir: String): String = {
     val errs = results.collect { case (k, _, Some(e)) =>
       Json.str(k) + ":" + Json.str(e)
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // 1-minute system load average: totals on a shared box are only
-    // comparable load-for-load, so the artifact carries its own context
-    val load = loadNow
     val ambient =
       s""""load":$load,"load_start":$loadStart,""" +
-        s""""cached_mb_start":$cachedStartMb,"cached_mb_end":$cachedMb"""
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec",$ambient,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
-    // The per-round artifact keeps only the TAIL of this process's output,
-    // so anything that must survive truncation has to print LAST. Two
-    // measures: (1) the complete per-query record is also written to a
-    // committed file (path overridable for per-round naming); (2) the final
-    // stdout line is a compact, self-contained summary — total, load, error
-    // count, and only the top-10 slowest queries — small enough that no
-    // reasonable tail capture can cut it.
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCHFULL", "BENCHFULL.json")
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
-        (fullLine + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"benchfull write failed: $e")
-    }
-    println(fullLine)
-    val top10 = results.sortBy(-_._2).take(10)
-      .map { case (k, v, _) => Json.str(k) + ":" + v }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","load":$load,"nQueries":${results.size},"nErrors":${results.count(_._3.isDefined)},"queries":$top10,"full":${Json.str(fullPath)},"sf":"$sfDir"}""")
-    spark.stop()
-    if (results.exists(_._3.isDefined)) sys.exit(2)
+        s""""cached_mb_start":$cachedStartMb,"cached_mb_end":$cachedEndMb"""
+    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec",$ambient,"queries":${times(results)},"errors":$errs,"sf":"$sfDir"}"""
   }
+
+  /** The compact last line: total, load, error count and only the top-10
+    * slowest queries — small enough that no tail capture can cut it. */
+  def finalLine(results: Seq[Result], load: Double, fullPath: String,
+      sfDir: String): String = {
+    val top10 = times(results.sortBy(-_._2).take(10))
+    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","load":$load,"nQueries":${results.size},"nErrors":${results.count(_._3.isDefined)},"queries":$top10,"full":${Json.str(fullPath)},"sf":"$sfDir"}"""
+  }
+
+  /** Page-cache size: same-day full-suite runs have measured 1.0-1.3x
+    * apart purely from page-cache reclaim between runs (r17,
+    * BASELINE.md), so the artifact carries the numbers that adjudicate
+    * that. */
+  private def cachedMb: Long =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files
+        .readAllLines(java.nio.file.Paths.get("/proc/meminfo")).asScala
+        .collectFirst { case l if l.startsWith("Cached:") =>
+          l.split("\\s+")(1).toLong / 1024 }
+        .getOrElse(-1L)
+    } catch { case _: Throwable => -1L }
 }

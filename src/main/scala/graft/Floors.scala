@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * STANDALONE per-query floor measurement — the standing record the 2×
  * perf contract compares against (BASELINE.md "floors" table), instead
@@ -11,62 +9,43 @@ import org.apache.spark.sql.SparkSession
  * query's dir memoization hasn't paid yet in this process) and N WARM
  * runs; the floor is the MINIMUM warm time. Prints one JSON line:
  * `{"sf":…, "load":…, "queries":{name:{"cold":s,"warm":[s…],"floor":s}}}`.
+ * A query whose run failed also carries `"error"` (its first failure),
+ * and the exit code is 2, as in [[Bench]].
  *
  * Usage: `runMain graft.Floors <sfDir> <q1,q2,…> [warmRuns]`
- * (same session shape as [[Bench]]: local[SPARK_GRAFT_CPUS],
- * shuffle.partitions=cpus, UTC, graft extensions).
  */
 object Floors {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val warmRuns = if (args.length > 2) args(2).toInt else 3
-    val unknown = names.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.local.dir", EntryHelpers.sparkLocalDir)
-      .config("spark.sql.warehouse.dir", EntryHelpers.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the same untimed JVM warmup Bench uses
-    try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      spark.range(0, 100000, 1, 8)
-        .withColumn("g", pmod(col("id"), lit(64)))
-        .withColumn("rn",
-          row_number().over(Window.partitionBy(col("g")).orderBy(col("id"))))
-        .groupBy(col("g")).agg(sum(col("id")), count(lit(1)), max(col("rn")))
-        .collect()
-      spark.read.parquet(s"$sfDir/nation.parquet").count()
-    } catch { case _: Throwable => () }
-    def loadNow: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    def time(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val loadStart = loadNow
-    val results = names.map { name =>
-      val cold = time(name)
-      val warm = (1 to warmRuns).map(_ => time(name))
-      name -> ((cold, warm))
-    }
-    val qjson = results.map { case (n, (cold, warm)) =>
+  /** (query, cold seconds, warm seconds, first error) */
+  type Result = (String, Double, Seq[Double], Option[String])
+
+  def line(sfDir: String, loadStart: Double, loadEnd: Double,
+      warmRuns: Int, results: Seq[Result]): String = {
+    val qjson = results.map { case (n, cold, warm, error) =>
+      val err = error.fold("")(e => s""","error":${Json.str(e)}""")
       s""""$n":{"cold":${f"$cold%.3f"},"warm":[${
         warm.map(w => f"$w%.3f").mkString(",")}],"floor":${
-        f"${warm.min}%.3f"}}"""
+        f"${warm.min}%.3f"}$err}"""
     }.mkString(",")
-    println(s"""{"sf":"$sfDir","load_start":$loadStart,""" +
-      s""""load_end":$loadNow,"warm_runs":$warmRuns,""" +
-      s""""queries":{$qjson}}""")
-    spark.stop()
+    s"""{"sf":"$sfDir","load_start":$loadStart,""" +
+      s""""load_end":$loadEnd,"warm_runs":$warmRuns,""" +
+      s""""queries":{$qjson}}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val names = Harness.select(Some(args(1)))
+    val warmRuns = if (args.length > 2) args(2).toInt else 3
+    require(warmRuns >= 1, s"warmRuns must be at least 1, got $warmRuns")
+    Harness.run(sfDir) { spark =>
+      val loadStart = Harness.load()
+      val queries = SparkEntry.queries
+      val results = names.map { name =>
+        val fn = queries(name)
+        val runs = (0 to warmRuns).map(_ => Harness.time(spark, sfDir, fn))
+        (name, runs.head._1, runs.tail.map(_._1), runs.flatMap(_._2).headOption)
+      }
+      println(line(sfDir, loadStart, Harness.load(), warmRuns, results))
+      if (results.exists(_._4.isDefined)) 2 else 0
+    }
   }
 }

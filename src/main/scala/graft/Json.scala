@@ -1,6 +1,6 @@
 package graft
 
-/** Minimal JSON string escaping shared by the Verify and Bench mains. */
+/** Minimal JSON string escaping shared by the harness mains. */
 private[graft] object Json {
   /** Quote + escape: backslash, quote, and ALL control chars (<0x20) —
     * a tab or CR in builder-authored SQL or an exception message would

@@ -1,44 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Dump `explain("formatted")` for every declared query (or a named
  * subset) to one file per query — the r20 optimization round's plan
- * evidence (`plans/r20/<query>_<tag>.txt`). Same session shape as
- * [[Bench]]. Building a query's DataFrame runs its fixture writes, so
- * a full dump is NOT free, but no declared query's final plan executes.
+ * evidence (`plans/r20/<query>_<tag>.txt`). Building a query's
+ * DataFrame runs its fixture writes, so a full dump is NOT free, but no
+ * declared query's final plan executes.
  *
  * Usage: `runMain graft.PlanDump <sfDir> <outDir> <tag> [q1,q2,…]`
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, tag) = (args(0), args(1), args(2))
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.local.dir", EntryHelpers.sparkLocalDir)
-      .config("spark.sql.warehouse.dir", EntryHelpers.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    val names = Harness.select(args.lift(3)).sorted
+    Harness.run(sfDir) { spark =>
+      new java.io.File(outDir).mkdirs()
+      val queries = SparkEntry.queries
+      names.foreach { name =>
         val plan =
-          try fn(spark, sfDir).queryExecution.explainString(
+          try queries(name)(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           catch { case e: Throwable => s"PLAN FAILED: $e" }
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
           plan.getBytes("UTF-8"))
       }
-    spark.stop()
+      0
+    }
   }
 }

@@ -210,4 +210,56 @@ class HudiMorSpec extends SparkSpec {
     // ...but the PRESENT view is unaffected by a clean
     assert(HudiMeta.morFileGroups(spark, d3).count() === 3L)
   }
+
+  test("a many-commit synthetic timeline: three states per instant, " +
+      "one group per file id across rewrites and log appends") {
+    // commit i declares perCommit writes over nGroups file groups: a
+    // group's first write is a base insert, later ones alternate base
+    // rewrites and log appends on its latest base slice. No data file
+    // exists — resolution is commit-metadata-driven.
+    val (nCommits, perCommit) = (20, 8)
+    val nGroups = nCommits * perCommit / 10
+    val root = Files.createTempDirectory("graft_hudimor_tl").toFile
+    val hoodie = new java.io.File(root, ".hoodie")
+    hoodie.mkdirs()
+    Files.write(new java.io.File(hoodie, "hoodie.properties").toPath,
+      ("hoodie.table.name=graft_tl\n" +
+        "hoodie.table.type=MERGE_ON_READ\n").getBytes("UTF-8"))
+    def instant(i: Int): String = f"2024010100${i}%07d"
+    val baseInstant = new Array[String](nGroups)
+    (0 until nCommits).foreach { i =>
+      val ts = instant(i)
+      val byPart = (0 until perCommit).map { j =>
+        val g = (i * perCommit + j) % nGroups
+        val part = s"p=${g % 4}"
+        val stat =
+          if (baseInstant(g) == null || (i + j) % 3 == 0) {
+            baseInstant(g) = ts
+            s"""{"fileId":"g$g","path":"$part/g${g}_0-0-0_$ts.parquet",""" +
+              s""""numWrites":100,"totalWriteBytes":4096,""" +
+              s""""partitionPath":"$part"}"""
+          } else {
+            val bi = baseInstant(g)
+            s"""{"fileId":"g$g","path":"$part/.g${g}_$bi.log.${i % 7 + 1}_0-0-0",""" +
+              s""""baseFile":"g${g}_0-0-0_$bi.parquet","numWrites":10,""" +
+              s""""totalWriteBytes":512,""" +
+              s""""partitionPath":"$part"}"""
+          }
+        part -> stat
+      }.groupBy(_._1).toSeq.sortBy(_._1)
+      val body = byPart.map { case (p, ss) =>
+        s""""$p":[${ss.map(_._2).mkString(",")}]"""
+      }.mkString("{\"partitionToWriteStats\":{", ",",
+        "},\"operationType\":\"upsert\"}")
+      Files.write(new java.io.File(hoodie, s"$ts.deltacommit").toPath,
+        body.getBytes("UTF-8"))
+      Seq("requested", "inflight").foreach { st =>
+        Files.write(new java.io.File(hoodie, s"$ts.deltacommit.$st").toPath,
+          Array.empty[Byte])
+      }
+    }
+    val d = root.getPath
+    assert(HudiMeta.timelineReport(spark, d).count() === nCommits * 3L)
+    assert(HudiMeta.morFileGroups(spark, d).count() === nGroups.toLong)
+  }
 }

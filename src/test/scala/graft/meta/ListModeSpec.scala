@@ -10,7 +10,8 @@ import graft.SparkSpec
  * `listmode=sharded` (the iterator walk with no InMemoryFileIndex and
  * no status cache) must be a drop-in listing: same rows as the default
  * index path over a partitioned tree, same scans, same hidden-file
- * rules — only the driver-memory shape differs (see StressListing).
+ * rules — only the driver-memory shape differs (BASELINE.md "Million-file
+ * listing posture: listmode=sharded").
  */
 class ListModeSpec extends SparkSpec {
 
@@ -76,5 +77,25 @@ class ListModeSpec extends SparkSpec {
     assert(idx.exists(_.contains("2020-02-02 01:02:03")))
     assert(idx.exists(_.contains("2021-03-04 05:06:07.25")))
     assert(rows("sharded") === idx)
+  }
+
+  test("source=file over raw files in shard dirs: both modes agree and " +
+      "the sharded scan counts every file") {
+    // listing cost is about file COUNT, not content: 8 raw bytes each
+    val d = Files.createTempDirectory("graft_listmode_raw").toString
+    val (nShards, perShard) = (5, 4)
+    for (s <- 0 until nShards; i <- 0 until perShard) {
+      val sd = new java.io.File(d, s"shard=$s"); sd.mkdirs()
+      Files.write(new java.io.File(sd, s"f$i.bin").toPath,
+        "GRFTDATA".getBytes("UTF-8"))
+    }
+    def scan(mode: String) = spark.read.format("metadata")
+      .option("level", "file").option("source", "file")
+      .option("listmode", mode).load(d)
+    def rows(mode: String): Set[String] =
+      scan(mode).select(col("filepath"), col("size"), to_json(col("partition")))
+        .collect().map(_.mkString("|")).toSet
+    assert(rows("sharded") === rows("index"))
+    assert(scan("sharded").count() === nShards * perShard)
   }
 }

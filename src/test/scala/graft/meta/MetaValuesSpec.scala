@@ -356,4 +356,52 @@ class MetaValuesSpec extends SparkSpec {
     assert(kSum === 2L * (0L until 1000L).sum)
     assert(decoded.filter(col("decoded").isNull).count() === 0)
   }
+
+  test("schema drift with a column AHEAD of a nested leaf: footer census " +
+      "and page decode match closed forms across many files") {
+    // half the files (id, k array<long>), half (id, v double, k ...),
+    // flattened into one directory; nulls at BOTH list levels so the
+    // writer emits level histograms
+    val (nFiles, rowsPerFile) = (20, 10L)
+    val totalRows = nFiles * rowsPerFile
+    val d = Files.createTempDirectory("graft_metavalues_drift_many").toString
+    def writeFamily(sub: String, n: Int, startId: Long, withV: Boolean): Unit = {
+      val base = spark.range(startId, startId + n * rowsPerFile)
+        .select(col("id"),
+          when(col("id") % 11 === 0, lit(null))
+            .otherwise(array(
+              when(col("id") % 13 === 0, lit(null)).otherwise(col("id")),
+              col("id") + 1)).as("k"))
+      val fam = if (withV) base.select(col("id"),
+        (col("id") * 0.5).as("v"), col("k")) else base
+      val tmp = s"$d.$sub"
+      fam.repartition(n).write.mode("overwrite").parquet(tmp)
+      new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach {
+          case (f, i) => Files.move(f.toPath,
+            new java.io.File(d, s"$sub$i.parquet").toPath)
+        }
+    }
+    writeFamily("a", nFiles / 2, 0L, withV = false)
+    writeFamily("b", nFiles / 2, totalRows / 2, withV = true)
+    assert(new java.io.File(d).list().length === nFiles)
+
+    val acct = MetaValues.leafAccounting(spark, d)
+      .filter(col("path").endsWith("element"))
+      .agg(sum(col("n_records")).cast("long"),
+        sum(col("n_leaf_values")).cast("long"))
+      .collect()(0)
+    val expectedLeaves = (0L until totalRows).map { id =>
+      if (id % 11 == 0) 0L else if (id % 13 == 0) 1L else 2L
+    }.sum
+    assert(acct.getLong(0) === totalRows, "records")
+    assert(acct.getLong(1) === expectedLeaves, "leaf values")
+    // the id column's PLAIN sums reconstruct sum(0..totalRows-1)
+    val dec = MetaValues.decodePages(spark, d)
+      .agg(sum(when(col("decoded").isNull, 1).otherwise(0)).cast("long"),
+        sum(when(col("path") === "id", col("decoded.lsum"))).cast("long"))
+      .collect()(0)
+    assert(dec.getLong(0) === 0L, "undecoded pages")
+    assert(dec.getLong(1) === totalRows * (totalRows - 1) / 2, "id sum")
+  }
 }
