@@ -63,6 +63,24 @@ private[graft] object EntryHelpers {
 
   private[graft] def pq(dir: String, table: String): String = s"$dir/$table.parquet"
 
+  /** Input `table` of `dir`, its schema read from the file's footer on
+    * the driver: `s.read.parquet(path)` would run a one-task Spark job
+    * to infer it. The conversion is Spark's own, on the session SQLConf,
+    * so the Spark row-metadata key and session flags such as the nanos
+    * flag [[eventsNs]] sets apply as they do in inference. */
+  private[graft] def input(s: SparkSession, dir: String, table: String): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val path = new org.apache.hadoop.fs.Path(pq(dir, table))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        path, s.sessionState.newHadoopConf()))
+    val footer = try reader.getFooter finally reader.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
+    s.read.schema(schema).parquet(path.toString)
+  }
+
   /**
    * Scratch for EPHEMERAL, engine-only state: streaming checkpoints
    * (WAL/offset/state-store commits fsync once per trigger per partition),
@@ -153,7 +171,7 @@ private[graft] object EntryHelpers {
    */
   private[graft] def eventsNs(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tsAsNanos(s.read.parquet(pq(dir, "events")))
+    tsAsNanos(input(s, dir, "events"))
   }
 
   /**
@@ -174,7 +192,7 @@ private[graft] object EntryHelpers {
     org.apache.commons.io.FileUtils.deleteQuietly(dst.toFile)
     java.nio.file.Files.createDirectories(dst)
     java.nio.file.Files.copy(src, dst.resolve(src.getFileName))
-    tsAsNanos(s.readStream.schema(s.read.parquet(src.toString).schema)
+    tsAsNanos(s.readStream.schema(input(s, dir, "events").schema)
       .parquet(staging))
   }
 
@@ -272,7 +290,7 @@ private[graft] object EntryHelpers {
   /** Documents plus planted duplicates (doc_id < 50 re-inserted shifted by
     * 100000) so dedup answers are non-trivial on a dup-free corpus. */
   private[graft] def plantedCorpus(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+    val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
     d.union(d.filter(col("doc_id") < 50).select(col("doc_id") + 100000L, col("text")))
   }
 

@@ -90,7 +90,7 @@ private[graft] object EntryLakeQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(outF)
       }
       outF.mkdirs()
-      val docs = s.read.parquet(pq(dir, "documents"))
+      val docs = input(s, dir, "documents")
         .select(col("doc_id"), col("lang"))
       // parquet third: doc_id % 3 == 0, one file copied into the mix
       docs.filter(col("doc_id") % 3 === 0).coalesce(1)
@@ -127,7 +127,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       meta(s, out, "snapshot", Map("source" -> "delta"))
         .select(col("version"), col("kind"), col("n_add"), col("n_remove"),
@@ -148,7 +148,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       val live = DeltaMeta.snapshotFiles(s, out)
         .select(col("abs_path"), col("num_records"))
@@ -178,7 +178,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.vacuumCandidates(s, out, 1700000010000L, 7500L)
         .select(col("path"), col("deleted_at"), col("age_ms"), col("num_rows"))
@@ -194,7 +194,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.latestTransactions(s, out)
     }),
@@ -209,7 +209,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.schemaHistory(s, out)
     }),
@@ -224,7 +224,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
@@ -242,7 +242,7 @@ private[graft] object EntryLakeQueries {
     "meta_delta_protocol" -> ((s, dir) => {
       val out = "/tmp/graft_deltaproto_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeDvFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      DeltaMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
       DeltaMeta.protocolInfo(s, out)
         .select(col("min_reader_version"), col("min_writer_version"),
           array_join(col("reader_features"), ",").as("reader_features_csv"),
@@ -260,7 +260,7 @@ private[graft] object EntryLakeQueries {
     "stream_delta_live" -> ((s, dir) => {
       val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       val out = "/tmp/graft_deltastream_" + sfx
-      DeltaMeta.writeDvFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      DeltaMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
       val store = scratch("graft_deltastore_" + sfx)
       val ckpt = scratch("graft_deltastoreck_" + sfx)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
@@ -288,9 +288,9 @@ private[graft] object EntryLakeQueries {
       val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       val d = "/tmp/graft_deltadv_" + sfx
       val i = "/tmp/graft_iceberg_" + sfx
-      DeltaMeta.writeDvFixtureTable(s, d, s.read.parquet(pq(dir, "documents")))
+      DeltaMeta.writeDvFixtureTable(s, d, input(s, dir, "documents"))
       fixtureOnce(i) {
-        IcebergMeta.writeFixtureTable(s, i, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, i, input(s, dir, "documents"))
       }
       MetaValues.tableCensus(s, d).unionByName(MetaValues.tableCensus(s, i))
     }),
@@ -308,7 +308,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltapart_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writePartitionedFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       val live = DeltaMeta.snapshotFiles(s, out)
       val pruned = live
         .filter(element_at(col("partition_values"), "lang") === "zh")
@@ -334,7 +334,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       (0L to 4L).map { v =>
         DeltaMeta.snapshotFilesAt(s, out, Some(v))
@@ -355,7 +355,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       val ts0 = 1700000000000L
       Seq(500L, 2500L, 99999L).map { off =>
@@ -382,7 +382,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltadv_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeDvFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.snapshotFiles(s, out)
         .agg(
@@ -408,7 +408,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltav2_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeV2CheckpointFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.snapshotFiles(s, out)
         .select(col("path"), col("version"), col("num_records"))
     }),
@@ -426,7 +426,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltav2j_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeV2JsonCheckpointFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.snapshotFiles(s, out)
         .select(col("path"), col("version"), col("num_records"))
     }),
@@ -442,7 +442,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltamp_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeMultipartCheckpointFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.snapshotFiles(s, out)
         .select(col("path"), col("version"), col("num_records"))
     }),
@@ -460,7 +460,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltacrc_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeCrcFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.crcAudit(s, out)
     }),
 
@@ -476,7 +476,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltadvb_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeDvBitmapFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       val pos = DeltaMeta.deletedPositions(s, out)
       val rows = s.read.parquet(out + "/f0.parquet", out + "/f1.parquet")
         .select(col("doc_id"),
@@ -502,7 +502,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         DeltaMeta.writeColumnMappedFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       DeltaMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
@@ -520,7 +520,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltacmid_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeColumnMappedIdFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
           col("n_declared"), col("n_present"), col("missing_csv"))
@@ -538,7 +538,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         DeltaMeta.writeColumnMappedFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val (_, mapping, _) = DeltaMeta.columnMappingInfo(s, out)
       val live = DeltaMeta.snapshotFiles(s, out)
@@ -560,7 +560,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       meta(s, out, "snapshot", Map("source" -> "iceberg"))
         .select(col("snapshot_id"), col("timestamp_ms"), col("operation"),
@@ -581,7 +581,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       val entries = IcebergMeta.currentFiles(s, out)
       val live = entries
@@ -619,7 +619,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writePartitionedFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val files = IcebergMeta.currentFiles(s, out)
       val pruned = files
@@ -645,9 +645,9 @@ private[graft] object EntryLakeQueries {
     "meta_iceberg_orphans" -> ((s, dir) => {
       val out = "/tmp/graft_iceorph_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       val tmp = out + "/data/stray_tmp"
-      s.read.parquet(pq(dir, "documents")).limit(7)
+      input(s, dir, "documents").limit(7)
         .select(col("doc_id")).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -672,7 +672,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       IcebergMeta.schemaHistory(s, out)
     }),
@@ -698,7 +698,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeV3DefaultsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
@@ -709,7 +709,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       IcebergMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
@@ -727,7 +727,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       val pos = IcebergMeta.positionDeleteRows(s, out)
       val rows = s.read.parquet(out + "/data/f0.parquet")
@@ -754,7 +754,7 @@ private[graft] object EntryLakeQueries {
     "meta_iceberg_dv_rows" -> ((s, dir) => {
       val out = "/tmp/graft_icedv_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeDvFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      IcebergMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
       val pos = IcebergMeta.positionDeleteRows(s, out)
       val rows = s.read.parquet(out + "/data/f0.parquet", out + "/data/f1.parquet")
         .select(col("doc_id"),
@@ -780,7 +780,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       val files = DeltaMeta.snapshotFiles(s, out).select(
         col("path"), col("size"),
@@ -804,7 +804,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writePartitionedFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val files = IcebergMeta.currentFiles(s, out)
         .filter(col("status") =!= 2 && col("content") === 0)
@@ -829,7 +829,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltasp_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeStatsPruneFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.statsPrune(s, out, "doc_id", 100L, 299L)
     }),
 
@@ -845,7 +845,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltaict_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeIctFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       val ts0 = 1700000000000L
       Seq(5000L, 15000L, 99999L).map { off =>
         val v = DeltaMeta.versionAt(s, out, ts0 + off)
@@ -868,7 +868,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltadm_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeDomainMetadataFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.domainMetadataReport(s, out)
     }),
 
@@ -891,7 +891,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeSummaryFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.snapshotSummaryAuditCells(s, out)
     }),
@@ -912,7 +912,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeSummaryFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.summaryInputsReport(s, out)
     }),
@@ -931,7 +931,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icendv_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeNdvFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.ndvAudit(s, out)
     }),
 
@@ -947,7 +947,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icendvz_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeNdvFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")),
+        s, out, input(s, dir, "documents"),
         blobCodec = Some("zstd"), lz4Footer = true)
       IcebergMeta.ndvAudit(s, out)
     }),
@@ -961,7 +961,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icemlog_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeMetadataLogFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.metadataLogReport(s, out)
     }),
 
@@ -976,7 +976,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.lastCheckpointAudit(s, out)
     }),
@@ -993,7 +993,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) { // shared with meta_iceberg_ref_changelog
         IcebergMeta.writeRefsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.refsReport(s, out)
     }),
@@ -1010,7 +1010,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeRefsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.changelogScanRef(s, out, "v1", "main")
         .select(col("doc_id"), col("lang"), col("_change_type"))
@@ -1028,7 +1028,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icepstats_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writePartitionStatsFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.partitionStatsAudit(s, out)
     }),
 
@@ -1043,7 +1043,7 @@ private[graft] object EntryLakeQueries {
     "meta_iceberg_puffin_stats" -> ((s, dir) => {
       val out = "/tmp/graft_icestats_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeStatsFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      IcebergMeta.writeStatsFixtureTable(s, out, input(s, dir, "documents"))
       IcebergMeta.statisticsReport(s, out)
     }),
 
@@ -1055,7 +1055,7 @@ private[graft] object EntryLakeQueries {
     "stream_iceberg_live" -> ((s, dir) => {
       val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       val out = "/tmp/graft_icestream_" + sfx
-      IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       val store = scratch("graft_icestore_" + sfx)
       val ckpt = scratch("graft_icestoreck_" + sfx)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
@@ -1087,7 +1087,7 @@ private[graft] object EntryLakeQueries {
       val ckpt = scratch("graft_iceappck_" + sfx)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       // pass A: rewind the table to current-snapshot 1 (v1 only)
       val v1 = new java.io.File(out, "metadata/v1.metadata.json")
       val full = new String(java.nio.file.Files.readAllBytes(v1.toPath),
@@ -1124,7 +1124,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeEqDeleteFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.equalityDeleteRows(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1143,7 +1143,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icespec_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeSpecEvolutionFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.partitionSpecAudit(s, out)
         .select(regexp_extract(col("file_path"), "([^/]+)$", 1).as("file"),
           col("spec_id"), col("spec_csv"), col("is_default"))
@@ -1159,7 +1159,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       IcebergMeta.manifestHealthReport(s, out)
     }),
@@ -1175,7 +1175,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icecomp_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeCompactedFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.expiryPlan(s, out, 1700000000500L)
         .select(col("kind"),
           regexp_extract(col("object"), "([^/]+)$", 1).as("object"),
@@ -1193,7 +1193,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icexpr_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeExpiryRefsFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.expiryPlan(s, out, 1700000002500L)
         .select(col("kind"),
           regexp_extract(col("object"), "([^/]+)$", 1).as("object"),
@@ -1210,7 +1210,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icexps_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeExpiryStatsFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.expiryPlan(s, out, 1700000000500L)
         .select(col("kind"),
           regexp_extract(col("object"), "([^/]+)$", 1).as("object"),
@@ -1226,7 +1226,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icesnlog_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeSnapshotLogFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.snapshotLogReport(s, out)
     }),
 
@@ -1239,7 +1239,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icerefrd_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeRefsFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       def one(ref: String) = IcebergMeta.filesAtRef(s, out, ref)
         .filter(col("status") =!= 2 && col("content") === 0)
         .select(lit(ref).as("ref"),
@@ -1260,7 +1260,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       IcebergMeta.changelogScan(s, out, 1L, 2L)
         .select(col("doc_id"), col("lang"), col("_change_type"))
@@ -1279,7 +1279,7 @@ private[graft] object EntryLakeQueries {
       val ckpt = scratch("graft_iceclck_" + sfx)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       // pass A: rewind the table to current-snapshot 1 (v1 only)
       val v1 = new java.io.File(out, "metadata/v1.metadata.json")
       val full = new String(java.nio.file.Files.readAllBytes(v1.toPath),
@@ -1313,7 +1313,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeEqDeleteFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.changelogScan(s, out, 1L, 2L)
         .select(col("doc_id"), col("lang"), col("_change_type"))
@@ -1331,7 +1331,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icedvcl_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeDvChangelogFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.changelogScan(s, out, 1L, 2L)
         .withColumn("rng", lit("1-2"))
         .unionByName(IcebergMeta.changelogScan(s, out, 2L, 3L)
@@ -1352,7 +1352,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeTransientFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.changelogScan(s, out, 1L, 3L)
         .select(col("doc_id"), col("lang"), col("_change_type"))
@@ -1369,7 +1369,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       IcebergMeta.appendedFiles(s, out, 1L, 2L)
         .select(regexp_extract(col("file_path"), "([^/]+)$", 1).as("file"),
@@ -1385,7 +1385,7 @@ private[graft] object EntryLakeQueries {
     "meta_delta_log_cleanup" -> ((s, dir) => {
       val out = "/tmp/graft_deltaclean_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+      DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       val log = new java.io.File(out, "_delta_log")
       val ts0 = 1700000000000L
       val hour = 3600000L
@@ -1415,7 +1415,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.commitDiff(s, out, 2L, 4L)
     }),
@@ -1432,7 +1432,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeEqDeleteFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.equalityNetCensus(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1452,7 +1452,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeBoundsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.manifestBoundsPrune(s, out, "doc_id", 100L, 200L)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1469,7 +1469,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeBoundsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.readBoundsPruned(s, out, "doc_id", 100L, 200L)
         .filter(col("doc_id").between(100L, 200L))
@@ -1485,7 +1485,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeBoundsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.boundsClusteringReport(s, out, "doc_id")
     }),
@@ -1501,7 +1501,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icesumprune_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeSummaryPruneFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.manifestSummaryPrune(s, out, "part", 0L, 1L)
     }),
 
@@ -1515,7 +1515,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeStringBoundsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val probe = s.read.parquet(out + "/data/s0.parquet")
         .agg(max("lang")).head().getString(0)
@@ -1535,7 +1535,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeStringBoundsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val mm = s.read.parquet(out + "/data/s1.parquet")
         .agg(min("lang"), max("lang")).head()
@@ -1555,7 +1555,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeTypedBoundsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.manifestBoundsPruneDate(
         s, out, "d", "2020-02-01", "2020-03-15")
@@ -1574,7 +1574,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeTypedBoundsFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.manifestBoundsPruneDecimal(
         s, out, "amount", BigDecimal("10.00"), BigDecimal("17.25"))
@@ -1591,7 +1591,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       IcebergMeta.rollbackPlan(s, out, 1L)
         .select(col("action"),
@@ -1608,7 +1608,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltacdf_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeCdfFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.changeFeed(s, out, 0L, 2L)
         .select(col("doc_id"), col("lang"), col("_change_type"),
           col("_commit_version"))
@@ -1628,7 +1628,7 @@ private[graft] object EntryLakeQueries {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       DeltaMeta.writeCdfFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       // pass A: commit 2 has not arrived yet (staged OUTSIDE the log)
       val v2 = new java.io.File(out,
         "_delta_log/00000000000000000002.json")
@@ -1655,7 +1655,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltacdfdv_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeCdfDvFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.changeFeed(s, out, 0L, 3L)
         .select(col("doc_id"), col("lang"), col("_change_type"),
           col("_commit_version"))
@@ -1669,7 +1669,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_delta_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       DeltaMeta.restorePlan(s, out, 1L)
         .select(col("action"), col("path"), col("num_records"))
@@ -1684,7 +1684,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_deltart_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       DeltaMeta.writeRowTrackingFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       DeltaMeta.rowTrackingAudit(s, out)
     }),
 
@@ -1698,7 +1698,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icemet_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeMetricsFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.metricsAudit(s, out, "lang")
     }),
 
@@ -1712,7 +1712,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icemrg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeMergedDeleteFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.mergedNetCensus(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("record_count"), col("deleted"), col("net_rows"))
@@ -1731,7 +1731,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeEqDeletePartitionedFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.equalityDeleteRows(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1746,7 +1746,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeEqDeletePartitionedFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.equalityNetCensus(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1767,7 +1767,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icesort_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeSortOrderFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.sortOrderAudit(s, out)
     }),
 
@@ -1779,7 +1779,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       val ts0 = 1700000000000L
       Seq(500L, 99999L).map { off =>
@@ -1805,7 +1805,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceberg_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, s.read.parquet(pq(dir, "documents")))
+        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       }
       Seq(1L, 2L).map { id =>
         IcebergMeta.filesAt(s, out, Some(id))
@@ -1831,7 +1831,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeBucketFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.bucketPrune(s, out, "doc_id", 7L)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1846,7 +1846,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         IcebergMeta.writeBucketFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       IcebergMeta.readBucketPruned(s, out, "doc_id", 7L)
         .filter(col("doc_id") === 7L)
@@ -1862,7 +1862,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icetrn_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeTruncateFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.truncatePrune(s, out, "k", 120L, 250L)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_trunc"), col("survives"))
@@ -1877,7 +1877,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.timelineReport(s, out)
     }),
@@ -1893,7 +1893,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.liveCensus(s, out)
         .select(col("file_id"), col("partition_path"), col("path"),
@@ -1911,7 +1911,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       Seq("20240101000000000", "20240102000000000").map { i =>
         HudiMeta.liveCensus(s, out, Some(i))
@@ -1932,7 +1932,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val (c1, c2) = ("20240101000000000", "20240102000000000")
       Seq(("0", c1), (c1, c2)).map { case (f, t) =>
@@ -1953,7 +1953,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       MetaValues.tableCensus(s, out)
     }),
@@ -1967,7 +1967,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.cleanPlan(s, out, 1)
         .select(col("file_id"), col("path"), col("instant_time"),
@@ -1982,7 +1982,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.orphanReport(s, out)
     }),
@@ -1997,7 +1997,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       s.read.format("metadata").load(out)
         .select(col("instant_time"), col("action"), col("state"))
@@ -2014,7 +2014,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icerl_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeRowLineageFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       IcebergMeta.rowLineageAudit(s, out)
         .select(regexp_extract(col("file_path"), "([^/]+)$", 1).as("file"),
           col("first_row_id"), col("record_count"), col("disjoint"),
@@ -2030,7 +2030,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icemon_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeTimeTransformFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")), "month")
+        s, out, input(s, dir, "documents"), "month")
       IcebergMeta.monthsPrune(s, out, "ts", "2023-08-15", "2023-11-02")
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_month"), col("survives"))
@@ -2045,7 +2045,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icehr_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeTimeTransformFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")), "hour")
+        s, out, input(s, dir, "documents"), "hour")
       IcebergMeta.hoursPrune(s, out, "ts",
         "2024-03-01T06:00:00", "2024-03-02T03:00:00")
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -2059,7 +2059,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_iceyr_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeTimeTransformFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")), "year")
+        s, out, input(s, dir, "documents"), "year")
       IcebergMeta.yearsPrune(s, out, "ts", 2024, 2024)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_year"), col("survives"))
@@ -2075,7 +2075,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icerlc_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeRowLineageFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")), plantAnomaly = false)
+        s, out, input(s, dir, "documents"), plantAnomaly = false)
       IcebergMeta.readWithRowIds(s, out)
         .agg(count(lit(1)).cast("long").as("n_rows"),
           countDistinct(col("_row_id")).cast("long").as("n_distinct_ids"),
@@ -2093,7 +2093,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.readPartitionPruned(s, out, "p=1")
         .agg(count(lit(1)).cast("long").as("n_rows"),
@@ -2112,7 +2112,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val files = HudiMeta.liveFiles(s, out).select(
         regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
@@ -2131,7 +2131,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.schemaHistory(s, out)
     }),
@@ -2147,7 +2147,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
@@ -2166,7 +2166,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiClusteredFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.liveCensus(s, out)
         .select(col("file_id"), col("partition_path"), col("path"),
@@ -2183,7 +2183,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiClusteredFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       Seq("20240102000000000", "20240103000000000").map { i =>
         HudiMeta.liveCensus(s, out, Some(i))
@@ -2204,7 +2204,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.timelineReport(s, out)
     }),
@@ -2219,7 +2219,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morFileGroups(s, out)
         .select(col("file_id"), col("partition_path"), col("base_instant"),
@@ -2238,7 +2238,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morCensus(s, out)
     }),
@@ -2254,7 +2254,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       val (dc1, dc3) = ("20240101000000000", "20240103000000000")
       Seq(("0", dc1), (dc1, dc3)).map { case (f, t) =>
@@ -2279,7 +2279,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMetadataFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.metadataFilesAudit(s, out)
     }),
@@ -2295,7 +2295,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
         val dc1 = "20240101000000000"
         val dc4 = "20240104010000000"
         val newRel = s"p=0/fid0_0-0-0_$dc4.parquet"
@@ -2323,7 +2323,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMetadataHFileFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.metadataFilesAudit(s, out)
     }),
@@ -2342,7 +2342,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMetadataHFileLogFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.metadataFilesAudit(s, out)
     }),
@@ -2357,7 +2357,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiV1xFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.timelineReportFull(s, out)
     }),
@@ -2372,7 +2372,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiV1xFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.liveCensus(s, out)
         .select(col("file_id"), col("partition_path"), col("path"),
@@ -2394,7 +2394,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorLogFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morMergedRows(s, out)
     }),
@@ -2408,7 +2408,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorLogFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morMergedCensus(s, out)
     }),
@@ -2426,7 +2426,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiCowDiffFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.cowIncrementalRows(s, out,
         "20240101000000000", "20240102000000000")
@@ -2444,7 +2444,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorLogFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morIncrementalRows(s, out,
         "20240101000000000", "20240103000000000")
@@ -2464,7 +2464,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorCompositeFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morIncrementalRows(s, out,
         "20240101000000000", "20240102000000000")
@@ -2483,7 +2483,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorPrecombineFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morMergedRows(s, out)
     }),
@@ -2499,7 +2499,7 @@ private[graft] object EntryLakeQueries {
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       fixtureOnce(out) {
         HudiMeta.writeHudiMorCdcFixtureTable(
-          s, out, s.read.parquet(pq(dir, "documents")))
+          s, out, input(s, dir, "documents"))
       }
       HudiMeta.morIncrementalRows(s, out,
         "20240101000000000", "20240102000000000")
@@ -2519,7 +2519,7 @@ private[graft] object EntryLakeQueries {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       HudiMeta.writeHudiFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       // pass A: c2's completion marker has not arrived yet
       val c2 = new java.io.File(out, ".hoodie/20240102000000000.commit")
       val aside = new java.io.File(out, "aside_c2.commit")
@@ -2549,7 +2549,7 @@ private[graft] object EntryLakeQueries {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       HudiMeta.writeHudiMorFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       // pass A: dc3's completion marker has not arrived yet
       val dc3 = new java.io.File(out, ".hoodie/20240103000000000.deltacommit")
       val aside = new java.io.File(out, "aside_dc3.deltacommit")
@@ -2581,7 +2581,7 @@ private[graft] object EntryLakeQueries {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       HudiMeta.writeHudiMorLogFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       // pass A: dc3's completion marker has not arrived yet
       val dc3 = new java.io.File(out, ".hoodie/20240103000000000.deltacommit")
       val aside = new java.io.File(out, "aside_dc3.deltacommit")
@@ -2609,7 +2609,7 @@ private[graft] object EntryLakeQueries {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       HudiMeta.writeHudiCowDiffFixtureTable(
-        s, out, s.read.parquet(pq(dir, "documents")))
+        s, out, input(s, dir, "documents"))
       // pass A: c2's completion marker has not arrived yet
       val c2 = new java.io.File(out, ".hoodie/20240102000000000.commit")
       val aside = new java.io.File(out, "aside_c2.commit")
@@ -2631,7 +2631,7 @@ private[graft] object EntryLakeQueries {
       val out = "/tmp/graft_icedays_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       IcebergMeta.writeDaysFixtureTable(
-        s, out, s.read.parquet(pq(dir, "events")))
+        s, out, input(s, dir, "events"))
       IcebergMeta.daysPrune(s, out, "ts", "2024-01-10", "2024-01-14")
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_day"), col("survives"))

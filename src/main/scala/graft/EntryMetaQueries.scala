@@ -224,7 +224,7 @@ private[graft] object EntryMetaQueries {
     "meta_sorting" -> ((s, dir) => {
       val out = "/tmp/graft_sorting_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "orders"))
+      input(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey"))
         .repartition(1).sortWithinPartitions("k")
         .write.mode("overwrite")
@@ -249,7 +249,7 @@ private[graft] object EntryMetaQueries {
     "meta_encoding_stats" -> ((s, dir) => {
       val out = "/tmp/graft_encstats_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents")).select(col("source"))
+      input(s, dir, "documents").select(col("source"))
         .coalesce(1)
         .write.mode("overwrite")
         .option("parquet.page.row.count.limit", "500")
@@ -274,7 +274,7 @@ private[graft] object EntryMetaQueries {
     "meta_values_any" -> ((s, dir) => {
       val out = "/tmp/graft_valsany_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s.read.parquet(pq(dir, "documents"))
+      val base = input(s, dir, "documents")
         .select(col("doc_id").as("k"),
           when(col("doc_id") % 19 === 0, lit(null))
             .otherwise(col("lang")).as("lang"),
@@ -360,7 +360,7 @@ private[graft] object EntryMetaQueries {
     "meta_orc_file" -> ((s, dir) => {
       val out = "/tmp/graft_orcfile_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .repartition(2)
         .write.mode("overwrite").orc(out)
@@ -381,7 +381,7 @@ private[graft] object EntryMetaQueries {
     "meta_orc_stripe" -> ((s, dir) => {
       val out = "/tmp/graft_orcstripe_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
         .repartition(2)
         .write.mode("overwrite")
@@ -403,7 +403,7 @@ private[graft] object EntryMetaQueries {
     "meta_orc_column" -> ((s, dir) => {
       val out = "/tmp/graft_orccol_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey"),
           col("l_quantity").cast("double").as("qty"),
           col("l_returnflag"))
@@ -429,7 +429,7 @@ private[graft] object EntryMetaQueries {
     "meta_orc_rowindex" -> ((s, dir) => {
       val out = "/tmp/graft_orcri_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"),
           col("l_extendedprice").cast("double").as("price"))
         .repartition(1).sortWithinPartitions("k")
@@ -467,7 +467,7 @@ private[graft] object EntryMetaQueries {
     "orc_rowindex_skip" -> ((s, dir) => {
       val out = "/tmp/graft_orcriskip_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_quantity").as("q"))
         .repartition(1).sortWithinPartitions("k")
         .write.mode("overwrite")
@@ -506,7 +506,7 @@ private[graft] object EntryMetaQueries {
     "orc_bloom_skip" -> ((s, dir) => {
       val out = "/tmp/graft_orcbloom_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_partkey").as("pk"))
         .repartition(1).sortWithinPartitions("k")
         .write.mode("overwrite")
@@ -545,7 +545,7 @@ private[graft] object EntryMetaQueries {
     "orc_stripe_skip" -> ((s, dir) => {
       val out = "/tmp/graft_orcskip_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"),
           concat(col("l_returnflag"), lit("_pad_"), col("l_partkey"),
             col("l_shipdate").cast("string")).as("pad"))
@@ -587,7 +587,7 @@ private[graft] object EntryMetaQueries {
       outF.mkdirs()
       // fixture-bounded driver-side write through avro's own writer (500
       // rows at the correctness SF) — the decode under test is ours
-      val rows = s.read.parquet(pq(dir, "documents"))
+      val rows = input(s, dir, "documents")
         .select(col("doc_id"), col("lang")).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toSeq.sortBy(_._1)
       val (even, odd) = rows.partition(_._1 % 2 == 0)
@@ -616,7 +616,7 @@ private[graft] object EntryMetaQueries {
     "orc_prune_scan" -> ((s, dir) => {
       val out = "/tmp/graft_orcprune_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_quantity"))
         .repartitionByRange(6, col("k"))
         .write.mode("overwrite").orc(out)
@@ -636,7 +636,7 @@ private[graft] object EntryMetaQueries {
     "meta_token_accounting" -> ((s, dir) => {
       val out = "/tmp/graft_tokacct_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null))
             .when(col("doc_id") % 11 === 1, array().cast("array<long>"))
@@ -671,7 +671,7 @@ private[graft] object EntryMetaQueries {
       // pure deterministic fixture, never mutated after the write — the
       // same once-per-JVM memoization every other pure fixture uses
       fixtureOnce(out) {
-        Fp16Fixture.writeFp16Table(s, out, s.read.parquet(pq(dir, "documents")))
+        Fp16Fixture.writeFp16Table(s, out, input(s, dir, "documents"))
       }
       val statF16 = (c: Column) => ColumnBridge.column(
         graft.functions.PlainStatDouble(ColumnBridge.expression(c),
@@ -712,7 +712,7 @@ private[graft] object EntryMetaQueries {
             lit(",\"m\":"), col("doc_id").cast("string"), lit("}")))
         .otherwise(concat(lit("{\"n\":"), col("doc_id").cast("string"),
           lit(",\"m\":\"s\"}"))))
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), parse_json(js).as("v"))
         .coalesce(1)
         .write.mode("overwrite").parquet(out)
@@ -732,7 +732,7 @@ private[graft] object EntryMetaQueries {
     "meta_decode_table" -> ((s, dir) => {
       val out = "/tmp/graft_decodetable_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id").as("k"),
           col("lang").as("s"),
           when(col("doc_id") % 23 === 0, lit(null))
@@ -789,7 +789,7 @@ private[graft] object EntryMetaQueries {
       try {
         // the raw events ts infers as TIMESTAMP_NTZ (always INT64); only
         // the LTZ timestamp type routes through the INT96 legacy layout
-        s.read.parquet(pq(dir, "events"))
+        input(s, dir, "events")
           .select(when(col("event_id") % 17 === 0, lit(null))
             .otherwise(col("ts").cast("timestamp")).as("ts"))
           .coalesce(1)
@@ -835,7 +835,7 @@ private[graft] object EntryMetaQueries {
     "meta_flba_values" -> ((s, dir) => {
       val out = "/tmp/graft_flbavals_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(when(col("l_orderkey") % 13 === 0, lit(null))
           .otherwise(col("l_extendedprice").cast("decimal(20,2)")).as("price"))
         .coalesce(1)
@@ -879,7 +879,7 @@ private[graft] object EntryMetaQueries {
     "meta_nested_values" -> ((s, dir) => {
       val out = "/tmp/graft_nestedvals_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null))
             .when(col("doc_id") % 11 === 1, array().cast("array<long>"))
@@ -929,7 +929,7 @@ private[graft] object EntryMetaQueries {
     "meta_dict_values_v2" -> ((s, dir) => {
       val out = "/tmp/graft_dictvals2_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 5 === 0, lit(null).cast("string"))
             .otherwise(col("lang")).as("v"))
@@ -990,7 +990,7 @@ private[graft] object EntryMetaQueries {
     "meta_v2_strings" -> ((s, dir) => {
       val out = "/tmp/graft_v2strings_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null).cast("string"))
             .otherwise(concat(lit("uniq_"), col("doc_id"), lit("_"),
@@ -1045,7 +1045,7 @@ private[graft] object EntryMetaQueries {
       // at the first page flush (all-unique values fail parquet-mr's
       // compression-satisfying check and fall back before any dict page
       // exists) and then OVERFLOW mid-chunk on the unique tail
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null).cast("string"))
             .when(col("doc_id") < 150, col("lang"))
@@ -1135,7 +1135,7 @@ private[graft] object EntryMetaQueries {
     "meta_kv_stamp" -> ((s, dir) => {
       val out = "/tmp/graft_kvstamp_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), col("source"))
         .coalesce(1).write.mode("overwrite").parquet(out)
       FooterEdit.setKeyValueDir(out, Map(
@@ -1179,7 +1179,7 @@ private[graft] object EntryMetaQueries {
     "meta_bool_values" -> ((s, dir) => {
       val out = "/tmp/graft_boolvals_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 13 === 0, lit(null).cast("boolean"))
             .otherwise(col("doc_id") % 3 === 0).as("b"))
@@ -1212,7 +1212,7 @@ private[graft] object EntryMetaQueries {
     "meta_fp_values" -> ((s, dir) => {
       val out = "/tmp/graft_fpvals_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 9 === 0, lit(null).cast("double"))
             .otherwise(col("doc_id") * 0.25 + 0.125).as("v"))
@@ -1315,7 +1315,7 @@ private[graft] object EntryMetaQueries {
     "meta_dict_values" -> ((s, dir) => {
       val out = "/tmp/graft_dictvals_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 7 === 0, lit(null).cast("string"))
             .otherwise(col("source")).as("v"))
@@ -1388,7 +1388,7 @@ private[graft] object EntryMetaQueries {
     "meta_vs_data" -> ((s, dir) => {
       val metaRows = meta(s, pq(dir, "orders"), "rowgroup")
         .agg(sum(col("num_rows")).as("meta_rows"))
-      val dataRows = s.read.parquet(pq(dir, "orders"))
+      val dataRows = input(s, dir, "orders")
         .agg(count(lit(1)).as("data_rows"))
       metaRows.crossJoin(dataRows)
     }),
@@ -1430,7 +1430,7 @@ private[graft] object EntryMetaQueries {
     "meta_prune_date" -> ((s, dir) => {
       val out = "/tmp/graft_prune_date_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "orders"))
+      input(s, dir, "orders")
         .select(to_date(col("o_orderdate")).as("od"), col("o_orderkey"))
         .repartitionByRange(6, col("od"))
         .write.mode("overwrite").parquet(out)
@@ -1452,7 +1452,7 @@ private[graft] object EntryMetaQueries {
     "meta_prune_prefix" -> ((s, dir) => {
       val out = "/tmp/graft_prune_prefix_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), col("source"))
         .repartitionByRange(5, col("source"))
         .write.mode("overwrite").parquet(out)
@@ -1470,7 +1470,7 @@ private[graft] object EntryMetaQueries {
     "meta_prune_decimal" -> ((s, dir) => {
       val out = "/tmp/graft_prune_decimal_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .select(col("l_orderkey"),
           col("l_extendedprice").cast("decimal(20,2)").as("price"))
         .repartitionByRange(6, col("price"))
@@ -1493,7 +1493,7 @@ private[graft] object EntryMetaQueries {
     "meta_bloom_probe" -> ((s, dir) => {
       val out = "/tmp/graft_bloom_probe_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), col("source"))
         .repartition(4, col("doc_id"))
         .write.mode("overwrite")
@@ -1545,7 +1545,7 @@ private[graft] object EntryMetaQueries {
     "bloom_prune_scan" -> ((s, dir) => {
       val out = "/tmp/graft_bloom_prune_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
         .repartition(6, col("doc_id"))
         .write.mode("overwrite")
@@ -1574,7 +1574,7 @@ private[graft] object EntryMetaQueries {
     "meta_size_stats" -> ((s, dir) => {
       val out = "/tmp/graft_sizestats_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"), col("source"))
         .coalesce(2)
         .write.mode("overwrite").parquet(out)
@@ -1608,7 +1608,7 @@ private[graft] object EntryMetaQueries {
     "meta_dict" -> ((s, dir) => {
       val out = "/tmp/graft_dict_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents")).select(col("source"))
+      input(s, dir, "documents").select(col("source"))
         .repartition(3)
         // uncompressed so page_content is the PLAIN payload itself
         .write.mode("overwrite").option("compression", "none").parquet(out)
@@ -1630,7 +1630,7 @@ private[graft] object EntryMetaQueries {
     "bloom_prune_in" -> ((s, dir) => {
       val out = "/tmp/graft_bloom_in_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"))
         .repartition(6, col("doc_id"))
         .write.mode("overwrite")
@@ -1654,7 +1654,7 @@ private[graft] object EntryMetaQueries {
     "bloom_prune_int" -> ((s, dir) => {
       val out = "/tmp/graft_bloom_int_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("doc_id").cast("int").as("k"), col("n_chars"))
         .repartition(6, col("k"))
         .write.mode("overwrite")
@@ -1679,7 +1679,7 @@ private[graft] object EntryMetaQueries {
     "bloom_prune_decimal" -> ((s, dir) => {
       val out = "/tmp/graft_bloom_dec_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select((col("doc_id").cast("decimal(18,2)") +
             lit(java.math.BigDecimal.valueOf(0.25)))
           .cast("decimal(20,2)").as("k"), col("n_chars"), col("doc_id"))
@@ -1707,7 +1707,7 @@ private[graft] object EntryMetaQueries {
     "bloom_prune_double" -> ((s, dir) => {
       val out = "/tmp/graft_bloom_dbl_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select((col("doc_id") * lit(0.25d)).as("v"), col("n_chars"),
           col("doc_id"))
         .repartition(6, col("doc_id")).drop("doc_id")
@@ -1759,7 +1759,7 @@ private[graft] object EntryMetaQueries {
     "meta_schema_diff" -> ((s, dir) => {
       val out = "/tmp/graft_schema_diff_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "orders"))
+      input(s, dir, "orders")
         .withColumn("o_priority_rank", (col("o_orderkey") % 5).cast("int"))
         .withColumn("o_custkey", col("o_custkey").cast("int"))
         .drop("o_orderpriority")
@@ -1795,7 +1795,7 @@ private[graft] object EntryMetaQueries {
     "meta_schema_diff_logical" -> ((s, dir) => {
       val base = "/tmp/graft_schema_logical_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val l = s.read.parquet(pq(dir, "lineitem"))
+      val l = input(s, dir, "lineitem")
       l.select(col("l_orderkey"),
           to_date(col("l_shipdate")).as("ship"),
           col("l_extendedprice").cast("decimal(18,2)").as("price"),

@@ -44,7 +44,7 @@ private[graft] object EntryOpsQueries {
     "clustering_report" -> ((s, dir) => {
       val out = "/tmp/graft_cluster_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "orders"))
+      input(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("r"))
         .repartition(1).sortWithinPartitions("k")
         .write.mode("overwrite")
@@ -63,7 +63,7 @@ private[graft] object EntryOpsQueries {
     // same integers from parquet_metadata over both layouts.
     "zorder_clustering" -> ((s, dir) => {
       val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s.read.parquet(pq(dir, "orders"))
+      val base = input(s, dir, "orders")
         .select(col("o_custkey").as("k"), col("o_orderkey").as("r"))
       val lin = "/tmp/graft_zclin_" + sfx
       val zo = "/tmp/graft_zczo_" + sfx
@@ -97,7 +97,7 @@ private[graft] object EntryOpsQueries {
       // overwrite the export the (sf0.01-pinned) oracle reads
       val out = "/tmp/graft_export_manifest_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .repartition(col("lang"))
         .write.mode("overwrite").partitionBy("lang").parquet(out)
       meta(s, out, "rowgroup")
@@ -117,7 +117,7 @@ private[graft] object EntryOpsQueries {
     "sized_write" -> ((s, dir) => {
       val out = "/tmp/graft_sized_write_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      Bucketing.writeSized(s.read.parquet(pq(dir, "documents")), out,
+      Bucketing.writeSized(input(s, dir, "documents"), out,
         targetBytes = 256L << 10)
       meta(s, out, "rowgroup")
         .agg(countDistinct(col("filepath")).as("n_files"),
@@ -135,9 +135,9 @@ private[graft] object EntryOpsQueries {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val ct = freshTable(s, "graft_bucketed_customer_" + suffix)
       val ot = freshTable(s, "graft_bucketed_orders_" + suffix)
-      Bucketing.writeBucketed(s.read.parquet(pq(dir, "customer")),
+      Bucketing.writeBucketed(input(s, dir, "customer"),
         "c_custkey", buckets = 8, table = ct)
-      Bucketing.writeBucketed(s.read.parquet(pq(dir, "orders"))
+      Bucketing.writeBucketed(input(s, dir, "orders")
         .withColumnRenamed("o_custkey", "c_custkey"),
         "c_custkey", buckets = 8, table = ot)
       s.table(ot).join(s.table(ct), Seq("c_custkey"))
@@ -149,7 +149,7 @@ private[graft] object EntryOpsQueries {
 
     // ----- delegated relational capabilities (Catalyst-native plans) -----
     "q1_agg" -> ((s, dir) => {
-      val l = s.read.parquet(pq(dir, "lineitem"))
+      val l = input(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       l.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -163,9 +163,9 @@ private[graft] object EntryOpsQueries {
 
 
     "q3_topk" -> ((s, dir) => {
-      val c = s.read.parquet(pq(dir, "customer")).filter(col("c_mktsegment") === "BUILDING")
-      val o = s.read.parquet(pq(dir, "orders"))
-      val l = s.read.parquet(pq(dir, "lineitem"))
+      val c = input(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+      val o = input(s, dir, "orders")
+      val l = input(s, dir, "lineitem")
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("o_orderkey"))
@@ -176,11 +176,11 @@ private[graft] object EntryOpsQueries {
 
 
     "q5_join" -> ((s, dir) => {
-      val n = s.read.parquet(pq(dir, "nation"))
-      val c = s.read.parquet(pq(dir, "customer"))
-      val o = s.read.parquet(pq(dir, "orders"))
-      val l = s.read.parquet(pq(dir, "lineitem"))
-      val su = s.read.parquet(pq(dir, "supplier"))
+      val n = input(s, dir, "nation")
+      val c = input(s, dir, "customer")
+      val o = input(s, dir, "orders")
+      val l = input(s, dir, "lineitem")
+      val su = input(s, dir, "supplier")
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
         .join(su, col("l_suppkey") === col("s_suppkey") &&
@@ -193,7 +193,7 @@ private[graft] object EntryOpsQueries {
 
 
     "win_rank" -> ((s, dir) => {
-      val o = s.read.parquet(pq(dir, "orders"))
+      val o = input(s, dir, "orders")
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       o.withColumn("rn", row_number().over(w))
@@ -220,7 +220,7 @@ private[graft] object EntryOpsQueries {
     // orders priced above 1.5x their customer's average. The comparison is
     // cross-multiplied in exact decimals, so no division order-dependence.
     "q_corr_subquery" -> ((s, dir) => {
-      s.read.parquet(pq(dir, "orders")).createOrReplaceTempView("orders_v")
+      input(s, dir, "orders").createOrReplaceTempView("orders_v")
       s.sql("""
         SELECT CAST(count(*) AS LONG) AS n_above
         FROM orders_v o
@@ -233,7 +233,7 @@ private[graft] object EntryOpsQueries {
 
     // Moving-frame window: trailing-3 revenue per supplier over ship dates.
     "win_moving" -> ((s, dir) => {
-      val l = s.read.parquet(pq(dir, "lineitem")).filter(col("l_suppkey") < 20)
+      val l = input(s, dir, "lineitem").filter(col("l_suppkey") < 20)
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
         .rowsBetween(-2, 0)
@@ -243,7 +243,7 @@ private[graft] object EntryOpsQueries {
 
 
     "cube_rollup" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "orders"))
+      input(s, dir, "orders")
         .rollup(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
         .select(coalesce(col("o_orderstatus"), lit("ALL")).as("o_orderstatus"),
@@ -252,7 +252,7 @@ private[graft] object EntryOpsQueries {
 
 
     "q_percentiles" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "lineitem"))
+      input(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           expr("percentile(l_extendedprice, array(0.5, 0.9))").getItem(0).as("p50"),
@@ -261,23 +261,23 @@ private[graft] object EntryOpsQueries {
 
 
     "semi_join" -> ((s, dir) => {
-      val c = s.read.parquet(pq(dir, "customer"))
-      val o = s.read.parquet(pq(dir, "orders"))
+      val c = input(s, dir, "customer")
+      val o = input(s, dir, "orders")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
         .agg(count(lit(1)).as("n_customers_with_orders"))
     }),
 
 
     "set_except" -> ((s, dir) => {
-      val c = s.read.parquet(pq(dir, "customer")).select(col("c_custkey").as("k"))
-      val o = s.read.parquet(pq(dir, "orders")).select(col("o_custkey").as("k"))
+      val c = input(s, dir, "customer").select(col("c_custkey").as("k"))
+      val o = input(s, dir, "orders").select(col("o_custkey").as("k"))
       c.except(o).agg(count(lit(1)).as("n_customers_without_orders"))
     }),
 
 
     "distinct_agg" -> ((s, dir) => {
-      val su = s.read.parquet(pq(dir, "supplier"))
-      val n = s.read.parquet(pq(dir, "nation"))
+      val su = input(s, dir, "supplier")
+      val n = input(s, dir, "nation")
       su.join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(countDistinct(col("s_suppkey")).as("n_suppliers"),
@@ -365,7 +365,7 @@ private[graft] object EntryOpsQueries {
     // carry), broadcast exact token-set verification -> the 30 copies,
     // exactly, DuckDB-checkable.
     "dedup_cross" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val b = d.filter(col("doc_id") < 30)
         .select((col("doc_id") + 300000L).as("doc_id"), col("text"))
         .union(d.filter(col("doc_id") >= 30 && col("doc_id") < 50)
@@ -401,7 +401,7 @@ private[graft] object EntryOpsQueries {
     "dedup_store_scrub" -> ((s, dir) => {
       val tbl = freshTable(s, "graft_band_store_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_"))
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       Dedup.writeBandStore(d, col("doc_id"), TextOps.tokenSet(col("text")),
         tbl, buckets = 8)
       val inc = d.filter(col("doc_id") < 20)
@@ -469,8 +469,8 @@ private[graft] object EntryOpsQueries {
     // distributed iterations are bit-identical to the oracle's unrolled
     // SQL replay — no float summation order anywhere.
     "pagerank" -> ((s, dir) => {
-      val o = s.read.parquet(pq(dir, "orders")).select(col("o_orderkey"), col("o_custkey"))
-      val l = s.read.parquet(pq(dir, "lineitem")).select(col("l_orderkey"), col("l_suppkey"))
+      val o = input(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val l = input(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
         .distinct()
@@ -485,7 +485,7 @@ private[graft] object EntryOpsQueries {
     // the integer-exact cardinality estimate. Bounded-heap aggregation —
     // the sketch, not the key set, is what shuffles.
     "kmv_distinct" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Sketches.kmvEstimateMicro(
           Sketches.kmvSketch(d, col("lang"), Sampling.arithHash(col("doc_id")), k = 8), k = 8)
         .withColumnRenamed("g", "lang")
@@ -499,7 +499,7 @@ private[graft] object EntryOpsQueries {
     // scoring is then a fused codegen membership pass (`count_in`) — a
     // narrow projection, no join, no second shuffle of the corpus.
     "text_oov" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val vocab = d.select(explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("token")).limit(16)
@@ -521,7 +521,7 @@ private[graft] object EntryOpsQueries {
     // The LM is vocabulary-sized; scoring is one exploded equi-join
     // against it and a per-doc re-aggregate.
     "text_lm_score" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Relevance.ngramFamiliarity(
           d.filter(col("doc_id") >= 50), d.filter(col("doc_id") < 50),
           col("doc_id"), col("text"), n = 2)
@@ -534,7 +534,7 @@ private[graft] object EntryOpsQueries {
     // over (source, lang) — integer-exact means in micro-units, so any
     // engine reproduces them bit-for-bit.
     "corpus_report" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .rollup(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars_sum"))
         .withColumn("mean_chars_micro", expr("(chars_sum * 1000000L) div n_docs"))),
@@ -552,7 +552,7 @@ private[graft] object EntryOpsQueries {
     // pair of versions; the oracle compares raw text — equal by digest
     // collision-freeness.
     "corpus_diff" -> ((s, dir) => {
-      val old = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val old = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val nw = old.filter(col("doc_id") % 17 =!= 0)
         .select(col("doc_id"),
           when(col("doc_id") % 13 === 0, concat(col("text"), lit(" v2")))
@@ -578,7 +578,7 @@ private[graft] object EntryOpsQueries {
     // a reproducible pseudo-random layout with parallelism = shard count
     // (no unpartitioned window, no zipWithIndex, no RNG).
     "shard_order" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"))
+      val d = input(s, dir, "documents").select(col("doc_id"))
       Packing.shardAndOrder(d, col("doc_id"),
           Sampling.arithHash(col("doc_id")), nShards = 8)
         .select(col("doc_id"), col("shard"), col("shuffle_pos"))
@@ -603,7 +603,7 @@ private[graft] object EntryOpsQueries {
     // against driver-resident centroids; each Lloyd update is one
     // map-side-combinable k-row aggregate. Zero corpus shuffles.
     "cluster_kmeans" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings"))
+      val e = input(s, dir, "embeddings")
       Clustering.kmeansGridAssign(e, "vec_id", "embedding", k = 8, iters = 2)
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("csize"), sum(col("id")).as("id_sum"))
@@ -612,7 +612,7 @@ private[graft] object EntryOpsQueries {
 
     // Word-bigram Jaccard similarity over a bounded pair set.
     "ngram_jaccard" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
         .filter(col("doc_id") < 40)
         .select(col("doc_id"), sort_array(array_distinct(TextOps.wordNgrams(col("text"), 2))).as("ng"))
       val a = d.select(col("doc_id").as("a_id"), col("ng").as("ng_a"))
@@ -634,7 +634,7 @@ private[graft] object EntryOpsQueries {
     // corpus-scale path reuses the MinHash band store for candidates and
     // this containment verify in place of the Jaccard verify.
     "ngram_containment" -> ((s, dir) => {
-      val toks = s.read.parquet(pq(dir, "documents"))
+      val toks = input(s, dir, "documents")
         .filter(col("doc_id") < 40)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       val corpus = toks.union(
@@ -656,7 +656,7 @@ private[graft] object EntryOpsQueries {
 
     // ----- LLM-data-pipeline: text analysis ----------------------------
     "text_tokens" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(TextOps.tokenCount(col("text")).cast("long")).as("n_tokens"),
@@ -664,7 +664,7 @@ private[graft] object EntryOpsQueries {
 
 
     "text_quality" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .filter(col("doc_id") < 50)
         .select(col("doc_id"),
           TextOps.tokenCount(col("text")).cast("long").as("n_tokens"),
@@ -678,7 +678,7 @@ private[graft] object EntryOpsQueries {
     // doc becomes pure repetition (no stopwords, 1 distinct token), every
     // 13th gets a digit/symbol tail (alphabetic-ratio hit on short docs).
     "quality_rules" -> ((s, dir) => {
-      val planted = s.read.parquet(pq(dir, "documents"))
+      val planted = input(s, dir, "documents")
         .withColumn("t1",
           when(col("doc_id") % 17 === 0, repeat(lit("zz "), 40)).otherwise(col("text")))
         .withColumn("text2",
@@ -702,7 +702,7 @@ private[graft] object EntryOpsQueries {
     // non-space symbols — the pre-tokenization regex family BPE vocabularies
     // are trained over.
     "text_bpe_tokens" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(size(regexp_extract_all(col("text"),
@@ -710,7 +710,7 @@ private[graft] object EntryOpsQueries {
 
 
     "text_langid" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(TextOps.tokens(col("text")).as("toks"))
         .select(TextOps.langIdOn(col("toks")).as("pred_lang"))
         .groupBy(col("pred_lang"))
@@ -718,7 +718,7 @@ private[graft] object EntryOpsQueries {
 
 
     "text_langid_ngram" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         // materialize trigrams once per row; the five profile scores share it
         .select(TextOps.charNgrams(col("text"), 3).as("tg"))
         .select(TextOps.langIdNgramOn(col("tg")).as("pred_lang"))
@@ -727,7 +727,7 @@ private[graft] object EntryOpsQueries {
 
 
     "text_fingerprint" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .filter(col("doc_id") < 100)
         .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))),
 
@@ -738,7 +738,7 @@ private[graft] object EntryOpsQueries {
     // character. The redaction is a narrow regexp projection; the
     // accounting is one map-side-combining hash aggregate on lang.
     "text_redact" -> ((s, dir) => {
-      val planted = s.read.parquet(pq(dir, "documents"))
+      val planted = input(s, dir, "documents")
         .withColumn("t1",
           when(col("doc_id") % 7 === 0,
             concat(col("text"), lit(" contact user"),
@@ -772,7 +772,7 @@ private[graft] object EntryOpsQueries {
     // rides the one cluster-key aggregate as a (score, -id) struct max —
     // bounded state per group, ties to the smallest id.
     "dedup_keep_best" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.union(d.filter(col("doc_id") < 60)
         .select((col("doc_id") + 500000L).as("doc_id"),
           concat(col("text"), lit(" 1234 !!!! ####")).as("text")))
@@ -794,7 +794,7 @@ private[graft] object EntryOpsQueries {
     // removal is a broadcast join — no corpus shuffle anywhere. Carrying
     // `source` inside the group key keeps the rebuild single-aggregate.
     "line_dedup" -> ((s, dir) => {
-      val planted = s.read.parquet(pq(dir, "documents"))
+      val planted = input(s, dir, "documents")
         .withColumn("t1",
           when(col("doc_id") % 3 === 0,
             concat(lit("shared navigation header menu\n"), col("text")))
@@ -819,7 +819,7 @@ private[graft] object EntryOpsQueries {
     // retries and backfills because the kept set is a pure function of
     // (source, key).
     "mix_sample" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
         .withColumn("source",
           when(col("doc_id") % 3 === 0, lit("web"))
             .when(col("doc_id") % 3 === 1, lit("books"))
@@ -840,7 +840,7 @@ private[graft] object EntryOpsQueries {
     // the skewed 60/30/10 source split makes the flattening visible
     // (small sources keep a higher rate than large ones).
     "temp_mixture" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
         .withColumn("src",
           when(col("doc_id") % 10 < 6, lit("web"))
             .when(col("doc_id") % 10 < 9, lit("books"))
@@ -857,7 +857,7 @@ private[graft] object EntryOpsQueries {
     // the bounded top-k heap aggregate, so no per-group window sort and
     // shuffle volume of at most mappers x groups x 25 rows.
     "quota_sample" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Sampling.quotaPerGroup(d, col("lang"), col("doc_id"), 25)
         .groupBy(col("group").as("lang"))
         .agg(count(lit(1)).as("n_kept"),
@@ -870,7 +870,7 @@ private[graft] object EntryOpsQueries {
     // one split, stable under repartitioning/retries/backfills, no
     // train-eval leakage by construction.
     "sample_split" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       d.withColumn("split", Sampling.splitColumn(col("doc_id"),
           Seq("train" -> 80, "val" -> 10, "test" -> 10)))
         .groupBy(col("split"))
@@ -887,7 +887,7 @@ private[graft] object EntryOpsQueries {
     // off-by-one at any band edge double-counts (n_in_bands) or drops
     // (n_distinct) a row; both totals must equal the table count.
     "hash_bands" -> ((s, dir) => {
-      val docs = s.read.parquet(pq(dir, "documents"))
+      val docs = input(s, dir, "documents")
       val cuts = Seq(0.0, 0.1, 0.37, 0.62, 1.0)
       val banded = cuts.sliding(2).toSeq.map { c =>
         Sampling.hashBand(docs, col("doc_id"), c.head, c.last)
@@ -926,7 +926,7 @@ private[graft] object EntryOpsQueries {
     // sort or corpus-wide running total (the oracle's window IS that
     // non-scalable formulation, which is the point of the comparison).
     "budget_carve" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Sampling.budgetCarve(d, col("doc_id"), col("n_chars"), 75000L)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     }),
@@ -938,7 +938,7 @@ private[graft] object EntryOpsQueries {
     // axis (per-(source, mass-bin) counter ledger; only crossing-bin rows
     // pay a window; never a per-group sort of the corpus).
     "mass_carve" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Sampling.massCarve(d, col("source"), col("doc_id"), col("n_chars"),
           permille = 800, binWidth = 64L)
         .groupBy(col("source"))
@@ -953,7 +953,7 @@ private[graft] object EntryOpsQueries {
     // only each source's single crossing hash-bucket pays a row-level
     // window. Aggregated per source for an order-free compare.
     "budget_mixture" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Sampling.budgetCarvePerGroup(d, col("source"), col("doc_id"), col("n_chars"),
           Map("src0" -> 100000L, "src1" -> 4000L, "src2" -> 40000L, "src3" -> 12000L))
         .groupBy(col("source"))
@@ -968,7 +968,7 @@ private[graft] object EntryOpsQueries {
     // values), vs q_percentiles' exact per-group percentile over the data.
     // Emits exact-integer quantile upper bounds (within one bin width).
     "quantile_hist" -> ((s, dir) => {
-      val l = s.read.parquet(pq(dir, "lineitem"))
+      val l = input(s, dir, "lineitem")
       val hist = Sketches.histogram(l, col("l_returnflag"), col("l_extendedprice"),
         width = 5000L, nbins = 24)
       Sketches.histQuantilesMicro(hist, width = 5000L,
@@ -984,7 +984,7 @@ private[graft] object EntryOpsQueries {
     // merge LOOP is spec-tested against a sequential reference
     // implementation (BpeSpec); this query pins its decision input.
     "bpe_pairs" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Bpe.pairCounts(d, TextOps.tokens(col("text")))
         .orderBy(col("cnt").desc, col("left"), col("right"))
         .limit(20)
@@ -1000,7 +1000,7 @@ private[graft] object EntryOpsQueries {
     // right and never matches inside a bracketed symbol).
     "bpe_merges" -> ((s, dir) => {
       import s.implicits._
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Bpe.trainOnWords(d, col("text"), nMerges = 8)
         .zipWithIndex.map { case ((l, r), i) => (i + 1L, l, r) }
         .toDF("rank", "left", "right")
@@ -1016,7 +1016,7 @@ private[graft] object EntryOpsQueries {
     // a raw word reproduces the training-time progressive state, so each
     // word's encoding IS its row in the replay's final vocabulary table.
     "bpe_encode" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val merges = Bpe.trainOnWords(d, col("text"), nMerges = 8)
       d.filter(col("doc_id") < 50)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("word"))
@@ -1035,7 +1035,7 @@ private[graft] object EntryOpsQueries {
     // alarm. One dim-sized-buffer aggregate per side; only groups x dim
     // sums reach the driver.
     "drift_vector" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings"))
+      val e = input(s, dir, "embeddings")
       Drift.vectorDriftI8(
         e.filter(col("vec_id") % 2 === 0),
         e.filter(col("vec_id") % 2 === 1),
@@ -1049,7 +1049,7 @@ private[graft] object EntryOpsQueries {
     // tokens per char = more compute per char). Same trained merges and
     // narrow codegen encode as bpe_encode; one counter-scale aggregate.
     "bpe_efficiency" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val merges = Bpe.trainOnWords(d, col("text"), nMerges = 8)
       d.select(col("source"), explode(TextOps.tokens(col("text"))).as("word"))
         .select(col("source"), length(col("word")).cast("long").as("nc"),
@@ -1141,11 +1141,11 @@ private[graft] object EntryOpsQueries {
     // by aggregate equality on a join whose left side is artificially
     // skewed onto one customer.
     "skew_join" -> ((s, dir) => {
-      val o = s.read.parquet(pq(dir, "orders"))
+      val o = input(s, dir, "orders")
         .withColumn("cust", when(col("o_orderkey") % 3 === 0, lit(1L))
           .otherwise(col("o_custkey"))) // hot key: ~1/3 of rows on cust 1
         .select(col("cust"), col("o_totalprice"))
-      val c = s.read.parquet(pq(dir, "customer"))
+      val c = input(s, dir, "customer")
         .select(col("c_custkey").as("cust"), col("c_mktsegment"))
       Skew.saltedJoin(o, c, "cust", salts = 8)
         .groupBy(col("c_mktsegment"))
@@ -1158,7 +1158,7 @@ private[graft] object EntryOpsQueries {
     // the per-column pivot runs on the 1-row result). Decimal-exact sums
     // make even the double columns' profile hash-pinnable.
     "profile_table" -> ((s, dir) =>
-      Profile.profile(s.read.parquet(pq(dir, "lineitem")),
+      Profile.profile(input(s, dir, "lineitem"),
         Seq("l_orderkey", "l_quantity", "l_extendedprice",
           "l_returnflag", "l_shipdate", "l_linestatus"))),
 
@@ -1170,7 +1170,7 @@ private[graft] object EntryOpsQueries {
     // order — the deterministic regime the gate can hash-pin (the eviction
     // regime's error bound is spec-asserted instead).
     "heavy_hitters" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val toks = d.select(col("lang"), explode(TextOps.tokens(col("text"))).as("token"))
       Sketches.heavyHitters(toks, col("lang"), col("token"), capacity = 64)
         .withColumnRenamed("g", "lang")
@@ -1181,7 +1181,7 @@ private[graft] object EntryOpsQueries {
     // sampling, hash-derived draws): 20 documents weighted by length —
     // integer-exact priorities, bounded-heap selection, no global sort.
     "weighted_sample" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Sampling.weightedPriority(d, col("doc_id"), length(col("text")), n = 20)
     }),
 
@@ -1191,8 +1191,8 @@ private[graft] object EntryOpsQueries {
     // size KMV sketches — join-cardinality profiling without moving either
     // key set; everything integer-exact and hash-pinned.
     "kmv_overlap" -> ((s, dir) => {
-      val c = s.read.parquet(pq(dir, "customer"))
-      val o = s.read.parquet(pq(dir, "orders"))
+      val c = input(s, dir, "customer")
+      val o = input(s, dir, "orders")
       Sketches.kmvOverlap(
         c, Sampling.arithHash(col("c_custkey")),
         o, Sampling.arithHash(col("o_custkey")), k = 16)
@@ -1205,7 +1205,7 @@ private[graft] object EntryOpsQueries {
     // corpus-wide aggregate (map-side partial, vocabulary-sized result);
     // per-doc ranking windows over the 30 selected docs only.
     "text_keywords" -> ((s, dir) => {
-      val toks = s.read.parquet(pq(dir, "documents"))
+      val toks = input(s, dir, "documents")
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
       val docFreq = toks.select(col("doc_id"), col("token")).distinct()
         .groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -1225,7 +1225,7 @@ private[graft] object EntryOpsQueries {
     // deterministic tie-break. Explode + map-side-partial hash aggregate +
     // TakeOrdered — the BPE/vocab-training preparation scan.
     "text_vocab" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("token"))
@@ -1238,7 +1238,7 @@ private[graft] object EntryOpsQueries {
     // cosine kernel. Random 64-dim embeddings have pairwise cosine far
     // below the 0.99 threshold, so the answer is exactly the planted set.
     "dedup_embedding" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 25).select(col("vec_id") + 100000L, col("embedding")))
       val b = corpus.withColumn("bucket", Similarity.lshBucket(col("embedding"), 64, 16))
@@ -1261,7 +1261,7 @@ private[graft] object EntryOpsQueries {
     // sign pattern), so the drop set is exactly the planted ids;
     // per-cluster stats pin both the assignment and the drop rule.
     "dedup_semantic" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 25).select(col("vec_id") + 100000L, col("embedding")))
       Clustering.semanticDedup(corpus, "vec_id", "embedding",
@@ -1302,7 +1302,7 @@ private[graft] object EntryOpsQueries {
     "pipeline_ingest" -> ((s, dir) => {
       val tbl = freshTable(s, "graft_ingest_store_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_"))
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val ref = d.filter(col("doc_id") >= 50)
       Dedup.writeBandStore(ref, col("doc_id"), TextOps.tokenSet(col("text")),
         tbl, buckets = 8)
@@ -1347,7 +1347,7 @@ private[graft] object EntryOpsQueries {
       val tbl = freshTable(s, "graft_compact_store_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_"))
       freshTable(s, tbl + "__compacting")
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val ref = d.filter(col("doc_id") >= 50)
       Dedup.writeBandStore(ref, col("doc_id"), TextOps.tokenSet(col("text")),
         tbl, buckets = 8)
@@ -1379,7 +1379,7 @@ private[graft] object EntryOpsQueries {
       val band = freshTable(s, "graft_prov_band_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_"))
       val docs = freshTable(s, band + "_docs")
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val ref = d.filter(col("doc_id") >= 50)
       // independent store-pair builds over the same source — overlap
       // them (guide §2.6)
@@ -1411,8 +1411,8 @@ private[graft] object EntryOpsQueries {
       val docs = freshTable(s, "graft_xm_docs_" + suffix)
       val ivf = freshTable(s, "graft_xm_ivf_" + suffix)
       freshTable(s, ivf + "_centroids")
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val ref = d.filter(col("doc_id") >= 50)
       // the three reference stores (band/doc/IVF) build from independent
       // inputs — overlap all three (guide §2.6)
@@ -1471,7 +1471,7 @@ private[graft] object EntryOpsQueries {
     // this pins their COMPOSITION end to end. Plan: one dedup shuffle, the
     // rest narrow until the final small rollup.
     "pipeline_train" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val reps = d.groupBy(col("text"))
         .agg(min(col("doc_id")).as("doc_id"), expr("min_by(lang, doc_id)").as("lang"))
       reps
@@ -1492,7 +1492,7 @@ private[graft] object EntryOpsQueries {
     // corpus shuffle, no false negatives) + exact shingle-join verification
     // -> the answer is exact and DuckDB-checkable.
     "decontam" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val bench = d.filter(col("doc_id") < 20)
       val corpus = d.filter(col("doc_id") >= 20)
         .union(bench.select(col("doc_id") + 200000L, col("text")))
@@ -1505,7 +1505,7 @@ private[graft] object EntryOpsQueries {
     // Repetition-based quality filter (the Gopher-style duplicate-n-gram
     // fraction): 1 - distinct/total over word bigrams, exact micro-units.
     "text_repetition" -> ((s, dir) =>
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .filter(col("doc_id") < 50)
         .select(col("doc_id"), {
           val ng = TextOps.wordNgrams(col("text"), 2)
@@ -1520,7 +1520,7 @@ private[graft] object EntryOpsQueries {
     // order, cut every 4096 tokens; per-sequence doc/token stats. One
     // window cumsum partitioned by the shard key (see Packing scaladoc).
     "pack_sequences" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
         .select(col("source"), col("doc_id"), TextOps.tokenCount(col("text")).cast("long").as("n_tok"))
       Packing.sequenceStats(d, col("source"), col("doc_id"), col("n_tok"), budget = 4096L)
         .select(col("source"), col("seq_id").cast("long").as("seq_id"),
@@ -1536,7 +1536,7 @@ private[graft] object EntryOpsQueries {
     // only corpus shuffles are the per-doc count re-aggregate and the one
     // shard-keyed window packing needs anyway.
     "pipeline_tokenize" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val merges = Bpe.trainOnWords(d, col("text"), nMerges = 8)
       val toks = d
         .select(col("source"), col("doc_id"), explode(TextOps.tokens(col("text"))).as("word"))
@@ -1555,7 +1555,7 @@ private[graft] object EntryOpsQueries {
     // Exact brute-force cosine top-3 (integer ranks; the scores order the
     // rows but are not emitted, keeping the hash compare float-free).
     "ann_cosine_topk" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings"))
+      val e = input(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       Similarity.bruteForceTopK(e, "vec_id", "embedding", queries, "q_id", "q_vec", 3)
@@ -1568,7 +1568,7 @@ private[graft] object EntryOpsQueries {
     // comparable across rows AND integer-exact, so unlike the float-scored
     // ANN queries this one hash-pins the raw scores, not just ranks.
     "ann_quantized" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings"))
+      val e = input(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       Similarity.quantizedTopK(e, "vec_id", "embedding", queries, "q_id", "q_vec",
@@ -1582,11 +1582,11 @@ private[graft] object EntryOpsQueries {
     // (embeddings.vec_id aligns with documents.doc_id in the testdata) —
     // the retrieve-then-enrich shape of a RAG/curation pipeline.
     "ann_join_meta" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings"))
+      val e = input(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val top = Similarity.bruteForceTopK(e, "vec_id", "embedding", queries, "q_id", "q_vec", 3)
-      val docs = s.read.parquet(pq(dir, "documents"))
+      val docs = input(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"))
       top.join(broadcast(docs), col("neighbor_id") === col("doc_id"))
         .select(col("query_id"), col("rank").cast("long").as("rank"),
@@ -1602,7 +1602,7 @@ private[graft] object EntryOpsQueries {
     // deterministic, DuckDB-checkable integer result. The plan is still the
     // full approximate index (bucket equi-join + bounded top-k at k=3).
     "ann_lsh" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 10).select(col("vec_id") + 100000L, col("embedding")))
       val queries = e.filter(col("vec_id") < 10)
@@ -1622,7 +1622,7 @@ private[graft] object EntryOpsQueries {
     // pair to cosine 1 and the tie-break hands rank 1 to the wrong id —
     // the oracle is load-bearing for the projection itself.
     "ann_project" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
           e.filter(col("vec_id") < 10).select(col("vec_id") + 100000L, col("embedding")))
         .select(col("vec_id"), Similarity.randomProject(col("embedding"), 8).as("pvec"))
@@ -1641,7 +1641,7 @@ private[graft] object EntryOpsQueries {
     // EVERY table — always a candidate, always rank 1 at cosine 1; extra
     // tables only ADD candidates, never lose the duplicate.
     "ann_lsh_multi" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 10).select(col("vec_id") + 100000L, col("embedding")))
       val queries = e.filter(col("vec_id") < 10)
@@ -1659,7 +1659,7 @@ private[graft] object EntryOpsQueries {
     // and always wins rank 1. Centroids are a deterministic driver-side
     // quantizer; cell assignment is a codegen'd narrow projection.
     "ann_ivf" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 10).select(col("vec_id") + 100000L, col("embedding")))
       val queries = e.filter(col("vec_id") < 10)
@@ -1678,7 +1678,7 @@ private[graft] object EntryOpsQueries {
     // quantized representation, so its integer self-dot beats any
     // non-identical unit vector's cross-dot by the cosine margin.
     "ann_ivf_quantized" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 10).select(col("vec_id") + 100000L, col("embedding")))
       val queries = e.filter(col("vec_id") < 10)
@@ -1698,7 +1698,7 @@ private[graft] object EntryOpsQueries {
     // survives stage one (shares its query's cell and quantized codes) and
     // wins stage two at cosine 1 — same closed-form oracle.
     "ann_rerank" -> ((s, dir) => {
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 10).select(col("vec_id") + 100000L, col("embedding")))
       val queries = e.filter(col("vec_id") < 10)
@@ -1722,7 +1722,7 @@ private[graft] object EntryOpsQueries {
       val tbl = freshTable(s, "graft_ivf_store_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_"))
       freshTable(s, tbl + "_centroids")
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.union(
         e.filter(col("vec_id") < 10).select(col("vec_id") + 100000L, col("embedding")))
       val queries = e.filter(col("vec_id") < 10)
@@ -1752,7 +1752,7 @@ private[graft] object EntryOpsQueries {
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val tbl = freshTable(s, "graft_ivf_reindex_" + suffix)
       freshTable(s, tbl + "_centroids")
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val drifted = e.select((col("vec_id") + 300000L).as("vec_id"),
         transform(col("embedding"), x => -x).as("embedding"))
       // the store as it existed before the increment arrived
@@ -1791,7 +1791,7 @@ private[graft] object EntryOpsQueries {
       val tbl = freshTable(s, "graft_ivf_filtered_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_"))
       freshTable(s, tbl + "_centroids")
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val base = e.withColumn("lab", pmod(col("vec_id"), lit(7L)).cast("int"))
       val dupGood = e.filter(col("vec_id") < 10)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"),
@@ -1822,7 +1822,7 @@ private[graft] object EntryOpsQueries {
       val tbl = freshTable(s, "graft_ivf_absorb_" +
         new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_"))
       freshTable(s, tbl + "_centroids")
-      val e = s.read.parquet(pq(dir, "embeddings")).select(col("vec_id"), col("embedding"))
+      val e = input(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       Similarity.writeIvfStore(e, "vec_id", "embedding", tbl,
         k = 16, iters = 1, scale = 64, buckets = 8)
       val inc = e.filter(col("vec_id") < 10)
@@ -1847,7 +1847,7 @@ private[graft] object EntryOpsQueries {
     // typed map; extraction is the mapPartitions batch-decode contract.
     "mm_features" -> ((s, dir) => {
       import s.implicits._
-      val media = s.read.parquet(pq(dir, "documents"))
+      val media = input(s, dir, "documents")
         .filter(col("doc_id") < 50).select(col("doc_id")).as[Long]
         .map { id =>
           val w = 16 + (id % 37).toInt
@@ -1873,7 +1873,7 @@ private[graft] object EntryOpsQueries {
     // corrupted re-encode each break the hash.
     "mm_resize" -> ((s, dir) => {
       import s.implicits._
-      val media = s.read.parquet(pq(dir, "documents"))
+      val media = input(s, dir, "documents")
         .filter(col("doc_id") < 40).select(col("doc_id")).as[Long]
         .map { id =>
           val w = 12 + (id * 7 % 60).toInt
@@ -1900,7 +1900,7 @@ private[graft] object EntryOpsQueries {
       import s.implicits._
       val mk = (id: Long) => Multimodal.encodeNoiseFixture(
         24 + (id % 13).toInt, 18 + (id % 11).toInt, id * 97 + 5)
-      val media = s.read.parquet(pq(dir, "documents"))
+      val media = input(s, dir, "documents")
         .filter(col("doc_id") < 30).select(col("doc_id")).as[Long]
         .flatMap { id =>
           val base = MediaRecord(id, "image/png", mk(id))
@@ -1935,7 +1935,7 @@ private[graft] object EntryOpsQueries {
       val flips = (id: Long) =>
         (1L << (id % 64).toInt) | (1L << ((id + 21) % 64).toInt) |
           (1L << ((id + 43) % 64).toInt)
-      val media = s.read.parquet(pq(dir, "documents"))
+      val media = input(s, dir, "documents")
         .filter(col("doc_id") < 30).select(col("doc_id")).as[Long]
         .flatMap { id =>
           val base = (id, Multimodal.encodePatternFixture(mix(id)))
@@ -1959,7 +1959,7 @@ private[graft] object EntryOpsQueries {
     // against the JDK's independent javax.sound parser in specs.
     "mm_audio_probe" -> ((s, dir) => {
       import s.implicits._
-      val media = s.read.parquet(pq(dir, "documents"))
+      val media = input(s, dir, "documents")
         .filter(col("doc_id") < 40).select(col("doc_id")).as[Long]
         .map { id =>
           MediaRecord(id, "audio/wav", Multimodal.encodeWavFixture(
@@ -1984,7 +1984,7 @@ private[graft] object EntryOpsQueries {
     // The oracle reproduces all 3x parameters from doc_id arithmetic.
     "mm_audio_formats" -> ((s, dir) => {
       import s.implicits._
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .filter(col("doc_id") < 30).select(col("doc_id")).as[Long]
         .flatMap { id =>
           Seq("wav", "aiff", "au").map { c =>
@@ -2009,7 +2009,7 @@ private[graft] object EntryOpsQueries {
     // stub boundary — container metadata IS the Spark-side contract.
     "mm_video_probe" -> ((s, dir) => {
       import s.implicits._
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .filter(col("doc_id") < 40).select(col("doc_id")).as[Long]
         .flatMap { id =>
           val dur = 4000L + id * 7L
@@ -2042,7 +2042,7 @@ private[graft] object EntryOpsQueries {
     // synthesized from text (the established stub — the container has no
     // media libs) with copies planted under shifted ids.
     "mm_dedup" -> ((s, dir) => {
-      val media = s.read.parquet(pq(dir, "documents"))
+      val media = input(s, dir, "documents")
         .select(col("doc_id").as("media_id"), encode(col("text"), "UTF-8").as("bytes"))
       val corpus = media.union(
         media.filter(col("media_id") < 30)
@@ -2059,7 +2059,7 @@ private[graft] object EntryOpsQueries {
     // Frame sampling over media rows: every 4th frame by deterministic id
     // stride — a narrow filter, no shuffle; the video-pipeline shape.
     "mm_frames" -> ((s, dir) => {
-      val media = s.read.parquet(pq(dir, "documents"))
+      val media = input(s, dir, "documents")
         .filter(col("doc_id") < 100)
         .select(col("doc_id").as("media_id"), col("text").cast("binary").as("bytes"))
       Multimodal.sampleFrames(media, "media_id", stride = 4)
@@ -2083,7 +2083,7 @@ private[graft] object EntryOpsQueries {
       val ev = eventsNs(s, dir)
         .filter(col("user_id") < 30)
         .select(col("user_id"), expr("ts div 1000").as("e_ts"), col("event_id"))
-      val ord = s.read.parquet(pq(dir, "orders"))
+      val ord = input(s, dir, "orders")
         .groupBy(col("o_custkey").as("user_id"),
           unix_micros(col("o_orderdate").cast("timestamp")).as("o_ts"))
         .agg(max(col("o_orderkey")).as("o_key"))
@@ -2101,7 +2101,7 @@ private[graft] object EntryOpsQueries {
       val ev = eventsNs(s, dir)
         .filter(col("user_id") < 30)
         .select(col("user_id"), expr("ts div 1000").as("e_ts"), col("event_id"))
-      val ord = s.read.parquet(pq(dir, "orders"))
+      val ord = input(s, dir, "orders")
         .groupBy(col("o_custkey").as("user_id"),
           unix_micros(col("o_orderdate").cast("timestamp")).as("o_ts"))
         .agg(max(col("o_orderkey")).as("o_key"))
@@ -2116,11 +2116,11 @@ private[graft] object EntryOpsQueries {
     // bare BETWEEN; one day per bin, exact nano arithmetic on both engines.
     "range_join" -> ((s, dir) => {
       val day = 86400L * 1000000000L
-      val pts = s.read.parquet(pq(dir, "lineitem"))
+      val pts = input(s, dir, "lineitem")
         .filter(col("l_orderkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_linenumber"),
           (unix_micros(col("l_shipdate").cast("timestamp")) * 1000L).as("ship_ns"))
-      val ivs = s.read.parquet(pq(dir, "orders"))
+      val ivs = input(s, dir, "orders")
         .filter(col("o_orderkey") % 100 === 0)
         .select(col("o_orderkey").as("iv_order"),
           (unix_micros(col("o_orderdate").cast("timestamp")) * 1000L).as("w_start"))
@@ -2137,11 +2137,11 @@ private[graft] object EntryOpsQueries {
     // formulation, mirrored frame). Right side pre-aggregated per
     // (order, ship date) for the uniqueness contract.
     "asof_fwd" -> ((s, dir) => {
-      val ord = s.read.parquet(pq(dir, "orders"))
+      val ord = input(s, dir, "orders")
         .filter(col("o_orderkey") % 20 === 0)
         .select(col("o_orderkey"),
           unix_micros(col("o_orderdate").cast("timestamp")).as("o_ts"))
-      val ship = s.read.parquet(pq(dir, "lineitem"))
+      val ship = input(s, dir, "lineitem")
         .groupBy(col("l_orderkey").as("o_orderkey"),
           unix_micros(col("l_shipdate").cast("timestamp")).as("ship_ts"))
         .agg(count(lit(1)).as("n_items"),
@@ -2159,7 +2159,7 @@ private[graft] object EntryOpsQueries {
     "interval_join" -> ((s, dir) => {
       val d30 = 30L * 86400L * 1000000L // micros
       def wins(m: Long, k: String, s0: String, e0: String) =
-        s.read.parquet(pq(dir, "orders"))
+        input(s, dir, "orders")
           .filter(col("o_orderkey") % 100 === m)
           .select(col("o_orderkey").as(k),
             unix_micros(col("o_orderdate").cast("timestamp")).as(s0))
@@ -2178,7 +2178,7 @@ private[graft] object EntryOpsQueries {
     // per-file stats-tightening is asserted in LayoutSpec), replayed
     // verbatim by the DuckDB oracle via [[Layout.zvalue2Sql]].
     "zorder_key" -> ((s, dir) => {
-      s.read.parquet(pq(dir, "orders"))
+      input(s, dir, "orders")
         .select(Layout.zvalue2(col("o_custkey"), col("o_orderkey")).as("z"))
         .withColumn("zbucket", expr(s"z div ${1L << 22}"))
         .groupBy(col("zbucket"))
@@ -2192,7 +2192,7 @@ private[graft] object EntryOpsQueries {
     "text_chunks" -> ((s, dir) => {
       val chunkSize = 40
       val chunkStride = 30
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .filter(col("doc_id") < 50)
         // materialize tokens ONCE: chunkTokens' interpreted lambdas would
         // re-derive an embedded tokenizer expression per chunk
@@ -2214,7 +2214,7 @@ private[graft] object EntryOpsQueries {
     // the O(n^2) brute force. Exact integer tf inner products; top-20 by
     // (dot desc, ids) is a total order, physically TakeOrderedAndProject.
     "sparse_pairs" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       SparseSim.topPairs(d, col("doc_id"), TextOps.wordNgrams(col("text"), 2),
         maxDf = 20L, k = 20)
     }),
@@ -2228,7 +2228,7 @@ private[graft] object EntryOpsQueries {
     // same partitioning, then a counter-scale per-source aggregate; exact
     // integer micro-units.
     "corpus_redundancy" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val p = d.select(col("source"), col("doc_id"),
         explode(array_distinct(TextOps.wordNgrams(col("text"), 2))).as("g"))
       val withDf = p.withColumn("df",
@@ -2248,7 +2248,7 @@ private[graft] object EntryOpsQueries {
     // feature-pipeline step. Clip counts and the exact decimal sum of the
     // clipped column pin the whole construction.
     "winsorize_clip" -> ((s, dir) => {
-      val l = s.read.parquet(pq(dir, "lineitem"))
+      val l = input(s, dir, "lineitem")
       Sketches.winsorize(l, col("l_returnflag"), col("l_quantity"),
           width = 2L, nbins = 32, loMicro = 50000L, hiMicro = 950000L)
         .groupBy(col("l_returnflag"))
@@ -2265,7 +2265,7 @@ private[graft] object EntryOpsQueries {
     // the most degenerate (padding/separator-spam) documents first. The
     // quality-filter companion to text_quality's ratio features.
     "text_diversity" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       d.select(col("doc_id"), TextOps.charCollisionMicro(col("text")).as("coll_micro"))
         .orderBy(col("coll_micro").desc, col("doc_id"))
         .limit(20)
@@ -2281,7 +2281,7 @@ private[graft] object EntryOpsQueries {
     // position-parallel in SQL (the rolling and direct forms are the same
     // mathematical function).
     "cdc_dedup" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val corpus = d.filter(col("doc_id") < 200).select(col("doc_id"), col("text"))
         .union(d.filter(col("doc_id") < 50)
           .select((col("doc_id") + 100000L).as("doc_id"),
@@ -2299,7 +2299,7 @@ private[graft] object EntryOpsQueries {
     // probe time. Result equals the plain contains() scan, found without
     // one.
     "substr_search" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       SubstrSearch.search(d, "doc_id", "text", "fast merge", q = 8)
     }),
 
@@ -2307,7 +2307,7 @@ private[graft] object EntryOpsQueries {
     // Corpus term statistics — the IDF-table / stopword-list / vocabulary
     // builder: two keyed aggregations with map-side partials, exact counts.
     "text_term_stats" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Relevance.termStats(d, col("doc_id"), TextOps.tokens(col("text")))
         .orderBy(col("df").desc, col("token"))
         .limit(20)
@@ -2321,7 +2321,7 @@ private[graft] object EntryOpsQueries {
     // oracle replays the score bit-identically (ln differs in the last ulp
     // across libm implementations; the ratio idf never does).
     "text_bm25" -> ((s, dir) => {
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       Relevance.bm25TopK(d, "doc_id", TextOps.tokens(col("text")),
         Seq("window", "merge", "spark"), k = 15, k1 = 1.0, b = 0.5, logIdf = false)
         .select(col("rank"), col("doc_id"),
@@ -2336,7 +2336,7 @@ private[graft] object EntryOpsQueries {
     // replay), bounded-heap top-5 per query.
     "bm25_batch" -> ((s, dir) => {
       import s.implicits._
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
       val q = Seq(
         (0L, "window"), (0L, "merge"), (0L, "spark"),
         (1L, "hash"), (1L, "join"), (1L, "shuffle"),

@@ -49,7 +49,7 @@ private[graft] object EntryStreamQueries {
       for (p <- Seq(src, out)) {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
       }
-      val docs = s.read.parquet(pq(dir, "documents"))
+      val docs = input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null))
             .otherwise(transform(sequence(lit(0L), col("doc_id") % 7),
@@ -98,7 +98,7 @@ private[graft] object EntryStreamQueries {
       val out = freshTable(s, "graft_bg_out_" + suffix)
       val state = freshTable(s, "graft_bg_state_" + suffix)
       val log = freshTable(s, "graft_bg_log_" + suffix)
-      val d = s.read.parquet(pq(dir, "documents"))
+      val d = input(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val budgets = Map("src0" -> 5000L, "src1" -> 3000L,
         "src2" -> 100000L, "src3" -> 9000L)
@@ -129,7 +129,7 @@ private[graft] object EntryStreamQueries {
       import s.implicits._
       val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
       val staging = scratch("graft_stream_hh_" + suffix)
-      s.read.parquet(pq(dir, "documents"))
+      input(s, dir, "documents")
         .select(col("lang").as("group"), explode(TextOps.tokens(col("text"))).as("item"))
         .write.mode("overwrite").parquet(staging)
       val events = s.readStream.schema("group STRING, item STRING")
@@ -165,7 +165,7 @@ private[graft] object EntryStreamQueries {
       // dim keys outside the streamed events' key set are unreachable under
       // the left equi-join — filter them BEFORE the history aggregate so
       // the per-batch broadcast carries only matchable keys
-      val ord = s.read.parquet(pq(dir, "orders"))
+      val ord = input(s, dir, "orders")
         .filter(col("o_custkey") < 30)
         .groupBy(col("o_custkey").as("user_id"),
           unix_micros(col("o_orderdate").cast("timestamp")).as("o_ts"))
@@ -390,7 +390,7 @@ private[graft] object EntryStreamQueries {
       val band = freshTable(s, "graft_si_band_" + suffix)
       val docs = freshTable(s, "graft_si_docs_" + suffix)
       val log = freshTable(s, "graft_si_log_" + suffix)
-      val d = s.read.parquet(pq(dir, "documents")).select(col("doc_id"), col("text"))
+      val d = input(s, dir, "documents").select(col("doc_id"), col("text"))
       val ref = d.filter(col("doc_id") >= 50)
       // increment: docs <70 relabeled, PRE-DEDUPED on token set (smallest
       // id wins; min_by carries a representative text) per the

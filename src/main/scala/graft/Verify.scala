@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the DuckDB oracle compare
   * (`tools/local_verify.py`).
   *
-  * Usage: `runMain graft.Verify <sfDir> <outDir> [q1,q2,…]` */
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [q1,q2,…]`. A query
+  * that fails is reported on stderr and makes the exit code 2, as in
+  * [[Bench]]. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -29,26 +31,35 @@ object Verify {
             .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
         }
       }
-      new java.io.File(outDir).mkdirs()
-      SparkEntry.queries.foreach { case (name, fn) =>
-        if (selected(name)) {
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            // a failure BEFORE the write action leaves the PREVIOUS run's
-            // result parquet in place — the compare would then hash stale
-            // output against a fresh oracle. No result beats a wrong one.
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(s"$outDir/$name"))
-          }
-        }
-      }
+      val failed = dump(spark, sfDir, outDir,
+        SparkEntry.queries.toSeq.filter { case (name, _) => selected(name) })
       val json = SparkEntry.oracleSql
         .filter { case (k, _) => selected(k) }
         .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-      0
+      if (failed.nonEmpty) 2 else 0
+    }
+  }
+
+  /** Write each query's result as parquet under `outDir/<name>`; returns
+    * the names of the queries that failed, each reported on stderr. */
+  def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      outDir: String, queries: Seq[(String, Harness.Query)]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // a failure BEFORE the write action leaves the PREVIOUS run's
+        // result parquet in place — the compare would then hash stale
+        // output against a fresh oracle. No result beats a wrong one.
+        org.apache.commons.io.FileUtils.deleteQuietly(
+          new java.io.File(s"$outDir/$name"))
+        Some(name)
+      }
     }
   }
 }

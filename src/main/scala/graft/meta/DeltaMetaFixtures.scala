@@ -28,16 +28,8 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     val counts = (0 until 3).map { i =>
       val slice = docs.filter(pmod(col("doc_id"), lit(3)) === i)
         .select(col("doc_id"), col("lang"))
-      val tmp = dir + s"_slice$i"
-      slice.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(root, s"f$i.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      s"f$i.parquet" -> FixtureIO.parquetRowCount(
-        new java.io.File(root, s"f$i.parquet"))
+      s"f$i.parquet" -> FixtureIO.writeSingleParquet(
+        slice, new java.io.File(root, s"f$i.parquet"))
     }.toMap
     val ts0 = 1700000000000L
     def addJson(f: String): String = {
@@ -139,19 +131,17 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     val logDir = new java.io.File(root, "_delta_log")
     logDir.mkdirs()
 
-    // seven disjoint slices of the docs table, written as f0..f6.parquet.
-    // ONE Spark job for all seven (this builder runs once per v2ckpt/
-    // multickpt/crc/restore/log-cleanup query invocation — seven
-    // sequential single-slice writes were seven jobs of scheduling
-    // floor each): partitionBy emits every slice in one pass, each
-    // slice in exactly one file because the repartition keys the full
-    // slice to one task. sortWithinPartitions(doc_id) reproduces the
-    // ascending order the per-slice coalesce(1) writes produced (the
-    // generator's documents table is doc_id-ordered).
+    // seven disjoint slices of the docs table, written as f0..f6.parquet
+    // from ONE collect (this builder runs once per v2ckpt/multickpt/crc/
+    // restore/log-cleanup query invocation — seven sequential
+    // single-slice writes were seven jobs of scheduling floor each);
+    // rows ascend by doc_id within each slice, the order the per-slice
+    // coalesce(1) writes produced (the generator's documents table is
+    // doc_id-ordered).
     val n = 7
     val counts = FixtureIO.writeSlices(
       docs.select(col("doc_id"), col("lang")),
-      pmod(col("doc_id"), lit(n)), n, dir,
+      pmod(col("doc_id"), lit(n)), n,
       i => new java.io.File(root, s"f$i.parquet"))
       .map { case (i, c) => s"f$i.parquet" -> c }
 
@@ -254,15 +244,9 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
           lit(null).cast(metaDataType).as("metaData"),
           struct(lit("ingest-a").as("appId"), lit(10L).as("version"),
             lit(ts0 + 1000).as("lastUpdated")).as("txn"))
-      val tmp = dir + "_ckpt"
-      addDf.unionByName(removeDf).unionByName(headerDf).unionByName(txnDf)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(logDir, f"${2L}%020d.checkpoint.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      FixtureIO.writeSingleParquet(
+        addDf.unionByName(removeDf).unionByName(headerDf).unionByName(txnDf),
+        new java.io.File(logDir, f"${2L}%020d.checkpoint.parquet"))
       java.nio.file.Files.write(new java.io.File(logDir, "_last_checkpoint").toPath,
         """{"version":2,"size":7}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
@@ -300,7 +284,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     // its own write: its pre/post-image row pairing must not ride a sort
     // whose doc_id ties could reorder them)
     counts ++= FixtureIO.writeSlices(base, pmod(col("doc_id"), lit(3)), 3,
-      dir + "_cdftmp", i => new java.io.File(root, s"f$i.parquet"))
+      i => new java.io.File(root, s"f$i.parquet"))
       .map { case (i, c) => s"f$i.parquet" -> c }
     // the UPDATE's change file: pre/post images of three docs
     val updated = base.filter(pmod(col("doc_id"), lit(3)) === 0)
@@ -309,7 +293,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
       .unionByName(updated.withColumn("lang", lit("zz"))
         .withColumn("_change_type", lit("update_postimage")))
     counts("c1.parquet") = FixtureIO.writeSingleParquet(
-      c1, new java.io.File(cdDir, "c1.parquet"), dir + "_cdftmpc")
+      c1, new java.io.File(cdDir, "c1.parquet"))
     val ts0 = 1700000000000L
     def size(rel: String): Long = new java.io.File(root, rel).length()
     def writeCommit(v: Long, lines: Seq[String]): Unit =
@@ -373,7 +357,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
       val rel = s"f$i.parquet"
       rel -> FixtureIO.writeSingleParquet(
         base.filter(pmod(col("doc_id"), lit(2)) === i),
-        new java.io.File(root, rel), dir + s"_cdfdvtmp$i")
+        new java.io.File(root, rel))
     }.toMap
     require(counts.values.forall(_ > 6),
       s"cdf-dv fixture needs >6 rows per slice, got $counts")
@@ -464,7 +448,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
       rel -> FixtureIO.writeSingleParquet(
         docs.filter(pmod(col("doc_id"), lit(3)) === i)
           .select(col("doc_id"), col("lang")),
-        new java.io.File(root, rel), dir + s"_rttmp$i")
+        new java.io.File(root, rel))
     }.toMap
     require(counts.values.forall(_ > 3),
       s"row-tracking fixture needs >3 rows per slice, got $counts")
@@ -554,7 +538,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     // per-slice bounds (was one write + one agg job PER slice)
     val sliceId = expr(s"doc_id div ${step}L").cast("int")
     FixtureIO.writeSlices(
-      docs.select(col("doc_id"), col("lang")), sliceId, 5, dir,
+      docs.select(col("doc_id"), col("lang")), sliceId, 5,
       i => new java.io.File(root, s"f$i.parquet"))
     val boundRows = docs.groupBy(sliceId.as("i"))
       .agg(count(lit(1)).as("n"), min(col("doc_id")).as("mn"),
@@ -619,7 +603,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     def relOf(i: Int) = s"lang=${langs(i / 2)}/f${i % 2}.parquet"
     val counts = FixtureIO.writeSlices(
       docs.select(col("doc_id"), col("n_chars"), col("lang")), sliceId,
-      langs.size * 2, dir,
+      langs.size * 2,
       { i =>
         val dst = new java.io.File(root, relOf(i))
         dst.getParentFile.mkdirs()
@@ -677,19 +661,11 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     val ckpt = spark.read.parquet(classic.getPath)
     val scDir = new java.io.File(logDir, "_sidecars")
     scDir.mkdirs()
-    def writeOnePart(df: DataFrame, dst: java.io.File): Unit = {
-      val tmp = dir + "_v2tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    }
     // file actions out to the sidecars: adds in sc1, removes in sc2
-    writeOnePart(ckpt.filter(col("add").isNotNull).select("add", "remove"),
+    FixtureIO.writeSingleParquet(
+      ckpt.filter(col("add").isNotNull).select("add", "remove"),
       new java.io.File(scDir, "sc1.parquet"))
-    writeOnePart(
+    FixtureIO.writeSingleParquet(
       ckpt.filter(col("add").isNull && col("remove").isNotNull)
         .select("add", "remove"),
       new java.io.File(scDir, "sc2.parquet"))
@@ -726,7 +702,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
         struct(col("p").as("path"), col("s").as("sizeInBytes"),
           col("m").as("modificationTime")).as("sidecar"))
     }
-    writeOnePart(nonFile.unionByName(cmRow).unionByName(scRows),
+    FixtureIO.writeSingleParquet(nonFile.unionByName(cmRow).unionByName(scRows),
       new java.io.File(logDir, f"${2L}%020d.checkpoint.graftv2.parquet"))
     classic.delete()
     // log cleanup: the commits the checkpoint covers are gone
@@ -754,12 +730,11 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     val ckpt = spark.read.parquet(classic.getPath)
     val scDir = new java.io.File(logDir, "_sidecars")
     scDir.mkdirs()
-    def writeOnePart(df: DataFrame, dst: java.io.File): Unit =
-      FixtureIO.writeSingleParquet(df, dst, dir + "_v2jtmp")
     // file actions out to the sidecars: adds in sc1, removes in sc2
-    writeOnePart(ckpt.filter(col("add").isNotNull).select("add", "remove"),
+    FixtureIO.writeSingleParquet(
+      ckpt.filter(col("add").isNotNull).select("add", "remove"),
       new java.io.File(scDir, "sc1.parquet"))
-    writeOnePart(
+    FixtureIO.writeSingleParquet(
       ckpt.filter(col("add").isNull && col("remove").isNotNull)
         .select("add", "remove"),
       new java.io.File(scDir, "sc2.parquet"))
@@ -807,19 +782,10 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
     val logDir = new java.io.File(dir, "_delta_log")
     val classic = new java.io.File(logDir, f"${2L}%020d.checkpoint.parquet")
     val ckpt = spark.read.parquet(classic.getPath)
-    def writeOnePart(df: DataFrame, dst: java.io.File): Unit = {
-      val tmp = dir + "_mptmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    }
-    writeOnePart(ckpt.filter(col("add").isNotNull),
+    FixtureIO.writeSingleParquet(ckpt.filter(col("add").isNotNull),
       new java.io.File(logDir,
         f"${2L}%020d.checkpoint.${1L}%010d.${2L}%010d.parquet"))
-    writeOnePart(ckpt.filter(col("add").isNull),
+    FixtureIO.writeSingleParquet(ckpt.filter(col("add").isNull),
       new java.io.File(logDir,
         f"${2L}%020d.checkpoint.${2L}%010d.${2L}%010d.parquet"))
     classic.delete()
@@ -857,15 +823,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
       val slice = docs.filter(pmod(col("doc_id"), lit(4)) === q)
         .select(col("doc_id").as("c1"))
       val rel = s"p$q.parquet"
-      val tmp = dir + s"_slice$q"
-      slice.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(root, rel).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      counts(rel) = FixtureIO.parquetRowCount(new java.io.File(root, rel))
+      counts(rel) = FixtureIO.writeSingleParquet(slice, new java.io.File(root, rel))
       partOf(rel) = if (q < 2) "en" else "zh"
     }
 
@@ -941,7 +899,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
         .select(col("doc_id").as("c1", c1Meta))
       val rel = s"p$q.parquet"
       counts(rel) = FixtureIO.writeSingleParquet(
-        slice, new java.io.File(root, rel), dir + s"_slice$q")
+        slice, new java.io.File(root, rel))
       partOf(rel) = if (q < 2) "en" else "zh"
     }
 
@@ -1016,15 +974,7 @@ private[meta] trait DeltaMetaFixtures extends Serializable { this: DeltaMeta.typ
       val rel = s"f$parity.parquet"
       val slice = docs.filter(pmod(col("doc_id"), lit(2)) === parity)
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
-      val tmp = dir + s"_slice$parity"
-      slice.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(root, rel).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      rel -> FixtureIO.parquetRowCount(new java.io.File(root, rel))
+      rel -> FixtureIO.writeSingleParquet(slice, new java.io.File(root, rel))
     }.toMap
 
     val ts0 = 1700000000000L

@@ -1,85 +1,80 @@
 package graft.meta
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
 
-/** Shared fixture plumbing: writing one deterministic single-file
-  * parquet is a six-step dance (coalesce(1) to a temp dir, find the
-  * part file, copy to the named destination, clean up) that every
-  * fixture writer needs — one home so a writer gotcha is fixed once. */
+/** The one place fixture parquet files are written. A fixture file is a
+  * few thousand rows at most, so its rows are collected to the driver
+  * (one Spark job) and written there through Spark's own parquet
+  * `OutputWriterFactory`: the bytes come from the same writer a
+  * `df.write.parquet` task uses, without the write job, the commit
+  * protocol, a temp dir, a copy to the destination or a footer
+  * re-read for the row count. */
 private[meta] object FixtureIO {
 
-  /** Write `df` as exactly ONE parquet file at `dst`; returns the row
-    * count. `tmpDir` must be caller-unique (fixture dirs derive it from
-    * their own root so concurrent fixtures never collide).
-    *
-    * The count comes from the written file's own footer, not a second
-    * `df.count()` job: the count action re-ran the slice's whole plan
-    * from source — one extra Spark job per fixture slice, ~40 call
-    * sites across the lake builders — for a number the footer already
-    * states about exactly the bytes the fixture will serve. */
-  def writeSingleParquet(
-      df: DataFrame, dst: java.io.File, tmpDir: String): Long = {
-    df.coalesce(1).write.mode("overwrite").parquet(tmpDir)
-    val part = new java.io.File(tmpDir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpDir))
-    parquetRowCount(dst)
+  /** Write `df` as exactly ONE parquet file at `dst` (replacing it if
+    * present); returns the row count. Rows land in the order
+    * `df.coalesce(1)` yields them, as in a single-file Spark write of
+    * the frame. */
+  def writeSingleParquet(df: DataFrame, dst: java.io.File): Long = {
+    val qe = df.coalesce(1).queryExecution
+    val out = qe.optimizedPlan.output
+    writeFile(df.sparkSession, out, out, qe.executedPlan.executeCollect(), dst)
   }
 
-  /** Write `sliceExpr`-keyed slices 0..n-1 of `df` in ONE Spark job —
-    * each slice exactly one parquet file, moved to `dst(i)` — and
-    * return (i -> row count) from the written footers. Rows within a
-    * slice come out ascending by the frame's FIRST column (the
-    * builders' slice key order); `partitionBy` requires the slice id
-    * as a column, `repartition(n, key)` pins each slice to one task
-    * so each slice directory holds exactly one part file. */
+  /** Write `sliceExpr`-keyed slices 0..n-1 of `df` — each exactly one
+    * parquet file at `dst(i)`, an empty slice as a valid empty file —
+    * from ONE collect, and return (i -> row count). Rows within a slice
+    * come out ascending by the frame's FIRST column (the builders'
+    * slice key order; POSITION-critical for the iceberg MOR fixture's
+    * f0). `dropCols` are sort keys after the slice id and are not
+    * written. Slice ids match by their string form (`__slice=i`, as a
+    * `partitionBy("__slice")` directory names them). */
   def writeSlices(
-      df: DataFrame, sliceExpr: org.apache.spark.sql.Column, n: Int,
-      tmpBase: String, dst: Int => java.io.File,
+      df: DataFrame, sliceExpr: Column, n: Int, dst: Int => java.io.File,
       dropCols: Seq[String] = Nil): Map[Int, Long] = {
-    import org.apache.spark.sql.functions.col
-    val tmp = tmpBase + "_slices"
-    val firstCol = df.columns.head
-    // Sort by the FULL required ordering of the dynamic-partition write
-    // (partition columns first): sorting by firstCol alone does not
-    // satisfy it, so Spark would insert its own sort by __slice(+dropCols)
-    // on top, and within-slice firstCol order would then rest on that
-    // sort staying in-memory/stable — it can scramble on spill. With the
-    // partition columns leading, this sort IS the required ordering and
-    // within-slice firstCol order is guaranteed (POSITION-critical for
-    // the iceberg MOR fixture's f0).
-    df.withColumn("__slice", sliceExpr)
-      .repartition(n, col("__slice"))
+    val qe = df.withColumn("__slice", sliceExpr).coalesce(1)
       .sortWithinPartitions(
-        (col("__slice") +: dropCols.map(col)) :+ col(firstCol): _*)
-      .write.partitionBy("__slice" +: dropCols: _*)
-      .mode("overwrite").parquet(tmp)
-    def partsUnder(d: java.io.File): Array[java.io.File] = {
-      val fs = Option(d.listFiles()).getOrElse(Array.empty)
-      fs.filter(f => f.isFile && f.getName.endsWith(".parquet")) ++
-        fs.filter(_.isDirectory).flatMap(partsUnder)
-    }
-    val counts = (0 until n).map { i =>
-      val parts = partsUnder(new java.io.File(tmp, s"__slice=$i"))
-      if (parts.isEmpty) {
-        // an empty slice emits NO __slice=i directory under partitionBy;
-        // the old per-slice path wrote a valid empty parquet file — keep
-        // that contract instead of crashing on sparse slice keys
-        val empty = df.filter(org.apache.spark.sql.functions.lit(false))
-          .drop(dropCols: _*)
-        i -> writeSingleParquet(empty, dst(i), tmpBase + s"_empty$i")
-      } else {
-        require(parts.length == 1,
-          s"slice $i: expected exactly one part file, got ${parts.length}")
-        java.nio.file.Files.copy(parts.head.toPath, dst(i).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        i -> parquetRowCount(dst(i))
-      }
+        (col("__slice") +: dropCols.map(col)) :+ col(df.columns.head): _*)
+      .queryExecution
+    val out = qe.optimizedPlan.output
+    val slice = out.indexWhere(_.name == "__slice")
+    val data = out.filterNot(a => a.name == "__slice" || dropCols.contains(a.name))
+    val bySlice = qe.executedPlan.executeCollect()
+      .groupBy(r => String.valueOf(r.get(slice, out(slice).dataType)))
+    (0 until n).map { i =>
+      val rows = bySlice.getOrElse(i.toString, Array.empty[InternalRow])
+      i -> writeFile(df.sparkSession, data, out, rows, dst(i))
     }.toMap
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    counts
+  }
+
+  /** Write `rows` (laid out as `input`) as the `data` columns of one
+    * parquet file at `dst`, through the writer factory Spark's parquet
+    * write job would use, on the session's Hadoop conf. The local file
+    * system is the raw one, so no `.crc` twin lands next to the
+    * fixture. Returns the number of rows written. */
+  private def writeFile(spark: SparkSession, data: Seq[Attribute],
+      input: Seq[Attribute], rows: Array[InternalRow],
+      dst: java.io.File): Long = {
+    val schema = DataTypeUtils.fromAttributes(data)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val conf = job.getConfiguration
+    conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    java.nio.file.Files.deleteIfExists(dst.toPath)
+    val proj = UnsafeProjection.create(data, input)
+    val writer = factory.newInstance(dst.toURI.toString, schema, ctx)
+    try rows.foreach(r => writer.write(proj(r)))
+    finally writer.close()
+    rows.length
   }
 
   /** Total row count from a local parquet file's footer (driver-side,

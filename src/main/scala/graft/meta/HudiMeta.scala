@@ -2366,19 +2366,17 @@ object HudiMeta extends Serializable {
    * fid1 LIE about `numWrites` by +1, so the census conformance flag
    * is exercised. Returns rows per relative base-file path.
    */
-  /** Write the given `(relPath -> slice)` base files in ONE Spark job
+  /** Write the given `(relPath -> slice)` base files from ONE Spark job
     * (a tagged union through [[FixtureIO.writeSlices]]) instead of one
-    * coalesce(1) job per file — the same job-count cut the delta/iceberg
-    * builders took in the previous round (guide §1.2: fewer passes).
+    * coalesce(1) job per file, as the delta/iceberg builders do.
     * Slices must share a schema; each lands as exactly one parquet file
     * at its relPath, rows ascending by the frame's first column. */
-  private def writeBaseSlices(root: java.io.File, tmpBase: String,
+  private def writeBaseSlices(root: java.io.File,
       slices: Seq[(String, DataFrame)]): Seq[(String, Long)] = {
     val tagged = slices.zipWithIndex
       .map { case ((_, df), i) => df.withColumn("__fslice", lit(i)) }
       .reduce(_ unionByName _)
     val counts = FixtureIO.writeSlices(tagged, col("__fslice"), slices.size,
-      tmpBase,
       { i =>
         val dst = new java.io.File(root, slices(i)._1)
         dst.getParentFile.mkdirs()
@@ -2405,14 +2403,13 @@ object HudiMeta extends Serializable {
       val rel = s"$part/${fid}_0-0-0_$instant.parquet"
       val dst = new java.io.File(root, rel)
       dst.getParentFile.mkdirs()
-      rel -> FixtureIO.writeSingleParquet(slice, dst,
-        dir + s"_hudi_${fid}_$instant")
+      rel -> FixtureIO.writeSingleParquet(slice, dst)
     }
     val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
     val g0 = base.filter(pmod(col("doc_id"), lit(3)) === 0)
     // all four declared base files in ONE job; c2's fid0 slice rewrites
     // the same group's rows with n_chars bumped (an update), superseding s0
-    val Seq(s0, s1, s0b, s2) = writeBaseSlices(root, dir + "_hudi", Seq(
+    val Seq(s0, s1, s0b, s2) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$c1.parquet" -> g0,
       s"p=0/fid1_0-0-0_$c1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(3)) === 1),
@@ -2505,7 +2502,7 @@ object HudiMeta extends Serializable {
     val g0 = base.filter(pmod(col("doc_id"), lit(3)) === 0)
     // all four base files in ONE job; fid0's c2 slice is the rewrite:
     // drop %15==0, bump %12==0 survivors, keep the rest
-    val Seq(s0, s1, s0b, s2) = writeBaseSlices(root, dir + "_hudicd", Seq(
+    val Seq(s0, s1, s0b, s2) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$c1.parquet" -> g0,
       s"p=0/fid1_0-0-0_$c1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(3)) === 1),
@@ -2588,13 +2585,12 @@ object HudiMeta extends Serializable {
       val rel = s"$part/${fid}_0-0-0_$instant.parquet"
       val dst = new java.io.File(root, rel)
       dst.getParentFile.mkdirs()
-      rel -> FixtureIO.writeSingleParquet(slice, dst,
-        dir + s"_hudiv1x_${fid}_$instant")
+      rel -> FixtureIO.writeSingleParquet(slice, dst)
     }
     val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
     val g0v = base.filter(pmod(col("doc_id"), lit(3)) === 0)
     // all four declared base files in ONE job (see writeBaseSlices)
-    val Seq(s0, s1, s0b, s2) = writeBaseSlices(root, dir + "_hudiv1x", Seq(
+    val Seq(s0, s1, s0b, s2) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$c1.parquet" -> g0v,
       s"p=0/fid1_0-0-0_$c1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(3)) === 1),
@@ -2707,7 +2703,7 @@ object HudiMeta extends Serializable {
     val baseRel = s"files/files-0000_0-0-0_$mdInstant.parquet"
     val dst = new java.io.File(mdRoot, baseRel)
     dst.getParentFile.mkdirs()
-    val nRecs = FixtureIO.writeSingleParquet(mdDf, dst, dir + "_hudimd")
+    val nRecs = FixtureIO.writeSingleParquet(mdDf, dst)
     java.nio.file.Files.write(
       new java.io.File(mdHoodie, s"$mdInstant.deltacommit").toPath,
       (s"""{"partitionToWriteStats":{"files":[{"fileId":"files-0000",""" +
@@ -2916,7 +2912,7 @@ object HudiMeta extends Serializable {
     val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
     // all four base files in ONE job (see writeBaseSlices); the last is
     // the clustered output: fid0's and fid1's rows in one base file
-    val Seq(s0, s1, s2, s3) = writeBaseSlices(root, dir + "_hudicl", Seq(
+    val Seq(s0, s1, s2, s3) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$c1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(3)) === 0),
       s"p=0/fid1_0-0-0_$c1.parquet" ->
@@ -3001,7 +2997,7 @@ object HudiMeta extends Serializable {
     }
     val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
     // all three base files in ONE job
-    val Seq(s0, s1, s2) = writeBaseSlices(root, dir + "_hudimor", Seq(
+    val Seq(s0, s1, s2) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$dc1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(3)) === 0),
       s"p=0/fid1_0-0-0_$dc1.parquet" ->
@@ -3113,7 +3109,7 @@ object HudiMeta extends Serializable {
         "20240104000000000", "20240105000000000", "20240106000000000")
     val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
     // all three base files in ONE job
-    val Seq(s0, s1, s2) = writeBaseSlices(root, dir + "_hudimrl", Seq(
+    val Seq(s0, s1, s2) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$dc1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(3)) === 0),
       s"p=0/fid1_0-0-0_$dc1.parquet" ->
@@ -3269,7 +3265,7 @@ object HudiMeta extends Serializable {
     val (dc1, dc2) = ("20240101000000000", "20240102000000000")
     val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
     // both base files in ONE job (see writeBaseSlices)
-    val Seq(s0, s1) = writeBaseSlices(root, dir + "_hudimck", Seq(
+    val Seq(s0, s1) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$dc1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(2)) === 0),
       s"p=0/fid1_0-0-0_$dc1.parquet" ->
@@ -3376,8 +3372,7 @@ object HudiMeta extends Serializable {
     val baseRel = s"p=0/fid0_0-0-0_$dc1.parquet"
     val baseDst = new java.io.File(root, baseRel)
     baseDst.getParentFile.mkdirs()
-    val baseRows = FixtureIO.writeSingleParquet(base, baseDst,
-      dir + "_hudimpc_fid0")
+    val baseRows = FixtureIO.writeSingleParquet(base, baseDst)
     val avroSchema = new org.apache.avro.Schema.Parser().parse(
       """{"type":"record","name":"graft_morpc","fields":[
         |{"name":"doc_id","type":"long"},
@@ -3515,7 +3510,7 @@ object HudiMeta extends Serializable {
     val (dc1, dc2) = ("20240101000000000", "20240102000000000")
     val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
     // both base files in ONE job (see writeBaseSlices)
-    val Seq(s0, s1) = writeBaseSlices(root, dir + "_hudicdc", Seq(
+    val Seq(s0, s1) = writeBaseSlices(root, Seq(
       s"p=0/fid0_0-0-0_$dc1.parquet" ->
         base.filter(pmod(col("doc_id"), lit(2)) === 0),
       s"p=0/fid1_0-0-0_$dc1.parquet" ->

@@ -124,7 +124,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     def relOf(i: Int) = s"lang=${langs(i / 2)}/f${i % 2}.parquet"
     val counts = FixtureIO.writeSlices(
       docs.select(col("doc_id"), col("n_chars"), col("lang")), sliceId,
-      langs.size * 2, dir,
+      langs.size * 2,
       { i =>
         val dst = new java.io.File(dataDir, relOf(i))
         dst.getParentFile.mkdirs()
@@ -210,20 +210,15 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       (lang, if (lang == liar) 3L else files.size.toLong,
         files.map(_._2).sum, bytes)
     }
-    val tmp = dir + "_pstats"
-    rollups.toDF("lang", "fc", "rc", "bytes")
-      .select(struct(col("lang")).as("partition"),
-        lit(0).as("spec_id"),
-        col("rc").as("data_record_count"),
-        col("fc").as("data_file_count"),
-        col("bytes").as("total_data_file_size_in_bytes"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
     val dst = new java.io.File(metaDir, "partition-stats-1.parquet")
-    java.nio.file.Files.copy(part.toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    FixtureIO.writeSingleParquet(
+      rollups.toDF("lang", "fc", "rc", "bytes")
+        .select(struct(col("lang")).as("partition"),
+          lit(0).as("spec_id"),
+          col("rc").as("data_record_count"),
+          col("fc").as("data_file_count"),
+          col("bytes").as("total_data_file_size_in_bytes")),
+      dst)
     val mf = new java.io.File(metaDir, "v1.metadata.json")
     val txt = new String(java.nio.file.Files.readAllBytes(mf.toPath),
       java.nio.charset.StandardCharsets.UTF_8)
@@ -266,13 +261,13 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     metaDir.mkdirs()
 
     // one Spark job for all six slices (was one write job per slice);
-    // sortWithinPartitions(doc_id) reproduces the old per-slice
-    // coalesce(1) ascending order — POSITION-critical for f0, whose
-    // first two row positions the position-delete file below names
+    // rows ascend by doc_id within each slice — POSITION-critical for
+    // f0, whose first two row positions the position-delete file below
+    // names
     val n = 6
     val counts = FixtureIO.writeSlices(
       docs.select(col("doc_id"), col("lang")),
-      pmod(col("doc_id"), lit(n)), n, dir,
+      pmod(col("doc_id"), lit(n)), n,
       i => new java.io.File(dataDir, s"f$i.parquet"))
       .map { case (i, c) => s"f$i.parquet" -> c }
 
@@ -282,15 +277,9 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     val deletedPositions = 2L
     locally {
       import spark.implicits._
-      val tmp = dir + "_del"
-      Seq((f0Abs, 0L), (f0Abs, 1L)).toDF("file_path", "pos")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(dataDir, "del0.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      FixtureIO.writeSingleParquet(
+        Seq((f0Abs, 0L), (f0Abs, 1L)).toDF("file_path", "pos"),
+        new java.io.File(dataDir, "del0.parquet"))
     }
 
     def entry(status: Int, f: String, content: Int = 0,
@@ -418,9 +407,9 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     val sliceB = docs.orderBy(col("doc_id").desc).limit(5)
       .select(col("doc_id"), col("lang"))
     val rowsA = FixtureIO.writeSingleParquet(sliceA,
-      new java.io.File(dataDir, "f0.parquet"), dir + "_wtrA")
+      new java.io.File(dataDir, "f0.parquet"))
     val rowsB = FixtureIO.writeSingleParquet(sliceB,
-      new java.io.File(dataDir, "fT.parquet"), dir + "_wtrB")
+      new java.io.File(dataDir, "fT.parquet"))
     def copy(from: String, to: String): Unit =
       java.nio.file.Files.copy(
         new java.io.File(dataDir, from).toPath,
@@ -539,7 +528,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       val slice = docs.filter(pmod(col("doc_id"), lit(3)) === i)
         .select(col("doc_id"), col("lang"))
       rel -> FixtureIO.writeSingleParquet(slice,
-        new java.io.File(dataDir, rel), dir + s"_trslice$i")
+        new java.io.File(dataDir, rel))
     }.toMap
     def entry(status: Int, f: String): org.apache.avro.generic.GenericRecord = {
       val df = new org.apache.avro.generic.GenericData.Record(
@@ -658,15 +647,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       val rel = s"f$parity.parquet"
       val slice = docs.filter(pmod(col("doc_id"), lit(2)) === parity)
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
-      val tmp = dir + s"_slice$parity"
-      slice.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(dataDir, rel).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      rel -> FixtureIO.parquetRowCount(new java.io.File(dataDir, rel))
+      rel -> FixtureIO.writeSingleParquet(slice, new java.io.File(dataDir, rel))
     }.toMap
 
     // one Puffin file, two deletion-vector-v1 blobs (f0's and f1's)
@@ -778,7 +759,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       rel -> FixtureIO.writeSingleParquet(
         docs.filter(pmod(col("doc_id"), lit(2)) === parity)
           .select(col("doc_id"), col("lang")).orderBy(col("doc_id")),
-        new java.io.File(dataDir, rel), dir + s"_dvcltmp$parity")
+        new java.io.File(dataDir, rel))
     }.toMap
     require(counts.values.forall(_ > 8),
       s"dv-changelog fixture needs >8 rows per slice, got $counts")
@@ -976,8 +957,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     metaDir.mkdirs()
 
     def writeOne(df: DataFrame, rel: String): Long =
-      FixtureIO.writeSingleParquet(df, new java.io.File(dataDir, rel),
-        dir + "_eqtmp")
+      FixtureIO.writeSingleParquet(df, new java.io.File(dataDir, rel))
     val base = docs.select(col("doc_id"),
       when(col("doc_id").isin(0L, 8L), lit(null).cast("string"))
         .otherwise(col("lang")).as("lang"))
@@ -1110,7 +1090,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       import spark.implicits._
       FixtureIO.writeSingleParquet(
         Seq((f0Abs, 0L), (f0Abs, 5L)).toDF("file_path", "pos"),
-        new java.io.File(dataDir, "pd0.parquet"), dir + "_pdtmp")
+        new java.io.File(dataDir, "pd0.parquet"))
     }
     val m3 = new java.io.File(metaDir, "m3.avro")
     locally {
@@ -1191,8 +1171,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     def writeOne(df: DataFrame, rel: String): Long = {
       val dst = new java.io.File(dataDir, rel)
       dst.getParentFile.mkdirs()
-      FixtureIO.writeSingleParquet(df, dst,
-        dir + "_eqptmp_" + rel.replaceAll("[^A-Za-z0-9]", "_"))
+      FixtureIO.writeSingleParquet(df, dst)
     }
     val keyed = docs.select(
       pmod(col("doc_id"), lit(50)).cast("long").as("key"), col("lang"))
@@ -1310,8 +1289,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     dataDir.mkdirs()
     metaDir.mkdirs()
     def writeOne(df: DataFrame, rel: String): Long =
-      FixtureIO.writeSingleParquet(df, new java.io.File(dataDir, rel),
-        dir + "_ctmp")
+      FixtureIO.writeSingleParquet(df, new java.io.File(dataDir, rel))
     val base = docs.select(col("doc_id"), col("lang"))
     val counts = Map(
       "f0.parquet" -> writeOne(base.filter(pmod(col("doc_id"), lit(2)) === 0),
@@ -1411,7 +1389,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       FixtureIO.writeSingleParquet(
         Seq((1L, counts("f0.parquet") + counts("f1.parquet")))
           .toDF("snapshot_id", "row_count"),
-        ps1, dir + "_pstmp")
+        ps1)
     }
     val mf = new java.io.File(metaDir, "v1.metadata.json")
     val txt = new String(java.nio.file.Files.readAllBytes(mf.toPath),
@@ -1452,8 +1430,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     dataDir.mkdirs()
     metaDir.mkdirs()
     def writeOne(df: DataFrame, rel: String): Long =
-      FixtureIO.writeSingleParquet(df, new java.io.File(dataDir, rel),
-        dir + "_stmp")
+      FixtureIO.writeSingleParquet(df, new java.io.File(dataDir, rel))
     val base = docs.select(col("doc_id"), col("lang"))
     val counts = Map(
       "f0.parquet" -> writeOne(base.filter(pmod(col("doc_id"), lit(4)) === 0),
@@ -1575,7 +1552,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       rel -> FixtureIO.writeSingleParquet(
         assigned.filter(col("f") === i).select("doc_id", "lang")
           .sort("doc_id"),
-        new java.io.File(dataDir, rel), dir + s"_sotmp$i")
+        new java.io.File(dataDir, rel))
     }.toMap
     def entry(f: String): org.apache.avro.generic.GenericRecord = {
       val dfSchema = manifestSchema.getField("data_file").schema()
@@ -1775,13 +1752,13 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
         .filter(floor((col("rk") - 1) * 4 / lit(n)).cast("int") === i)
         .select("doc_id", "lang").sort("doc_id")
       counts(rel) = FixtureIO.writeSingleParquet(
-        slice, new java.io.File(dataDir, rel), dir + s"_bndtmp$i")
+        slice, new java.io.File(dataDir, rel))
       val mm = slice.agg(min("doc_id"), max("doc_id")).head()
       bounds(rel) = (mm.getLong(0), mm.getLong(1))
     }
     counts("nb.parquet") = FixtureIO.writeSingleParquet(
       ranked.filter(col("rk") <= 8).select("doc_id", "lang").sort("doc_id"),
-      new java.io.File(dataDir, "nb.parquet"), dir + "_bndtmpnb")
+      new java.io.File(dataDir, "nb.parquet"))
     def le8(v: Long): java.nio.ByteBuffer = {
       val b = java.nio.ByteBuffer.allocate(8)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -1897,7 +1874,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
         .filter(floor((col("rk") - 1) * 4 / lit(n)).cast("int") === i)
         .select("doc_id", "d", "amount").sort("d", "doc_id")
       counts(rel) = FixtureIO.writeSingleParquet(
-        slice, new java.io.File(dataDir, rel), dir + s"_tbndtmp$i")
+        slice, new java.io.File(dataDir, rel))
       val mm = slice.agg(min("d"), max("d"), min("amount"), max("amount"))
         .head()
       dayBounds(rel) = (mm.getDate(0).toLocalDate.toEpochDay,
@@ -2016,7 +1993,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       rel -> FixtureIO.writeSingleParquet(
         docs.filter(pmod(col("doc_id"), lit(4)) === (i - 1))
           .select(col("doc_id"), col("lang")),
-        new java.io.File(dataDir, rel), dir + s"_exrtmp$i")
+        new java.io.File(dataDir, rel))
     }.toMap
     def entry(f: String): org.apache.avro.generic.GenericRecord = {
       val dfSchema = manifestSchema.getField("data_file").schema()
@@ -2128,7 +2105,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
         docs.filter(pmod(col("doc_id"), lit(4)) === i)
           .select(col("doc_id"), col("lang"),
             lit(i).cast("int").as("part")),
-        new java.io.File(dataDir, rel), dir + s"_sumtmp$i")
+        new java.io.File(dataDir, rel))
     }.toMap
     def le4(v: Int): java.nio.ByteBuffer = {
       val b = java.nio.ByteBuffer.allocate(4)
@@ -2273,7 +2250,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       val rel = s"f$i.parquet"
       val slice = base.filter(pmod(col("doc_id"), lit(3)) === i)
       counts(rel) = FixtureIO.writeSingleParquet(
-        slice, new java.io.File(dataDir, rel), dir + s"_mettmp$i")
+        slice, new java.io.File(dataDir, rel))
       nulls(rel) = slice.filter(col("lang").isNull).count()
     }
     def entry(rel: String,
@@ -2381,8 +2358,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     for ((rel, df) <- slices) {
       val slice = df.select(col("doc_id"), col("lang")).sort("lang")
       counts(rel) = FixtureIO.writeSingleParquet(
-        slice, new java.io.File(dataDir, rel),
-        dir + "_sbtmp_" + rel.replaceAll("[^A-Za-z0-9]", "_"))
+        slice, new java.io.File(dataDir, rel))
       val mm = slice.agg(min("lang"), max("lang")).head()
       bounds(rel) = (mm.getString(0), mm.getString(1))
     }
@@ -2570,7 +2546,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
       val rel = s"f$i.parquet"
       rel -> FixtureIO.writeSingleParquet(
         base.filter(pmod(col("doc_id"), lit(4)) === i),
-        new java.io.File(dataDir, rel), dir + s"_rltmp$i")
+        new java.io.File(dataDir, rel))
     }.toMap
     val (n0, n1, n2, n3) = (counts("f0.parquet"), counts("f1.parquet"),
       counts("f2.parquet"), counts("f3.parquet"))
@@ -2686,7 +2662,7 @@ private[meta] trait IcebergMetaFixtures extends Serializable { this: IcebergMeta
     metaDir.mkdirs()
     val counts = FixtureIO.writeSlices(
       docs.select(col("doc_id"), col("lang")),
-      pmod(col("doc_id"), lit(2)), 2, dir,
+      pmod(col("doc_id"), lit(2)), 2,
       i => new java.io.File(dataDir, s"f$i.parquet"))
       .map { case (i, c) => s"f$i.parquet" -> c }
     def entry(f: String): org.apache.avro.generic.GenericRecord = {

@@ -125,7 +125,7 @@ private[meta] trait IcebergMetaTransformFixtures extends Serializable {
     // keeps the old contract (its file is deleted — a fixture must never
     // plant an empty parquet the oracle cannot see)
     val counts = FixtureIO.writeSlices(withB, col("bucket"), 4,
-      dir + "_bkt", i => new java.io.File(dataDir, s"b$i.parquet"))
+      i => new java.io.File(dataDir, s"b$i.parquet"))
       .flatMap { case (i, c) =>
         val rel = s"b$i.parquet"
         if (c == 0L) {
@@ -172,7 +172,7 @@ private[meta] trait IcebergMetaTransformFixtures extends Serializable {
     // old absent-file contract
     val counts = FixtureIO.writeSlices(withK,
       (col("k") / 100L).cast("int"), 4,
-      dir + "_trn", i => new java.io.File(dataDir, s"t$i.parquet"))
+      i => new java.io.File(dataDir, s"t$i.parquet"))
       .flatMap { case (i, c) =>
         val rel = s"t$i.parquet"
         if (c == 0L) {

@@ -74,4 +74,19 @@ class HarnessSpec extends SparkSpec {
     assert(out("throws")._2 === Some("java.lang.IllegalStateException: bad"))
     assert(out("fails_in_exec")._2.exists(_.contains("exec failure")))
   }
+
+  test("Verify's dump reports a query that throws and keeps going") {
+    val out = new java.io.File("/tmp/graft_test_verify_dump")
+    org.apache.commons.io.FileUtils.deleteQuietly(out)
+    // a stale result from an earlier run must not survive a failure
+    new java.io.File(out, "throws").mkdirs()
+    try {
+      val failed = Verify.dump(spark, "/unused", out.getPath, Seq(
+        "throws" -> ((_, _) => throw new IllegalStateException("bad")),
+        "good" -> ((s, _) => s.range(0, 10).toDF())))
+      assert(failed === Seq("throws"))
+      assert(!new java.io.File(out, "throws").exists())
+      assert(spark.read.parquet(new java.io.File(out, "good").getPath).count() === 10L)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(out)
+  }
 }

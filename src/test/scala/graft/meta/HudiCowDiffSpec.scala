@@ -86,8 +86,7 @@ class HudiCowDiffSpec extends SparkSpec {
           .filter(pmod(col("doc_id"), lit(3)) === m)
           .withColumn("file_id", lit(1L))
         FixtureIO.writeSingleParquet(slice,
-          new java.io.File(d, s"$prefix$c2.parquet"),
-          d + s"_colfix$m")
+          new java.io.File(d, s"$prefix$c2.parquet"))
     }
     val e = intercept[UnsupportedOperationException] {
       HudiMeta.cowIncrementalRows(spark, d, c1, c2)
@@ -107,8 +106,7 @@ class HudiCowDiffSpec extends SparkSpec {
           .filter(pmod(col("doc_id"), lit(3)) === m)
           .withColumn("quality", lit(0.5))
         FixtureIO.writeSingleParquet(slice,
-          new java.io.File(d, s"$prefix$c2.parquet"),
-          d + s"_evofix$m")
+          new java.io.File(d, s"$prefix$c2.parquet"))
     }
     val e = intercept[UnsupportedOperationException] {
       HudiMeta.cowIncrementalRows(spark, d, c1, c2)

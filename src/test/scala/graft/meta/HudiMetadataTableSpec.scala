@@ -92,7 +92,7 @@ class HudiMetadataTableSpec extends SparkSpec {
     val baseRel = s"files/files-0000_0-0-0_$mdInstant.parquet"
     val dst = new java.io.File(mdRoot, baseRel)
     dst.getParentFile.mkdirs()
-    val nRecs = FixtureIO.writeSingleParquet(mdDf, dst, d + "_mdmor")
+    val nRecs = FixtureIO.writeSingleParquet(mdDf, dst)
     java.nio.file.Files.write(
       new java.io.File(mdHoodie, s"$mdInstant.deltacommit").toPath,
       (s"""{"partitionToWriteStats":{"files":[{"fileId":"files-0000",""" +

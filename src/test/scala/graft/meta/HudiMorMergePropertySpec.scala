@@ -61,8 +61,7 @@ class HudiMorMergePropertySpec extends SparkSpec {
     val baseRel = s"p=0/fid0_0-0-0_$dc1.parquet"
     val baseFile = new java.io.File(root, baseRel)
     baseFile.getParentFile.mkdirs()
-    val nRows = FixtureIO.writeSingleParquet(baseDf, baseFile,
-      dir + "_propbase")
+    val nRows = FixtureIO.writeSingleParquet(baseDf, baseFile)
     // split events into 1..4 blocks, blocks into 1..2 log files, each
     // file under its own deltacommit
     val blocks = scala.collection.mutable.ArrayBuffer.empty[Seq[Ev]]
