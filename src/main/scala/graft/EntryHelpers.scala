@@ -110,6 +110,22 @@ private[graft] object EntryHelpers {
     * discipline — this only relocates the bytes. */
   private[graft] def scratch(name: String): String = s"$scratchBase/$name"
 
+  /** The per-sf-dir suffix of a query's fixture and scratch paths. */
+  private[graft] def sfx(dir: String): String =
+    new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** A stream-store query's `(store, checkpoint)` scratch dirs for the
+    * sf dir `dir`, `<storeName><sfx>` and `<ckptName><sfx>`, both
+    * deleted so every call starts from an empty store. */
+  private[graft] def freshStorePair(
+      dir: String, storeName: String, ckptName: String): (String, String) = {
+    val store = scratch(storeName + sfx(dir))
+    val ckpt = scratch(ckptName + sfx(dir))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    (store, ckpt)
+  }
+
   /** Fresh private temp dir under the fast scratch base (streaming
     * checkpoints): same contract as `Files.createTempDirectory`, faster
     * medium. */
@@ -227,24 +243,6 @@ private[graft] object EntryHelpers {
     * surfaced as DOUBLE. */
   private[graft] def dsum(c: Column): Column =
     sum(c.cast("decimal(28,6)")).cast("double")
-
-  /**
-   * Run INDEPENDENT Spark actions concurrently (guide §2.6): actions are
-   * only sequential because the driver thread calls them sequentially,
-   * so overlapping lets one job's tasks back-fill another's straggler
-   * tail. First job runs on the calling thread, the rest on the global
-   * pool; every failure propagates. Only for actions with no ordering
-   * requirement between them (e.g. building the two halves of a store
-   * pair from the same immutable input).
-   */
-  private[graft] def parJobs(jobs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val fs = jobs.tail.map(j =>
-      Future(j())(scala.concurrent.ExecutionContext.global))
-    jobs.head()
-    fs.foreach(Await.result(_, Duration.Inf))
-  }
 
   /**
    * Run a STREAMING replay with `spark.sql.shuffle.partitions` set to

@@ -258,13 +258,10 @@ private[graft] object EntryLakeQueries {
     // of the same log — the streaming path and the cross-engine batch
     // path answer identically.
     "stream_delta_live" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_deltastream_" + sfx
+      val out = "/tmp/graft_deltastream_" + sfx(dir)
       DeltaMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
-      val store = scratch("graft_deltastore_" + sfx)
-      val ckpt = scratch("graft_deltastoreck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val (store, ckpt) = freshStorePair(dir, "graft_deltastore_",
+        "graft_deltastoreck_")
       DeltaMeta.maintainLiveStore(s, out, store, ckpt)
       DeltaMeta.readLiveStore(s, store)
         .agg(
@@ -1053,13 +1050,10 @@ private[graft] object EntryLakeQueries {
     // when a NEW metadata version arrives; the store's census must
     // equal DuckDB's independent read of the same data-file footers.
     "stream_iceberg_live" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_icestream_" + sfx
+      val out = "/tmp/graft_icestream_" + sfx(dir)
       IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      val store = scratch("graft_icestore_" + sfx)
-      val ckpt = scratch("graft_icestoreck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val (store, ckpt) = freshStorePair(dir, "graft_icestore_",
+        "graft_icestoreck_")
       IcebergMeta.maintainCurrentStore(s, out, store, ckpt)
       val entries = IcebergMeta.readCurrentStore(s, store)
       entries.filter(col("status") =!= 2 && col("content") === 0)
@@ -1081,12 +1075,9 @@ private[graft] object EntryLakeQueries {
     // by its snapshot (idempotent overwrite). Oracle: closed-form per
     // increment from the data files' own footers.
     "stream_iceberg_appends" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_iceapp_" + sfx
-      val store = scratch("graft_iceappstore_" + sfx)
-      val ckpt = scratch("graft_iceappck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val out = "/tmp/graft_iceapp_" + sfx(dir)
+      val (store, ckpt) = freshStorePair(dir, "graft_iceappstore_",
+        "graft_iceappck_")
       IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       // pass A: rewind the table to current-snapshot 1 (v1 only)
       val v1 = new java.io.File(out, "metadata/v1.metadata.json")
@@ -1273,12 +1264,9 @@ private[graft] object EntryLakeQueries {
     // two positions + all of the removed f5 as deletes). Oracle:
     // the batch changelog rule, per snapshot, on this fixture's path.
     "stream_iceberg_changelog" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_icecl_" + sfx
-      val store = scratch("graft_iceclstore_" + sfx)
-      val ckpt = scratch("graft_iceclck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val out = "/tmp/graft_icecl_" + sfx(dir)
+      val (store, ckpt) = freshStorePair(dir, "graft_iceclstore_",
+        "graft_iceclck_")
       IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       // pass A: rewind the table to current-snapshot 1 (v1 only)
       val v1 = new java.io.File(out, "metadata/v1.metadata.json")
@@ -1621,12 +1609,9 @@ private[graft] object EntryLakeQueries {
     // must equal the one-shot batch feed over [0,2] — the oracle is
     // meta_delta_cdf's, on this fixture's own path.
     "stream_delta_cdf" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_deltacdfstream_" + sfx
-      val store = scratch("graft_deltacdfstore_" + sfx)
-      val ckpt = scratch("graft_deltacdfck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val out = "/tmp/graft_deltacdfstream_" + sfx(dir)
+      val (store, ckpt) = freshStorePair(dir, "graft_deltacdfstore_",
+        "graft_deltacdfck_")
       DeltaMeta.writeCdfFixtureTable(
         s, out, input(s, dir, "documents"))
       // pass A: commit 2 has not arrived yet (staged OUTSIDE the log)
@@ -2512,12 +2497,9 @@ private[graft] object EntryLakeQueries {
     // as the batch incremental pull. Oracle: footers + writer
     // contract (fid1's declared +1 lie included).
     "stream_hudi_appends" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_hudistream_" + sfx
-      val store = scratch("graft_hudistore_" + sfx)
-      val ckpt = scratch("graft_hudick_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val out = "/tmp/graft_hudistream_" + sfx(dir)
+      val (store, ckpt) = freshStorePair(dir, "graft_hudistore_",
+        "graft_hudick_")
       HudiMeta.writeHudiFixtureTable(
         s, out, input(s, dir, "documents"))
       // pass A: c2's completion marker has not arrived yet
@@ -2542,12 +2524,9 @@ private[graft] object EntryLakeQueries {
     // the batch morIncrementalPull. Oracle: base footers + the writer
     // contract (fid1's +1 lie and the declared log rows included).
     "stream_hudi_mor_appends" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_hudimorstream_" + sfx
-      val store = scratch("graft_hudimorstore_" + sfx)
-      val ckpt = scratch("graft_hudimorck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val out = "/tmp/graft_hudimorstream_" + sfx(dir)
+      val (store, ckpt) = freshStorePair(dir, "graft_hudimorstore_",
+        "graft_hudimorck_")
       HudiMeta.writeHudiMorFixtureTable(
         s, out, input(s, dir, "documents"))
       // pass A: dc3's completion marker has not arrived yet
@@ -2574,12 +2553,9 @@ private[graft] object EntryLakeQueries {
     // deletes), with per-instant attribution. Oracle: the same window
     // classification recomputed relationally.
     "stream_hudi_mor_changes" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_hudimorchg_" + sfx
-      val store = scratch("graft_hudimorchgstore_" + sfx)
-      val ckpt = scratch("graft_hudimorchgck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val out = "/tmp/graft_hudimorchg_" + sfx(dir)
+      val (store, ckpt) = freshStorePair(dir, "graft_hudimorchgstore_",
+        "graft_hudimorchgck_")
       HudiMeta.writeHudiMorLogFixtureTable(
         s, out, input(s, dir, "documents"))
       // pass A: dc3's completion marker has not arrived yet
@@ -2602,12 +2578,9 @@ private[graft] object EntryLakeQueries {
     // old-value deletes). Oracle: the diff classification recomputed
     // relationally.
     "stream_hudi_cow_changes" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = "/tmp/graft_hudicowchg_" + sfx
-      val store = scratch("graft_hudicowchgstore_" + sfx)
-      val ckpt = scratch("graft_hudicowchgck_" + sfx)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      val out = "/tmp/graft_hudicowchg_" + sfx(dir)
+      val (store, ckpt) = freshStorePair(dir, "graft_hudicowchgstore_",
+        "graft_hudicowchgck_")
       HudiMeta.writeHudiCowDiffFixtureTable(
         s, out, input(s, dir, "documents"))
       // pass A: c2's completion marker has not arrived yet

@@ -1383,7 +1383,7 @@ private[graft] object EntryOpsQueries {
       val ref = d.filter(col("doc_id") >= 50)
       // independent store-pair builds over the same source — overlap
       // them (guide §2.6)
-      parJobs(
+      Overlap.parJobs(
         () => Dedup.writeDocStore(ref, col("doc_id"),
           TextOps.tokenSet(col("text")), docs),
         () => Dedup.writeBandStore(ref, col("doc_id"),
@@ -1416,7 +1416,7 @@ private[graft] object EntryOpsQueries {
       val ref = d.filter(col("doc_id") >= 50)
       // the three reference stores (band/doc/IVF) build from independent
       // inputs — overlap all three (guide §2.6)
-      parJobs(
+      Overlap.parJobs(
         () => Similarity.writeIvfStore(e.filter(col("vec_id") >= 50),
           "vec_id", "embedding", ivf, k = 16, iters = 1, scale = 64,
           buckets = 8),
@@ -1445,7 +1445,7 @@ private[graft] object EntryOpsQueries {
       // both absorbs read only the pinned survivor set and target disjoint
       // stores (band/doc pair vs IVF) — overlap them (guide §2.6); the
       // retrieval probe below waits on both
-      parJobs(
+      Overlap.parJobs(
         () => Dedup.absorbIntoStore(survivors, col("doc_id"),
           TextOps.tokenSet(col("text")), band, docs, buckets = 8),
         () => Similarity.appendToIvfStore(s, ivf, survE, "vec_id",

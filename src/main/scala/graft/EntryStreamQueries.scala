@@ -405,7 +405,7 @@ private[graft] object EntryStreamQueries {
       val staging = scratch("graft_stream_ingest_" + suffix)
       // the two reference-store builds and the increment staging write
       // are three independent jobs — overlap them (guide §2.6)
-      parJobs(
+      Overlap.parJobs(
         () => Dedup.writeDocStore(ref, col("doc_id"),
           TextOps.tokenSet(col("text")), docs),
         () => Dedup.writeBandStore(ref, col("doc_id"),

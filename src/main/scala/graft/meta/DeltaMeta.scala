@@ -1092,88 +1092,44 @@ object DeltaMeta extends DeltaMetaAudits with DeltaMetaFixtures {
    */
   def maintainLiveStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "delta").option("level", "snapshot")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("filepath", "version", "kind")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // log-SEGMENT-sized driver boundary (file names, not actions)
-        val segs = batch.select("filepath", "version", "kind").collect()
-        if (segs.nonEmpty) {
-          val ckptV = segs.filter(_.getString(2) == "checkpoint")
-            .map(_.getLong(1)).maxOption.getOrElse(-1L)
-          val ckpts = segs.collect {
-            case r if r.getString(2) == "checkpoint" && r.getLong(1) == ckptV =>
-              r.getString(0)
-          }.toSeq
-          val tails = segs.collect {
-            case r if r.getString(2) == "commit" && r.getLong(1) > ckptV =>
-              r.getString(0)
-          }.toSeq
-          val acts = decodeActions(spark, table, ckpts, ckptV, tails)
-            .select(
-              coalesce(col("add.path"), col("remove.path")).as("path"),
-              col("version"),
-              col("add").isNotNull.as("live"),
-              get_json_object(col("add.stats"), "$.numRecords").cast("long")
-                .as("num_records"),
-              coalesce(col("add.deletionVector.cardinality"), lit(0L))
-                .as("dv_cardinality"))
-            .filter(col("path").isNotNull)
-          val store = new java.io.File(storeDir)
-          val merged = (if (store.exists()) {
-            spark.read.parquet(storeDir).unionByName(acts)
-          } else acts)
-            .groupBy(col("path"))
-            .agg(max_by(
-              struct(col("version"), col("live"), col("num_records"),
-                col("dv_cardinality")),
-              struct(col("version"), col("live"))).as("w"))
-            .select(col("path"), col("w.version").as("version"),
-              col("w.live").as("live"),
-              col("w.num_records").as("num_records"),
-              col("w.dv_cardinality").as("dv_cardinality"))
-          val next = new java.io.File(storeDir + "_next")
-          merged.coalesce(1).write.mode("overwrite").parquet(next.getPath)
-          publishStore(storeDir)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Crash-safe local-FS store publish: the fully-written `_next`
-    * directory replaces `storeDir` by renaming the PREVIOUS store
-    * aside first (`_old`), renaming `_next` into place, and deleting
-    * the aside copy LAST — a crash or rename failure at any step
-    * leaves either the old or the new store recoverable, never
-    * neither (a delete-then-rename publish loses the old store when
-    * the rename fails). On an object store this would be a versioned
-    * prefix plus a pointer swap instead of renames. */
-  private[meta] def publishStore(storeDir: String): Unit = {
-    val store = new java.io.File(storeDir)
-    val next = new java.io.File(storeDir + "_next")
-    val old = new java.io.File(storeDir + "_old")
-    org.apache.commons.io.FileUtils.deleteQuietly(old)
-    if (store.exists() && !store.renameTo(old)) {
-      throw new java.io.IOException(
-        s"could not stage previous store $storeDir aside for publish")
+      storeDir: String, checkpointDir: String): Unit =
+    StoreIO.maintain(spark, table, "delta", "snapshot",
+        Seq("filepath", "version", "kind"), storeDir, checkpointDir) {
+      (segs, store) =>
+        val ckptV = segs.filter(_.getString(2) == "checkpoint")
+          .map(_.getLong(1)).maxOption.getOrElse(-1L)
+        val ckpts = segs.collect {
+          case r if r.getString(2) == "checkpoint" && r.getLong(1) == ckptV =>
+            r.getString(0)
+        }.toSeq
+        val tails = segs.collect {
+          case r if r.getString(2) == "commit" && r.getLong(1) > ckptV =>
+            r.getString(0)
+        }.toSeq
+        val acts = decodeActions(spark, table, ckpts, ckptV, tails)
+          .select(
+            coalesce(col("add.path"), col("remove.path")).as("path"),
+            col("version"),
+            col("add").isNotNull.as("live"),
+            get_json_object(col("add.stats"), "$.numRecords").cast("long")
+              .as("num_records"),
+            coalesce(col("add.deletionVector.cardinality"), lit(0L))
+              .as("dv_cardinality"))
+          .filter(col("path").isNotNull)
+        val merged = (if (store.exists()) {
+          spark.read.parquet(storeDir).unionByName(acts)
+        } else acts)
+          .groupBy(col("path"))
+          .agg(max_by(
+            struct(col("version"), col("live"), col("num_records"),
+              col("dv_cardinality")),
+            struct(col("version"), col("live"))).as("w"))
+          .select(col("path"), col("w.version").as("version"),
+            col("w.live").as("live"),
+            col("w.num_records").as("num_records"),
+            col("w.dv_cardinality").as("dv_cardinality"))
+        StoreIO.publishStore(merged, store)
     }
-    if (!next.renameTo(store)) {
-      val restored = !old.exists() || old.renameTo(store)
-      throw new java.io.IOException(
-        s"could not publish store $storeDir" +
-          (if (restored) " (previous store restored)"
-           else s" (previous store preserved at ${old.getPath})"))
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(old)
-  }
 
   /** The live rows of a [[maintainLiveStore]] store. */
   def readLiveStore(spark: SparkSession, storeDir: String): DataFrame =
@@ -1199,40 +1155,23 @@ object DeltaMeta extends DeltaMetaAudits with DeltaMetaFixtures {
    */
   def maintainChangeFeedStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "delta").option("level", "snapshot")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("version", "kind")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // log-SEGMENT-sized driver boundary (versions, not actions)
-        val segs = batch.collect()
-        segs.filter(_.getString(1) == "commit")
-          .map(_.getLong(0)).maxOption.foreach { to =>
-            val store = new java.io.File(storeDir)
-            store.mkdirs()
-            StoreIO.sweepTemp(store)
-            // ranges already fed, keyed by their inclusive upper
-            // bound — only COMPLETED (renamed-into-place) increments
-            // count; a crashed attempt left a temp dir, never a
-            // feed_* name claiming rows it does not hold
-            val fedTo = StoreIO.parsePairs(store, "feed")
-              .map(_._2).maxOption
-            val from = fedTo.map(_ + 1L).getOrElse(0L)
-            if (to >= from) {
-              StoreIO.publishIncrement(changeFeed(spark, table, from, to),
-                store, s"feed_${from}_$to")
-            }
+      storeDir: String, checkpointDir: String): Unit =
+    StoreIO.maintain(spark, table, "delta", "snapshot",
+        Seq("version", "kind"), storeDir, checkpointDir) { (segs, store) =>
+      segs.filter(_.getString(1) == "commit")
+        .map(_.getLong(0)).maxOption.foreach { to =>
+          // ranges already fed, keyed by their inclusive upper bound —
+          // only COMPLETED (renamed-into-place) increments count; a
+          // crashed attempt left a temp dir, never a feed_* name
+          // claiming rows it does not hold
+          val from = StoreIO.parsePairs(store, "feed")
+            .map(_._2).maxOption.map(_ + 1L).getOrElse(0L)
+          if (to >= from) {
+            StoreIO.publishIncrement(changeFeed(spark, table, from, to),
+              store, s"feed_${from}_$to")
           }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+        }
+    }
 
   /** Every change row of a [[maintainChangeFeedStore]] store. */
   def readChangeFeedStore(spark: SparkSession, storeDir: String): DataFrame =

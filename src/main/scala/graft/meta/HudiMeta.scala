@@ -896,40 +896,41 @@ object HudiMeta extends Serializable {
    */
   def maintainIncrementsStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "hudi").option("level", "timeline")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("instant_time", "action", "state")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // timeline-sized driver boundary (instant names, not slices)
-        val completed = batch.collect()
-          .filter(r => r.getString(1) == "commit" &&
-            r.getString(2) == "completed")
+      storeDir: String, checkpointDir: String): Unit =
+    maintainInstantStore(spark, table, storeDir, checkpointDir,
+        Set("commit")) { () =>
+      c => declaredSlices(spark, table, Some(c))
+        .filter(col("instant_time") === c).drop("action")
+    }
+
+  /** The four Hudi increment stores' shared body. Each non-empty batch
+    * of the timeline stream yields its newly arrived COMPLETED instants
+    * whose action is in `actions`; when there are any, `increments()`
+    * gives the per-batch increment of an instant, and every instant the
+    * store does not hold yet lands as its own `inc_<instant>` (only
+    * renamed-into-place increments count; a foreign `inc_*` name
+    * refuses). Each increment derives from the TABLE alone, so the
+    * publishes overlap ([[graft.Overlap.parJobs]]): a crash that
+    * published a later instant before an earlier one is repaired by the
+    * seen-filter on redelivery. */
+  private def maintainInstantStore(
+      spark: SparkSession, table: String, storeDir: String,
+      checkpointDir: String, actions: Set[String])(
+      increments: () => String => DataFrame): Unit =
+    StoreIO.maintain(spark, table, "hudi", "timeline",
+        Seq("instant_time", "action", "state"), storeDir, checkpointDir) {
+      (rows, store) =>
+        val arrived = rows.filter(r =>
+            actions(r.getString(1)) && r.getString(2) == "completed")
           .map(_.getString(0)).sorted
-        if (completed.nonEmpty) {
-          val store = new java.io.File(storeDir)
-          store.mkdirs()
-          StoreIO.sweepTemp(store)
-          // only COMPLETED (renamed-into-place) increments count; a
-          // foreign inc_* name refuses rather than mis-reading state
+        if (arrived.nonEmpty) {
           val seen = StoreIO.parseIds(store, "inc").toSet
-          StoreIO.publishConcurrently(completed.filterNot(seen.contains)) { c =>
-            StoreIO.publishIncrement(
-              declaredSlices(spark, table, Some(c))
-                .filter(col("instant_time") === c).drop("action"),
-              store, s"inc_$c")
-          }
+          val increment = increments()
+          val publishes = arrived.filterNot(seen.contains).toSeq.map(i =>
+            () => StoreIO.publishIncrement(increment(i), store, s"inc_$i"))
+          graft.Overlap.parJobs(publishes: _*)
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Every increment row of a [[maintainIncrementsStore]] store. */
   def readIncrementsStore(spark: SparkSession, storeDir: String): DataFrame =
@@ -948,43 +949,16 @@ object HudiMeta extends Serializable {
    */
   def maintainMorIncrementsStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "hudi").option("level", "timeline")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("instant_time", "action", "state")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // timeline-sized driver boundary (instant names, not slices)
-        val completed = batch.collect()
-          .filter(r => (r.getString(1) == "commit" ||
-            r.getString(1) == "deltacommit") &&
-            r.getString(2) == "completed")
-          .map(_.getString(0)).sorted
-        if (completed.nonEmpty) {
-          val store = new java.io.File(storeDir)
-          store.mkdirs()
-          StoreIO.sweepTemp(store)
-          val seen = StoreIO.parseIds(store, "inc").toSet
-          StoreIO.publishConcurrently(completed.filterNot(seen.contains)) { c =>
-            StoreIO.publishIncrement(
-              morDeclaredWrites(spark, table, Some(c))
-                .filter(col("instant_time") === c)
-                .select(col("instant_time"), col("partition_path"),
-                  col("file_id"), col("path"), col("is_log"),
-                  col("base_instant"), col("declared_rows"),
-                  col("file_size")),
-              store, s"inc_$c")
-          }
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      storeDir: String, checkpointDir: String): Unit =
+    maintainInstantStore(spark, table, storeDir, checkpointDir,
+        Set("commit", "deltacommit")) { () =>
+      c => morDeclaredWrites(spark, table, Some(c))
+        .filter(col("instant_time") === c)
+        .select(col("instant_time"), col("partition_path"),
+          col("file_id"), col("path"), col("is_log"),
+          col("base_instant"), col("declared_rows"),
+          col("file_size"))
+    }
 
   /** Every increment row of a [[maintainMorIncrementsStore]] store. */
   def readMorIncrementsStore(
@@ -1006,47 +980,19 @@ object HudiMeta extends Serializable {
    */
   def maintainMorChangesStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "hudi").option("level", "timeline")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("instant_time", "action", "state")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // timeline-sized driver boundary (instant names, not rows)
-        val arrived = batch.collect()
-          .filter(r => (r.getString(1) == "commit" ||
-            r.getString(1) == "deltacommit") &&
-            r.getString(2) == "completed")
-          .map(_.getString(0)).sorted
-        if (arrived.nonEmpty) {
-          val store = new java.io.File(storeDir)
-          store.mkdirs()
-          StoreIO.sweepTemp(store)
-          val seen = StoreIO.parseIds(store, "inc").toSet
-          // the table's FULL completed write order gives each arrived
-          // instant its true predecessor, even across batch jumps
-          val conf = spark.sessionState.newHadoopConf()
-          val root = qualified(table, conf)
-          val allWrites = completedMorInstants(root, timeline(root, conf),
-            None).map(_.instant).sorted
-          StoreIO.publishConcurrently(arrived.filterNot(seen.contains)) { inst =>
-            val prev = allWrites.takeWhile(_ < inst).lastOption
-              .getOrElse("0")
-            StoreIO.publishIncrement(
-              morIncrementalRows(spark, table, prev, inst)
-                .withColumn("instant_time", lit(inst)),
-              store, s"inc_$inst")
-          }
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      storeDir: String, checkpointDir: String): Unit =
+    maintainInstantStore(spark, table, storeDir, checkpointDir,
+        Set("commit", "deltacommit")) { () =>
+      // the table's FULL completed write order gives each arrived
+      // instant its true predecessor, even across batch jumps
+      val conf = spark.sessionState.newHadoopConf()
+      val root = qualified(table, conf)
+      val allWrites = completedMorInstants(root, timeline(root, conf),
+        None).map(_.instant).sorted
+      inst => morIncrementalRows(spark, table,
+          allWrites.takeWhile(_ < inst).lastOption.getOrElse("0"), inst)
+        .withColumn("instant_time", lit(inst))
+    }
 
   /** Every change row of a [[maintainMorChangesStore]] store. */
   def readMorChangesStore(
@@ -1066,43 +1012,17 @@ object HudiMeta extends Serializable {
    */
   def maintainCowChangesStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "hudi").option("level", "timeline")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("instant_time", "action", "state")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val arrived = batch.collect()
-          .filter(r => r.getString(1) == "commit" &&
-            r.getString(2) == "completed")
-          .map(_.getString(0)).sorted
-        if (arrived.nonEmpty) {
-          val store = new java.io.File(storeDir)
-          store.mkdirs()
-          StoreIO.sweepTemp(store)
-          val seen = StoreIO.parseIds(store, "inc").toSet
-          val conf = spark.sessionState.newHadoopConf()
-          val root = qualified(table, conf)
-          val allWrites = completedCommits(root, timeline(root, conf),
-            None).map(_.instant).sorted
-          StoreIO.publishConcurrently(arrived.filterNot(seen.contains)) { inst =>
-            val prev = allWrites.takeWhile(_ < inst).lastOption
-              .getOrElse("0")
-            StoreIO.publishIncrement(
-              cowIncrementalRows(spark, table, prev, inst)
-                .withColumn("instant_time", lit(inst)),
-              store, s"inc_$inst")
-          }
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      storeDir: String, checkpointDir: String): Unit =
+    maintainInstantStore(spark, table, storeDir, checkpointDir,
+        Set("commit")) { () =>
+      val conf = spark.sessionState.newHadoopConf()
+      val root = qualified(table, conf)
+      val allWrites = completedCommits(root, timeline(root, conf),
+        None).map(_.instant).sorted
+      inst => cowIncrementalRows(spark, table,
+          allWrites.takeWhile(_ < inst).lastOption.getOrElse("0"), inst)
+        .withColumn("instant_time", lit(inst))
+    }
 
   /** Every change row of a [[maintainCowChangesStore]] store. */
   def readCowChangesStore(

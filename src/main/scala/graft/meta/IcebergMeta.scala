@@ -1808,46 +1808,27 @@ object IcebergMeta extends IcebergMetaAudits with IcebergMetaFixtures
   def maintainCurrentStore(
       spark: SparkSession, table: String,
       storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = {
       val hconf = spark.sessionState.newHadoopConf()
       val p = new Path(table)
       p.getFileSystem(hconf).makeQualified(p)
     }
-    val src = spark.readStream.format("metadata")
-      .option("source", "iceberg").option("level", "snapshot")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("filename", "manifest_list", "is_current")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // metadata-FILE-sized driver boundary (a few rows per version)
-        val rows = batch.select("filename", "manifest_list", "is_current")
-          .collect()
-        if (rows.nonEmpty) {
-          val newest = rows.maxBy(r => (metadataVersion(r.getString(0)),
-            r.getString(0)))
-          rows.filter(r => r.getString(0) == newest.getString(0) &&
-            r.getBoolean(2)).map(_.getString(1)).headOption.foreach { ml =>
-            // same v3 refusal as the batch census path: the store must
-            // never be refreshed from a snapshot it would miscount
-            requireCensusableVersion(
-              readTableMetadata(new Path(new Path(root, "metadata"),
-                newest.getString(0)), spark.sessionState.newHadoopConf()),
-              table)
-            val next = new java.io.File(storeDir + "_next")
-            filesFromManifestList(spark, root, ml)
-              .coalesce(1).write.mode("overwrite").parquet(next.getPath)
-            // crash-safe rename-aside publish (shared with the delta
-            // live store): old or new store always survives
-            DeltaMeta.publishStore(storeDir)
-          }
-        }
-        ()
+    StoreIO.maintain(spark, table, "iceberg", "snapshot",
+        Seq("filename", "manifest_list", "is_current"), storeDir,
+        checkpointDir) { (rows, store) =>
+      val newest = rows.maxBy(r => (metadataVersion(r.getString(0)),
+        r.getString(0)))
+      rows.filter(r => r.getString(0) == newest.getString(0) &&
+        r.getBoolean(2)).map(_.getString(1)).headOption.foreach { ml =>
+        // same v3 refusal as the batch census path: the store must
+        // never be refreshed from a snapshot it would miscount
+        requireCensusableVersion(
+          readTableMetadata(new Path(new Path(root, "metadata"),
+            newest.getString(0)), spark.sessionState.newHadoopConf()),
+          table)
+        StoreIO.publishStore(filesFromManifestList(spark, root, ml), store)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The current-snapshot rows of a [[maintainCurrentStore]] store. */
@@ -1870,65 +1851,58 @@ object IcebergMeta extends IcebergMetaAudits with IcebergMetaFixtures
    */
   def maintainAppendsStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "iceberg").option("level", "snapshot")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("filename", "snapshot_id", "timestamp_ms", "is_current")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // metadata-FILE-sized driver boundary (a few rows per version)
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          val newestFile = rows.map(_.getString(0))
-            .maxBy(n => (metadataVersion(n), n))
-          rows.filter(r => r.getString(0) == newestFile && r.getBoolean(3))
-            .headOption.foreach { cur =>
-              val curSnap = cur.getLong(1)
-              val curTs = cur.getLong(2)
-              val store = new java.io.File(storeDir)
-              store.mkdirs()
-              StoreIO.sweepTemp(store)
-              // previously ingested increments, keyed by commit time
-              // (snapshot ids are opaque; timestamps order the
-              // lineage) — only COMPLETED (renamed-into-place)
-              // increments count
-              val seen = StoreIO.parsePairs(store, "inc")
-              val prev = seen.sortBy(_._1).lastOption
-              // emit when this SNAPSHOT is new and not older than the
-              // last increment: a same-millisecond NEW snapshot is not
-              // silently skipped — it reaches appendedFiles, whose
-              // ambiguity refusal fails the batch LOUDLY instead
-              val seenSnaps = seen.map(_._2).toSet
-              if (!seenSnaps.contains(curSnap) &&
-                  !prev.exists(_._1 > curTs)) {
-                val inc = prev match {
-                  case None =>
-                    // bootstrap: the first seen snapshot's live set IS
-                    // the first increment
-                    filesAt(spark, table, Some(curSnap))
-                      .filter(col("status") =!= 2)
-                      .select(col("file_path"), col("content"),
-                        col("abs_path"), col("record_count"),
-                        col("file_size_bytes"), col("data_sequence_number"),
-                        col("file_format"))
-                  case Some((_, prevSnap)) =>
-                    appendedFiles(spark, table, prevSnap, curSnap)
-                }
-                StoreIO.publishIncrement(
-                  inc.withColumn("snapshot_id", lit(curSnap)),
-                  store, s"inc_${curTs}_$curSnap")
-              }
-            }
+      storeDir: String, checkpointDir: String): Unit =
+    maintainSnapshotIncrements(spark, table, storeDir, checkpointDir) {
+      (store, curSnap, curTs, _, prevSnap) =>
+        val inc = prevSnap match {
+          case None =>
+            // bootstrap: the first seen snapshot's live set IS the
+            // first increment
+            filesAt(spark, table, Some(curSnap))
+              .filter(col("status") =!= 2)
+              .select(col("file_path"), col("content"),
+                col("abs_path"), col("record_count"),
+                col("file_size_bytes"), col("data_sequence_number"),
+                col("file_format"))
+          case Some(prev) =>
+            appendedFiles(spark, table, prev, curSnap)
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+        StoreIO.publishIncrement(
+          inc.withColumn("snapshot_id", lit(curSnap)),
+          store, s"inc_${curTs}_$curSnap")
+    }
+
+  /** The appends and changelog stores' shared step. Each non-empty
+    * batch takes the NEWEST metadata file's current snapshot; when the
+    * store holds no increment for it and its commit time is not older
+    * than the last increment's, `land(store, snapshot, timestamp,
+    * seenSnapshots, lastSnapshot)` publishes it. Increments are keyed
+    * `inc_<timestamp>_<snapshot>`: snapshot ids are opaque, timestamps
+    * order the lineage, and only COMPLETED (renamed-into-place)
+    * increments count. A same-millisecond NEW snapshot is not skipped —
+    * it reaches `land`, whose ambiguity refusals fail the batch. */
+  private def maintainSnapshotIncrements(
+      spark: SparkSession, table: String,
+      storeDir: String, checkpointDir: String)(
+      land: (java.io.File, Long, Long, Set[Long], Option[Long]) => Unit)
+      : Unit =
+    StoreIO.maintain(spark, table, "iceberg", "snapshot",
+        Seq("filename", "snapshot_id", "timestamp_ms", "is_current"),
+        storeDir, checkpointDir) { (rows, store) =>
+      val newestFile = rows.map(_.getString(0))
+        .maxBy(n => (metadataVersion(n), n))
+      rows.filter(r => r.getString(0) == newestFile && r.getBoolean(3))
+        .headOption.foreach { cur =>
+          val curSnap = cur.getLong(1)
+          val curTs = cur.getLong(2)
+          val seen = StoreIO.parsePairs(store, "inc")
+          val prev = seen.sortBy(_._1).lastOption
+          val seenSnaps = seen.map(_._2).toSet
+          if (!seenSnaps.contains(curSnap) && !prev.exists(_._1 > curTs)) {
+            land(store, curSnap, curTs, seenSnaps, prev.map(_._2))
+          }
+        }
+    }
 
   /** Every increment row of a [[maintainAppendsStore]] store. */
   def readAppendsStore(spark: SparkSession, storeDir: String): DataFrame =
@@ -1958,127 +1932,87 @@ object IcebergMeta extends IcebergMetaAudits with IcebergMetaFixtures
    */
   def maintainChangelogStore(
       spark: SparkSession, table: String,
-      storeDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = spark.readStream.format("metadata")
-      .option("source", "iceberg").option("level", "snapshot")
-      .option("streamlagms", "0").load(table)
-    val q = src.select("filename", "snapshot_id", "timestamp_ms", "is_current")
-      .writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // metadata-FILE-sized driver boundary (a few rows per version)
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          val newestFile = rows.map(_.getString(0))
-            .maxBy(n => (metadataVersion(n), n))
-          rows.filter(r => r.getString(0) == newestFile && r.getBoolean(3))
-            .headOption.foreach { cur =>
-              val curSnap = cur.getLong(1)
-              val curTs = cur.getLong(2)
-              val store = new java.io.File(storeDir)
-              store.mkdirs()
-              StoreIO.sweepTemp(store)
-              // only COMPLETED (renamed-into-place) increments count
-              val seen = StoreIO.parsePairs(store, "inc")
-              val prev = seen.sortBy(_._1).lastOption
-              val seenSnaps = seen.map(_._2).toSet
-              if (!seenSnaps.contains(curSnap) &&
-                  !prev.exists(_._1 > curTs)) {
-                prev match {
-                  case None =>
-                    val files = filesAt(spark, table, Some(curSnap))
-                      .filter(col("status") =!= 2)
-                    if (files.filter(col("content") =!= 0)
-                        .limit(1).count() > 0) {
-                      throw new UnsupportedOperationException(
-                        s"$table: the bootstrap snapshot $curSnap " +
-                          "carries live delete files — materializing " +
-                          "its rows as plain inserts would resurrect " +
-                          "deleted rows; bootstrap from a compacted " +
-                          "snapshot instead")
-                    }
-                    val paths = files.select(col("abs_path"))
-                      .collect().map(_.getString(0)).toSeq
-                    if (paths.isEmpty) {
-                      throw new IllegalArgumentException(
-                        s"$table: bootstrap snapshot $curSnap has no " +
-                          "live data files — nothing to materialize")
-                    }
-                    StoreIO.publishIncrement(
-                      spark.read.parquet(paths: _*)
-                        .withColumn("_change_type", lit("insert"))
-                        .withColumn("snapshot_id", lit(curSnap)),
-                      store, s"inc_${curTs}_$curSnap")
-                  case Some((_, prevSnap)) =>
-                    // PER-SNAPSHOT attribution: a micro-batch that
-                    // jumps several snapshots (cold start, lagging
-                    // consumer) lands ONE increment per intermediate
-                    // snapshot, each stamped with ITS OWN id — never
-                    // attributing earlier snapshots' changes to the
-                    // final one. Order is the parent-chain walk
-                    // (timestamp sort is the no-parents fallback; a
-                    // wrong fallback order makes changelogScan refuse
-                    // loudly, never misattribute).
-                    val hconf = spark.sessionState.newHadoopConf()
-                    val root = {
-                      val p = new Path(table)
-                      p.getFileSystem(hconf).makeQualified(p)
-                    }
-                    val info = readTableMetadata(
-                      currentMetadataFile(root.getFileSystem(hconf), root),
-                      hconf)
-                    val ids =
-                      inRangeSnapshotIds(info, table, prevSnap, curSnap)
-                    val byId =
-                      info.snapshots.map(s => s.snapshotId -> s).toMap
-                    val ordered: Seq[Long] =
-                      if (info.snapshots.exists(
-                          _.parentSnapshotId.isDefined)) {
-                        val buf =
-                          scala.collection.mutable.ArrayBuffer.empty[Long]
-                        var c = curSnap
-                        while (c != prevSnap) {
-                          buf += c
-                          c = byId(c).parentSnapshotId.getOrElse(
-                            throw new IllegalStateException(
-                              s"$table: snapshot $c lost its parent " +
-                                "between range validation and the walk"))
-                        }
-                        buf.reverse.toSeq
-                      } else {
-                        ids.toSeq.sortBy(id => (byId(id).timestampMs, id))
-                      }
-                    ordered.foldLeft(prevSnap) { (p0, sid) =>
-                      // idempotent redelivery: an increment a crashed
-                      // pass already published is skipped, the walk
-                      // continues from it
-                      if (!seenSnaps.contains(sid)) {
-                        try StoreIO.publishIncrement(
-                          changelogScan(spark, table, p0, sid)
-                            .withColumn("snapshot_id", lit(sid)),
-                          store, s"inc_${byId(sid).timestampMs}_$sid")
-                        catch {
-                          // a snapshot that changed no logical rows
-                          // (replace-only) has no increment to land —
-                          // the walk advances past it; matched by
-                          // TYPE, never by message text (r17 ADVICE)
-                          case _: EmptyChangelogException => ()
-                        }
-                      }
-                      sid
-                    }
-                    ()
+      storeDir: String, checkpointDir: String): Unit =
+    maintainSnapshotIncrements(spark, table, storeDir, checkpointDir) {
+      (store, curSnap, curTs, seenSnaps, prevSnap) =>
+        prevSnap match {
+          case None =>
+            val files = filesAt(spark, table, Some(curSnap))
+              .filter(col("status") =!= 2)
+            if (files.filter(col("content") =!= 0).limit(1).count() > 0) {
+              throw new UnsupportedOperationException(
+                s"$table: the bootstrap snapshot $curSnap " +
+                  "carries live delete files — materializing " +
+                  "its rows as plain inserts would resurrect " +
+                  "deleted rows; bootstrap from a compacted " +
+                  "snapshot instead")
+            }
+            val paths = files.select(col("abs_path"))
+              .collect().map(_.getString(0)).toSeq
+            if (paths.isEmpty) {
+              throw new IllegalArgumentException(
+                s"$table: bootstrap snapshot $curSnap has no " +
+                  "live data files — nothing to materialize")
+            }
+            StoreIO.publishIncrement(
+              spark.read.parquet(paths: _*)
+                .withColumn("_change_type", lit("insert"))
+                .withColumn("snapshot_id", lit(curSnap)),
+              store, s"inc_${curTs}_$curSnap")
+          case Some(prev) =>
+            // PER-SNAPSHOT attribution: a micro-batch that jumps several
+            // snapshots (cold start, lagging consumer) lands ONE
+            // increment per intermediate snapshot, each stamped with ITS
+            // OWN id — never attributing earlier snapshots' changes to
+            // the final one. Order is the parent-chain walk (timestamp
+            // sort is the no-parents fallback; a wrong fallback order
+            // makes changelogScan refuse loudly, never misattribute).
+            // The walk stays sequential: its resume point is the last
+            // PUBLISHED snapshot.
+            val hconf = spark.sessionState.newHadoopConf()
+            val root = {
+              val p = new Path(table)
+              p.getFileSystem(hconf).makeQualified(p)
+            }
+            val info = readTableMetadata(
+              currentMetadataFile(root.getFileSystem(hconf), root), hconf)
+            val ids = inRangeSnapshotIds(info, table, prev, curSnap)
+            val byId = info.snapshots.map(s => s.snapshotId -> s).toMap
+            val ordered: Seq[Long] =
+              if (info.snapshots.exists(_.parentSnapshotId.isDefined)) {
+                val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+                var c = curSnap
+                while (c != prev) {
+                  buf += c
+                  c = byId(c).parentSnapshotId.getOrElse(
+                    throw new IllegalStateException(
+                      s"$table: snapshot $c lost its parent " +
+                        "between range validation and the walk"))
+                }
+                buf.reverse.toSeq
+              } else {
+                ids.toSeq.sortBy(id => (byId(id).timestampMs, id))
+              }
+            ordered.foldLeft(prev) { (p0, sid) =>
+              // idempotent redelivery: an increment a crashed pass
+              // already published is skipped, the walk continues from it
+              if (!seenSnaps.contains(sid)) {
+                try StoreIO.publishIncrement(
+                  changelogScan(spark, table, p0, sid)
+                    .withColumn("snapshot_id", lit(sid)),
+                  store, s"inc_${byId(sid).timestampMs}_$sid")
+                catch {
+                  // a snapshot that changed no logical rows (replace-only)
+                  // has no increment to land — the walk advances past
+                  // it; matched by TYPE, never by message text
+                  case _: EmptyChangelogException => ()
                 }
               }
+              sid
             }
+            ()
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Every change row of a [[maintainChangelogStore]] store. */
   def readChangelogStore(spark: SparkSession, storeDir: String): DataFrame =

@@ -1,100 +1,133 @@
 package graft.meta
 
-import java.io.File
+import java.io.{File, IOException}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.Trigger
 
 /**
- * Crash-safe increment publishing for the streaming row-level stores
- * (delta change feed, iceberg changelog, hudi increments). The stores
- * derive their progress from directory NAMES (`feed_<from>_<to>`,
- * `inc_<ts>_<snap>`, `inc_<instant>`), so a crash mid-write must never
- * leave a directory whose name claims a completed increment — the
- * reader and the next maintenance pass both trust names, and a
- * partially-written increment would silently drop change rows forever.
- * Increments therefore write to a dot-prefixed temp dir and RENAME
- * into place; stale temp dirs from crashed attempts are swept on the
- * next pass. Rename atomicity is the store contract: a local or
- * HDFS-like rename-capable filesystem (object stores without atomic
- * rename need a manifest-commit layer instead).
+ * The streaming lake-store maintainers' one skeleton and one publish
+ * protocol.
+ *
+ * SKELETON ([[maintain]]): one `Trigger.AvailableNow` pass of a
+ * `metadata` stream (delta commit log, iceberg metadata files, hudi
+ * timeline) with its own checkpoint, so an already-seen log file never
+ * re-triggers. Each non-empty micro-batch is collected on the driver
+ * (log-file-sized: names and versions, never rows) and handed to the
+ * maintainer's body, which decides what to publish. Bodies must be
+ * idempotent: `foreachBatch` redelivers a batch whose pass crashed.
+ *
+ * PUBLISH: a store is either one WHOLE parquet dir replaced per batch
+ * ([[publishStore]]: delta live store, iceberg current store) or a dir
+ * of named INCREMENTS ([[publishIncrement]]: `feed_<from>_<to>`,
+ * `inc_<ts>_<snap>`, `inc_<instant>`). Increment stores derive their
+ * progress from directory NAMES, so a crash mid-write must never leave
+ * a name that claims rows it does not hold. Both publishes therefore
+ * write a staged copy, then run the same rename-aside step: the prior
+ * copy is renamed ASIDE, the staged copy renamed in, the aside deleted
+ * last. No crash point loses both copies, and one repair step — an
+ * aside whose destination is missing is restored, any other aside
+ * dropped — runs before every pass. Rename atomicity is the store
+ * contract: a local or HDFS-like rename-capable filesystem (object
+ * stores without atomic rename need a manifest-commit layer instead).
  */
 object StoreIO {
 
-  /** Write `df` as one parquet increment under `store/name`, via a
-    * temp dir + rename. Idempotent: a re-delivered increment replaces
-    * the prior same-named one whole — and crash-safe even ON
-    * redelivery (r17 ADVICE): the existing destination is renamed
-    * ASIDE (a dot-prefixed `.old_` name, invisible to the `inc_*`
-    * globs and swept later), not deleted, before the new rename — so
-    * no crash point leaves the already-published increment name
-    * missing; a crash between the two renames is repaired by
-    * [[sweepTemp]] on the next pass, which restores the aside when no
-    * replacement landed. */
-  /** Run the given per-increment publishes CONCURRENTLY (independent
-    * Spark jobs overlap instead of queuing behind each other's task
-    * tails). Only for increments whose content derives from the TABLE
-    * alone (the hudi windowed increments): each lands in its own keyed
-    * subdir via temp+rename, and a crash that published a later instant
-    * before an earlier one is repaired by the store-side seen-filter on
-    * redelivery — the missing instant's window does not depend on the
-    * store. NOT for walks whose resume point is the last PUBLISHED
-    * increment (the iceberg changelog walk stays sequential). */
-  def publishConcurrently[T](items: Seq[T])(publish: T => Unit): Unit =
-    items match {
-      case Seq() => ()
-      case Seq(one) => publish(one)
-      case many =>
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val fs = many.tail.map(i =>
-          Future(publish(i))(scala.concurrent.ExecutionContext.global))
-        publish(many.head)
-        fs.foreach(Await.result(_, Duration.Inf))
-    }
-
-  def publishIncrement(df: DataFrame, store: File, name: String): Unit = {
-    store.mkdirs()
-    val tmp = new File(store, s".tmp_$name")
-    org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-    val dst = new File(store, name)
-    val aside = new File(store, s".old_$name")
-    org.apache.commons.io.FileUtils.deleteQuietly(aside)
-    if (dst.exists() && !dst.renameTo(aside)) {
-      throw new IllegalStateException(
-        s"$store: could not stage prior increment '$name' aside — " +
-          "rename failed; the store filesystem must support atomic rename")
-    }
-    if (!tmp.renameTo(dst)) {
-      // restore the prior increment rather than leaving a gap
-      if (aside.exists()) aside.renameTo(dst)
-      throw new IllegalStateException(
-        s"$store: could not publish increment '$name' — rename failed; " +
-          "the store filesystem must support atomic rename")
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(aside)
+  /** One AvailableNow pass of the `source`/`level` metadata stream of
+    * `table`, checkpointed at `checkpointDir`: the store at `storeDir`
+    * is repaired first ([[sweepTemp]] and the whole-store aside), then
+    * every non-empty micro-batch's `cols` rows are collected and handed
+    * to `body` with the store dir. Returns when the pass is done; a
+    * failing body fails the pass. */
+  def maintain(
+      spark: SparkSession, table: String, source: String, level: String,
+      cols: Seq[String], storeDir: String, checkpointDir: String)(
+      body: (Array[Row], File) => Unit): Unit = {
+    val store = new File(storeDir)
+    restoreAside(new File(storeDir + "_old"), store)
+    sweepTemp(store)
+    spark.readStream.format("metadata")
+      .option("source", source).option("level", level)
+      .option("streamlagms", "0").load(table)
+      .select(cols.map(col): _*)
+      .writeStream.outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val rows = batch.collect()
+        if (rows.nonEmpty) body(rows, store)
+        ()
+      }
+      .start()
+      .awaitTermination()
   }
 
-  /** Remove crashed-attempt temp dirs, and REPAIR a crash that fell
-    * between [[publishIncrement]]'s two renames: a `.old_<name>`
-    * aside whose `<name>` is missing is the still-valid prior
-    * increment — restore it; an aside whose replacement landed is
-    * garbage — drop it. (Safe concurrently with reads: dot-prefixed
-    * names are invisible to the `feed_*`/`inc_*` globs.) */
-  def sweepTemp(store: File): Unit = {
-    val all = Option(store.listFiles()).getOrElse(Array.empty)
-    all.filter(f => f.isDirectory && f.getName.startsWith(".tmp_"))
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    all.filter(f => f.isDirectory && f.getName.startsWith(".old_"))
-      .foreach { aside =>
-        val dst = new File(store, aside.getName.stripPrefix(".old_"))
-        if (dst.exists()) org.apache.commons.io.FileUtils.deleteQuietly(aside)
-        else if (!aside.renameTo(dst)) {
-          throw new IllegalStateException(
-            s"$store: could not restore increment '${dst.getName}' from " +
-              "its crash-staged aside — rename failed")
-        }
+  /** Replace the whole store at `store` with `df`: written to
+    * `<store>_next`, then swapped in with `<store>_old` as the aside. */
+  def publishStore(df: DataFrame, store: File): Unit = {
+    val next = new File(store.getPath + "_next")
+    df.coalesce(1).write.mode("overwrite").parquet(next.getPath)
+    swapIn(next, store, new File(store.getPath + "_old"))
+  }
+
+  /** Write `df` as one parquet increment under `store/name`, staged in
+    * the dot-prefixed `.tmp_<name>` (invisible to the `inc_*`/`feed_*`
+    * globs). Idempotent: a re-delivered increment replaces the prior
+    * same-named one whole, and crash-safe even on redelivery — the
+    * existing increment is renamed aside to `.old_<name>`, not
+    * deleted, so no crash point leaves the published name missing; a
+    * crash between the two renames is repaired by [[sweepTemp]] on the
+    * next pass. */
+  def publishIncrement(df: DataFrame, store: File, name: String): Unit = {
+    val tmp = new File(store, s".tmp_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+    swapIn(tmp, new File(store, name), new File(store, s".old_$name"))
+  }
+
+  /** The one rename-aside step: `dst` (when present) is renamed to
+    * `aside`, `staged` renamed to `dst`, and the aside deleted last. A
+    * failed second rename restores the aside before throwing; a crash
+    * between the renames leaves the aside for [[restoreAside]]. */
+  private[meta] def swapIn(staged: File, dst: File, aside: File): Unit = {
+    restoreAside(aside, dst)
+    if (dst.exists() && !dst.renameTo(aside)) {
+      throw new IOException(s"could not stage $dst aside for publish — " +
+        "rename failed; the store filesystem must support atomic rename")
+    }
+    if (!staged.renameTo(dst)) {
+      val restored = !aside.exists() || aside.renameTo(dst)
+      throw new IOException(s"could not publish $dst — rename failed" +
+        (if (restored) " (previous copy restored)"
+         else s" (previous copy preserved at $aside)"))
+    }
+    FileUtils.deleteQuietly(aside)
+  }
+
+  /** The one repair step: an `aside` whose `dst` is missing is the
+    * still-valid prior copy a crash left between [[swapIn]]'s renames —
+    * restore it; an aside whose replacement landed is garbage — drop
+    * it. */
+  private def restoreAside(aside: File, dst: File): Unit =
+    if (aside.exists()) {
+      if (dst.exists()) FileUtils.deleteQuietly(aside)
+      else if (!aside.renameTo(dst)) {
+        throw new IOException(s"could not restore $dst from its " +
+          s"crash-staged aside $aside — rename failed")
       }
+    }
+
+  /** Remove crashed-attempt `.tmp_` dirs and repair `.old_` asides
+    * ([[restoreAside]]) of an increment store. Safe concurrently with
+    * reads: dot-prefixed names are invisible to the increment globs. */
+  def sweepTemp(store: File): Unit = {
+    val dirs = Option(store.listFiles()).getOrElse(Array.empty)
+      .filter(_.isDirectory)
+    dirs.filter(_.getName.startsWith(".tmp_"))
+      .foreach(FileUtils.deleteQuietly)
+    dirs.filter(_.getName.startsWith(".old_")).foreach(aside =>
+      restoreAside(aside, new File(store, aside.getName.stripPrefix(".old_"))))
   }
 
   /** The `(a, b)` pairs of every `<prefix>_<a>_<b>` increment dir.

@@ -316,18 +316,14 @@ object Dedup {
     val pinned = docs.select(id.as("doc_id"), tokenSet.as("ws")).localCheckpoint()
     // The two halves are independent sinks of the same pinned increment:
     // run them as CONCURRENT jobs so the doc append back-fills the band
-    // append's task tail instead of waiting for it (the scheduler happily
-    // interleaves independent jobs; actions were only sequential because
-    // this thread called them sequentially). Ordering between the two
-    // never mattered — the absorb is durable only once BOTH complete, and
-    // a failure of either leaves the same half-absorbed state the old
+    // append's task tail instead of waiting for it. Ordering between the
+    // two never mattered — the absorb is durable only once BOTH complete,
+    // and a failure of either leaves the same half-absorbed state a
     // sequential order could.
-    val fBand = scala.concurrent.Future {
-      appendToBandStore(pinned, col("doc_id"), col("ws"), bandStore,
-        buckets, numPerms, bands)
-    }(scala.concurrent.ExecutionContext.global)
-    pinned.write.mode("append").format("parquet").saveAsTable(docStore)
-    scala.concurrent.Await.result(fBand, scala.concurrent.duration.Duration.Inf)
+    graft.Overlap.parJobs(
+      () => pinned.write.mode("append").format("parquet").saveAsTable(docStore),
+      () => appendToBandStore(pinned, col("doc_id"), col("ws"), bandStore,
+        buckets, numPerms, bands))
   }
 
   /**

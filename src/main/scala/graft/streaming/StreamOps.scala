@@ -481,24 +481,26 @@ object StreamOps {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           // the out append and the state rewrite both read only `kept`
-          // and target different sinks — run the append concurrently with
-          // the drank-collect + state write (guide §2.6). The commit
-          // ordering that matters is unchanged: the log append below
-          // still happens only after BOTH out and state are durable.
-          val fOut = scala.concurrent.Future {
-            kept.withColumn("batch_id", lit(batchId))
-              .write.mode("append").format("parquet").saveAsTable(outTable)
-          }(scala.concurrent.ExecutionContext.global)
-          val drank = kept.groupBy(group.as("g"))
-            .agg(sum(cost.cast("long")).as("c")).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          val newState = (consumed.keySet ++ drank.keySet).toSeq.sorted
-            .map(g => (g, consumed.getOrElse(g, 0L) + drank.getOrElse(g, 0L)))
-          s.createDataFrame(newState).toDF("g", "consumed")
-            .write.mode("overwrite").format("parquet").saveAsTable(stateTable)
-          run.foreach(_.consumed = newState.toMap)
-          scala.concurrent.Await.result(fOut,
-            scala.concurrent.duration.Duration.Inf)
+          // and target different sinks — run them concurrently. parJobs
+          // returns only once both have finished, so neither the
+          // unpersist below nor a replay of a failed batch races a write
+          // still landing, and the log append below still happens only
+          // after BOTH out and state are durable.
+          graft.Overlap.parJobs(
+            () => {
+              val drank = kept.groupBy(group.as("g"))
+                .agg(sum(cost.cast("long")).as("c")).collect()
+                .map(r => r.getString(0) -> r.getLong(1)).toMap
+              val newState = (consumed.keySet ++ drank.keySet).toSeq.sorted
+                .map(g =>
+                  (g, consumed.getOrElse(g, 0L) + drank.getOrElse(g, 0L)))
+              s.createDataFrame(newState).toDF("g", "consumed")
+                .write.mode("overwrite").format("parquet")
+                .saveAsTable(stateTable)
+              run.foreach(_.consumed = newState.toMap)
+            },
+            () => kept.withColumn("batch_id", lit(batchId))
+              .write.mode("append").format("parquet").saveAsTable(outTable))
         } finally kept.unpersist()
       }
       s.createDataFrame(Seq(Tuple1(batchId))).toDF("batch_id")

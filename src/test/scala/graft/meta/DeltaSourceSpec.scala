@@ -851,6 +851,38 @@ class DeltaSourceSpec extends SparkSpec {
     assert(rows("f3.parquet").getAs[Long]("dv_cardinality") === 0L)
   }
 
+  test("live store comes back after a crash between the publish renames") {
+    val d = Files.createTempDirectory("graft_delta_crash").toString + "/tbl"
+    DeltaMeta.writeFixtureTable(spark, d, docs)
+    val log = new java.io.File(d, "_delta_log")
+    val held = Files.createTempDirectory("graft_delta_crash_held").toString
+    log.listFiles().filter(f => DeltaMeta.segmentVersion(f.getName)
+      .exists(s => s._1 >= 3L && s._2 == "commit")).foreach { f =>
+      java.nio.file.Files.move(f.toPath,
+        new java.io.File(held, f.getName).toPath)
+    }
+    val store = Files.createTempDirectory("graft_delta_crash_s")
+      .toString + "/store"
+    val ckpt = Files.createTempDirectory("graft_delta_crash_c").toString
+    DeltaMeta.maintainLiveStore(spark, d, store, ckpt)
+    // the state a crash between the store's two publish renames leaves:
+    // the previous store staged aside, no store in place
+    assert(new java.io.File(store).renameTo(new java.io.File(store + "_old")))
+    new java.io.File(held).listFiles().foreach { f =>
+      val dst = new java.io.File(log, f.getName)
+      java.nio.file.Files.move(f.toPath, dst.toPath)
+      dst.setLastModified(System.currentTimeMillis())
+    }
+    DeltaMeta.maintainLiveStore(spark, d, store, ckpt)
+    val live = DeltaMeta.readLiveStore(spark, store).select("path", "version")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batchAnswer = DeltaMeta.snapshotFiles(spark, d)
+      .select("path", "version").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(live === batchAnswer)
+    assert(!new java.io.File(store + "_old").exists())
+  }
+
   test("commit stream: new log segments arrive as micro-batches") {
     import org.apache.spark.sql.streaming.Trigger
     val d = Files.createTempDirectory("graft_delta_stream").toString + "/tbl"
@@ -1076,30 +1108,6 @@ class DeltaSourceSpec extends SparkSpec {
       txt.replace("\"cardinality\":3", "\"cardinality\":4").getBytes("UTF-8"))
     val e = intercept[Exception](DeltaMeta.deletedPositions(spark, d).collect())
     assert(causeMessages(e).contains("refusing to miscount"))
-  }
-
-  test("store publish keeps old or new store across rename failures") {
-    val base = Files.createTempDirectory("graft_publish").toString
-    val store = base + "/store"
-    def writeDir(dir: String, tag: String): Unit = {
-      new java.io.File(dir).mkdirs()
-      java.nio.file.Files.write(new java.io.File(dir, "data").toPath,
-        tag.getBytes("UTF-8"))
-    }
-    def tagOf(dir: String): String = new String(java.nio.file.Files
-      .readAllBytes(new java.io.File(dir, "data").toPath), "UTF-8")
-    // normal publish: _next replaces the store, no _old residue
-    writeDir(store, "v1")
-    writeDir(store + "_next", "v2")
-    DeltaMeta.publishStore(store)
-    assert(tagOf(store) === "v2")
-    assert(!new java.io.File(store + "_old").exists())
-    assert(!new java.io.File(store + "_next").exists())
-    // failed publish (no _next staged): the PREVIOUS store survives —
-    // the delete-then-rename shape would have destroyed it first
-    val e = intercept[java.io.IOException](DeltaMeta.publishStore(store))
-    assert(e.getMessage.contains("could not publish"))
-    assert(tagOf(store) === "v2")
   }
 
   test("restore plan: re-add what left, remove what arrived, no-op refuses") {

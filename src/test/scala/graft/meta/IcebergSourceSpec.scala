@@ -312,6 +312,21 @@ class IcebergSourceSpec extends SparkSpec {
     assert(got === Set("data/f0.parquet", "data/f1.parquet", "data/f2.parquet"))
   }
 
+  test("current store comes back after a crash between the publish renames") {
+    val d = Files.createTempDirectory("graft_iceberg_crash").toString + "/tbl"
+    IcebergMeta.writeFixtureTable(spark, d, docs)
+    val store = Files.createTempDirectory("graft_ice_crash_s")
+      .toString + "/store"
+    val ckpt = Files.createTempDirectory("graft_ice_crash_c").toString
+    IcebergMeta.maintainCurrentStore(spark, d, store, ckpt)
+    // the previous store staged aside, no store in place; the next pass
+    // has no new metadata, so only the repair can bring the store back
+    assert(new java.io.File(store).renameTo(new java.io.File(store + "_old")))
+    IcebergMeta.maintainCurrentStore(spark, d, store, ckpt)
+    assert(IcebergMeta.readCurrentStore(spark, store).count() === 7L)
+    assert(!new java.io.File(store + "_old").exists())
+  }
+
   test("commit stream: new metadata versions arrive as micro-batches") {
     import org.apache.spark.sql.streaming.Trigger
     val d = Files.createTempDirectory("graft_iceberg_stream").toString + "/tbl"

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Crash-safe streaming-store increments: temp-dir + rename publishing,
-  * strict name parsing, and the changelog store's per-snapshot
-  * attribution across a multi-snapshot micro-batch jump. */
+/** Crash-safe streaming-store publishing: temp-dir + rename increments,
+  * the whole-store publish, strict name parsing, and the changelog
+  * store's per-snapshot attribution across a multi-snapshot micro-batch
+  * jump. */
 class StoreIOSpec extends SparkSpec {
 
   private lazy val docs =
@@ -60,6 +61,27 @@ class StoreIOSpec extends SparkSpec {
     aside2.mkdirs()
     StoreIO.sweepTemp(store)
     assert(!aside2.exists() && dst.exists())
+  }
+
+  test("store publish keeps old or new store across rename failures") {
+    import spark.implicits._
+    val store = new java.io.File(
+      Files.createTempDirectory("graft_publish").toFile, "store")
+    def rows(): Long = spark.read.parquet(store.getPath).count()
+    // normal publish: _next replaces the store, no _next/_old residue
+    StoreIO.publishStore(Seq(1L).toDF("v"), store)
+    StoreIO.publishStore(Seq(2L, 3L).toDF("v"), store)
+    assert(rows() === 2L)
+    assert(!new java.io.File(store.getPath + "_old").exists())
+    assert(!new java.io.File(store.getPath + "_next").exists())
+    // failed publish (the staged copy cannot be renamed in): the
+    // PREVIOUS store survives — a delete-then-rename shape would have
+    // destroyed it first
+    val e = intercept[java.io.IOException](StoreIO.swapIn(
+      new java.io.File(store.getPath + "_next"), store,
+      new java.io.File(store.getPath + "_old")))
+    assert(e.getMessage.contains("could not publish"))
+    assert(rows() === 2L)
   }
 
   test("garbled increment names refuse loudly, never mis-read as state") {
