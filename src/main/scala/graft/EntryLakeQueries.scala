@@ -1,29 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.meta.{AvroMeta, DeltaMeta, FooterEdit, HudiMeta, IcebergMeta, MetaPrune, MetaValues, OrcPrune}
-import graft.ops.{Bpe, Bucketing, Clustering, ConnectedComponents, Decontam, Dedup, Drift, Layout, Lines, MediaRecord, Multimodal, Packing, PageRank, Profile, RangeJoin, Relevance, Sampling, Similarity, Sketches, Skew, SparseSim, SubstrSearch, TemporalJoin, TextOps}
+import graft.meta.{DeltaMeta, HudiMeta, IcebergMeta, MetaValues}
 import org.apache.spark.sql.graft.ColumnBridge
 
-/**
- * Driver contract: the full query inventory with DuckDB oracles.
- *
- * Conventions that keep the oracle hash-compare deterministic:
- *  - every computed column is aliased identically in Spark and SQL;
- *  - integer outputs are cast to BIGINT on both sides;
- *  - double aggregates go through exact DECIMAL sums (order-independent)
- *    and only then cast to DOUBLE, so partition order cannot change a bit;
- *  - ANN/similarity queries emit integer ranks, not raw float scores;
- *  - all ratio-style doubles are exact small-integer rationals, identical
- *    in any IEEE-754 engine.
- *
- * The oracle SQL for metadata queries uses DuckDB's
- * `parquet_metadata`/`parquet_file_metadata`/`read_blob` table functions on
- * the sf0.01 files (the scale the driver verifies at).
- */
 /** Query + oracle inventory — table-format tiers (Delta + Iceberg): snapshots, replay,
   * time travel, deletes, audits, live stores.
   * Assembled (disjointly) into the driver contract by
@@ -43,13 +25,7 @@ private[graft] object EntryLakeQueries {
     // 32/64-bit modular arithmetic per physical type) roll per-page sums
     // up to the engine-independent column sum.
     "meta_delta_values" -> ((s, dir) => {
-      val out = "/tmp/graft_deltavals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      s.range(0, 20000, 1, 1)
-        .write.mode("overwrite")
-        .option("parquet.writer.version", "v2")
-        .option("parquet.page.row.count.limit", "1000")
-        .parquet(out)
+      val out = Fixtures.deltavals.at(s, dir)
       val pages = meta(s, out, "page", Map("pagecontent" -> "true"))
       val codecs = meta(s, out, "column")
         .select(col("filepath"), col("row_group_id"), col("column_id"),
@@ -83,33 +59,7 @@ private[graft] object EntryLakeQueries {
     // recomputes the three (files, rows) pairs in closed form from the
     // source data and the fixture's parity splits.
     "meta_lake_census" -> ((s, dir) => {
-      val out = "/tmp/graft_lakecensus_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val outF = new java.io.File(out)
-      if (outF.exists()) {
-        org.apache.commons.io.FileUtils.deleteQuietly(outF)
-      }
-      outF.mkdirs()
-      val docs = input(s, dir, "documents")
-        .select(col("doc_id"), col("lang"))
-      // parquet third: doc_id % 3 == 0, one file copied into the mix
-      docs.filter(col("doc_id") % 3 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(out + "_pq")
-      // orc third: % 3 == 1
-      docs.filter(col("doc_id") % 3 === 1).coalesce(1)
-        .write.mode("overwrite").orc(out + "_orc")
-      for ((src, name) <- Seq(out + "_pq" -> "part.parquet",
-          out + "_orc" -> "part.orc")) {
-        val part = new java.io.File(src).listFiles()
-          .filter(f => f.getName.endsWith(".parquet") || f.getName.endsWith(".orc")).head
-        java.nio.file.Files.copy(part.toPath,
-          new java.io.File(outF, name).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      // avro third: % 3 == 2, via avro's own writer
-      val avroRows = docs.filter(col("doc_id") % 3 === 2)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sortBy(_._1)
-      AvroMeta.writeFixture(new java.io.File(outF, "part.avro"), avroRows)
+      val out = Fixtures.lakecensus.at(s, dir)
       MetaValues.lakeCensus(s, out)
         .select(col("format"), col("n_files"), col("total_rows"))
     }),
@@ -124,11 +74,7 @@ private[graft] object EntryLakeQueries {
     // the same JSON (read_json_auto) and checkpoint (read_parquet)
     // independently.
     "meta_delta_snapshot" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       meta(s, out, "snapshot", Map("source" -> "delta"))
         .select(col("version"), col("kind"), col("n_add"), col("n_remove"),
           col("operation"), col("op_timestamp"))
@@ -145,11 +91,7 @@ private[graft] object EntryLakeQueries {
     // oracle replays the same log in DuckDB SQL (arg_max over the
     // unioned actions) and reads the same footers.
     "meta_delta_live" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       val live = DeltaMeta.snapshotFiles(s, out)
         .select(col("abs_path"), col("num_records"))
       val footers = meta(s, out, "file", Map("source" -> "parquet"))
@@ -175,11 +117,7 @@ private[graft] object EntryLakeQueries {
     // is protected by the window. Oracle: DuckDB replays the same
     // tombstones and reads the same footers.
     "meta_delta_vacuum" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       DeltaMeta.vacuumCandidates(s, out, 1700000010000L, 7500L)
         .select(col("path"), col("deleted_at"), col("age_ms"), col("num_rows"))
     }),
@@ -191,11 +129,7 @@ private[graft] object EntryLakeQueries {
     // advances 10 -> 11 at v3). Oracle: DuckDB reads the same txn
     // actions and applies the same rule.
     "meta_delta_txn" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       DeltaMeta.latestTransactions(s, out)
     }),
 
@@ -206,11 +140,7 @@ private[graft] object EntryLakeQueries {
     // fixture evolves doc_id,lang -> +quality at v4). Oracle: DuckDB
     // parses the same schemaString JSON independently.
     "meta_delta_schema" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       DeltaMeta.schemaHistory(s, out)
     }),
 
@@ -221,11 +151,7 @@ private[graft] object EntryLakeQueries {
     // +quality column. Oracle: DuckDB replays the live set, reads the
     // same footers via parquet_schema, and diffs the same field lists.
     "meta_delta_conformance" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       DeltaMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
           col("n_declared"), col("n_present"), col("missing_csv"))
@@ -240,9 +166,7 @@ private[graft] object EntryLakeQueries {
     // DuckDB replays the same protocol actions and recomputes the same
     // verdict with list_has_all.
     "meta_delta_protocol" -> ((s, dir) => {
-      val out = "/tmp/graft_deltaproto_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltaproto.at(s, dir)
       DeltaMeta.protocolInfo(s, out)
         .select(col("min_reader_version"), col("min_writer_version"),
           array_join(col("reader_features"), ",").as("reader_features_csv"),
@@ -258,8 +182,7 @@ private[graft] object EntryLakeQueries {
     // of the same log — the streaming path and the cross-engine batch
     // path answer identically.
     "stream_delta_live" -> ((s, dir) => {
-      val out = "/tmp/graft_deltastream_" + sfx(dir)
-      DeltaMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltastream.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_deltastore_",
         "graft_deltastoreck_")
       DeltaMeta.maintainLiveStore(s, out, store, ckpt)
@@ -282,13 +205,8 @@ private[graft] object EntryLakeQueries {
     // row by replaying the same JSON in DuckDB and both disk sides from
     // the same footers.
     "meta_table_census" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val d = "/tmp/graft_deltadv_" + sfx
-      val i = "/tmp/graft_iceberg_" + sfx
-      DeltaMeta.writeDvFixtureTable(s, d, input(s, dir, "documents"))
-      fixtureOnce(i) {
-        IcebergMeta.writeFixtureTable(s, i, input(s, dir, "documents"))
-      }
+      val d = Fixtures.deltadv.at(s, dir)
+      val i = Fixtures.iceberg.at(s, dir)
       MetaValues.tableCensus(s, d).unionByName(MetaValues.tableCensus(s, i))
     }),
 
@@ -302,10 +220,7 @@ private[graft] object EntryLakeQueries {
     // spec pins files=2/10 in the plan). The oracle replays the same
     // JSON partitionValues in DuckDB and reads the same pruned footers.
     "meta_delta_partition_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_deltapart_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writePartitionedFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltapart.at(s, dir)
       val live = DeltaMeta.snapshotFiles(s, out)
       val pruned = live
         .filter(element_at(col("partition_values"), "lang") === "zh")
@@ -328,11 +243,7 @@ private[graft] object EntryLakeQueries {
     // evidence path than the checkpoint+tail plan), so checkpoint and
     // log must tell the same story at every version.
     "meta_delta_travel" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       (0L to 4L).map { v =>
         DeltaMeta.snapshotFilesAt(s, out, Some(v))
           .agg(
@@ -349,11 +260,7 @@ private[graft] object EntryLakeQueries {
     // the version RESOLUTION itself is cross-engine, not just the
     // replay.
     "meta_delta_time_travel" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       val ts0 = 1700000000000L
       Seq(500L, 2500L, 99999L).map { off =>
         val v = DeltaMeta.versionAt(s, out, ts0 + off)
@@ -376,11 +283,7 @@ private[graft] object EntryLakeQueries {
     // cardinality. The oracle replays the same log in DuckDB with the
     // same composite-rank arg_max.
     "meta_delta_dv" -> ((s, dir) => {
-      val out = "/tmp/graft_deltadv_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.deltadv.at(s, dir)
       DeltaMeta.snapshotFiles(s, out)
         .agg(
           count(lit(1)).cast("long").as("n_live"),
@@ -402,10 +305,7 @@ private[graft] object EntryLakeQueries {
     // + the surviving JSON tail and applies the same composite-rank
     // arg_max replay.
     "meta_delta_v2ckpt" -> ((s, dir) => {
-      val out = "/tmp/graft_deltav2_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeV2CheckpointFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltav2.at(s, dir)
       DeltaMeta.snapshotFiles(s, out)
         .select(col("path"), col("version"), col("num_records"))
     }),
@@ -420,10 +320,7 @@ private[graft] object EntryLakeQueries {
     // sidecars + JSON tail (the manifest's lines carry no file actions
     // and wash out of its replay) with the composite-rank arg_max.
     "meta_delta_v2ckpt_json" -> ((s, dir) => {
-      val out = "/tmp/graft_deltav2j_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeV2JsonCheckpointFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltav2j.at(s, dir)
       DeltaMeta.snapshotFiles(s, out)
         .select(col("path"), col("version"), col("num_records"))
     }),
@@ -436,10 +333,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB reads the same parts by glob + the surviving JSON
     // tail and applies the same composite-rank arg_max replay.
     "meta_delta_multickpt" -> ((s, dir) => {
-      val out = "/tmp/graft_deltamp_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeMultipartCheckpointFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltamp.at(s, dir)
       DeltaMeta.snapshotFiles(s, out)
         .select(col("path"), col("version"), col("num_records"))
     }),
@@ -454,10 +348,7 @@ private[graft] object EntryLakeQueries {
     // same .crc JSONs and replays the same commits with the same
     // composite-rank arg_max.
     "meta_delta_crc_audit" -> ((s, dir) => {
-      val out = "/tmp/graft_deltacrc_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeCrcFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltacrc.at(s, dir)
       DeltaMeta.crcAudit(s, out)
     }),
 
@@ -470,10 +361,7 @@ private[graft] object EntryLakeQueries {
     // SAME deleted doc_ids closed-form: DuckDB ranks rows by doc_id and
     // picks the planted positions.
     "meta_delta_dv_rows" -> ((s, dir) => {
-      val out = "/tmp/graft_deltadvb_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeDvBitmapFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltadvb.at(s, dir)
       val pos = DeltaMeta.deletedPositions(s, out)
       val rows = s.read.parquet(out + "/f0.parquet", out + "/f1.parquet")
         .select(col("doc_id"),
@@ -495,12 +383,7 @@ private[graft] object EntryLakeQueries {
     // DuckDB parses the same schemaString mapping and diffs the same
     // parquet_schema footers.
     "meta_delta_colmap" -> ((s, dir) => {
-      val out = "/tmp/graft_deltacm_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeColumnMappedFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.deltacm.at(s, dir)
       DeltaMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
           col("n_declared"), col("n_present"), col("missing_csv"))
@@ -514,10 +397,7 @@ private[graft] object EntryLakeQueries {
     // quality (id 3) no file carries. Oracle: DuckDB reads the SAME
     // field ids from parquet_schema and diffs the same declarations.
     "meta_delta_colmap_id" -> ((s, dir) => {
-      val out = "/tmp/graft_deltacmid_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeColumnMappedIdFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltacmid.at(s, dir)
       DeltaMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
           col("n_declared"), col("n_present"), col("missing_csv"))
@@ -531,12 +411,7 @@ private[graft] object EntryLakeQueries {
     // NOTHING). Oracle: DuckDB derives the same physical name from the
     // schemaString and probes the same add actions dynamically.
     "meta_delta_colmap_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_deltacm_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeColumnMappedFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.deltacm.at(s, dir)
       val (_, mapping, _) = DeltaMeta.columnMappingInfo(s, out)
       val live = DeltaMeta.snapshotFiles(s, out)
       val pruned = live.filter(
@@ -554,11 +429,7 @@ private[graft] object EntryLakeQueries {
     // cross-engine check: DuckDB parses the same metadata JSON
     // independently (read_json_auto + unnest of the snapshots list).
     "meta_iceberg_snapshot" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       meta(s, out, "snapshot", Map("source" -> "iceberg"))
         .select(col("snapshot_id"), col("timestamp_ms"), col("operation"),
           col("is_current"), col("format_version"))
@@ -575,11 +446,7 @@ private[graft] object EntryLakeQueries {
     // and replays the fixture's manifest contract in closed form — the
     // manifest record counts must equal the files' own footer rows.
     "meta_iceberg_live" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       val entries = IcebergMeta.currentFiles(s, out)
       val live = entries
         .filter(col("status") =!= 2 && col("content") === 0)
@@ -612,12 +479,7 @@ private[graft] object EntryLakeQueries {
     // of only those files. Oracle: DuckDB reads the same pruned
     // partition directory's footers; membership is the fixture contract.
     "meta_iceberg_partition_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icepart_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writePartitionedFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icepart.at(s, dir)
       val files = IcebergMeta.currentFiles(s, out)
       val pruned = files
         .filter(element_at(col("partition_values"), "lang") === "zh")
@@ -640,9 +502,7 @@ private[graft] object EntryLakeQueries {
     // plants one stray parquet + one junk blob; the oracle reads the
     // stray's footer in DuckDB, membership is the fixture contract.
     "meta_iceberg_orphans" -> ((s, dir) => {
-      val out = "/tmp/graft_iceorph_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
+      val out = Fixtures.iceorph.at(s, dir)
       val tmp = out + "/data/stray_tmp"
       input(s, dir, "documents").limit(7)
         .select(col("doc_id")).coalesce(1)
@@ -666,11 +526,7 @@ private[graft] object EntryLakeQueries {
     // flags the live one) — the iceberg counterpart of
     // meta_delta_schema. Oracle: DuckDB unnests the same JSON.
     "meta_iceberg_schema" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       IcebergMeta.schemaHistory(s, out)
     }),
 
@@ -691,23 +547,14 @@ private[graft] object EntryLakeQueries {
     // DuckDB unnests the same metadata JSON, filtering the gap set by
     // the same initial-default rule.
     "meta_iceberg_defaults" -> ((s, dir) => {
-      val out = "/tmp/graft_icebergv3d_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeV3DefaultsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icebergv3d.at(s, dir)
       IcebergMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
           col("n_declared"), col("n_present"), col("missing_csv"))
     }),
 
     "meta_iceberg_conformance" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       IcebergMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
           col("n_declared"), col("n_present"), col("missing_csv"))
@@ -721,11 +568,7 @@ private[graft] object EntryLakeQueries {
     // parquet and joins the same file with file_row_number=true — no
     // ordering assumption on either side.
     "meta_iceberg_delete_rows" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       val pos = IcebergMeta.positionDeleteRows(s, out)
       val rows = s.read.parquet(out + "/data/f0.parquet")
         .select(col("doc_id"),
@@ -749,9 +592,7 @@ private[graft] object EntryLakeQueries {
     // the oracle recomputes the SAME deleted doc_ids closed-form from
     // the planted positions.
     "meta_iceberg_dv_rows" -> ((s, dir) => {
-      val out = "/tmp/graft_icedv_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeDvFixtureTable(s, out, input(s, dir, "documents"))
+      val out = Fixtures.icedv.at(s, dir)
       val pos = IcebergMeta.positionDeleteRows(s, out)
       val rows = s.read.parquet(out + "/data/f0.parquet", out + "/data/f1.parquet")
         .select(col("doc_id"),
@@ -774,11 +615,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB replays the same live set from the log and runs
     // the same window arithmetic.
     "compaction_plan_delta" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       val files = DeltaMeta.snapshotFiles(s, out).select(
         col("path"), col("size"),
         array_join(array_sort(transform(map_entries(col("partition_values")),
@@ -797,12 +634,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB rebuilds the same file inventory from the data
     // directory itself (read_blob sizes) and runs the same window.
     "compaction_plan_iceberg" -> ((s, dir) => {
-      val out = "/tmp/graft_icepart_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writePartitionedFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icepart.at(s, dir)
       val files = IcebergMeta.currentFiles(s, out)
         .filter(col("status") =!= 2 && col("content") === 0)
         .select(
@@ -823,10 +655,7 @@ private[graft] object EntryLakeQueries {
     // a sound pruner reads it. Oracle: DuckDB parses the same stats
     // JSON from the same log and applies the same interval test.
     "meta_delta_stats_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_deltasp_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeStatsPruneFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltasp.at(s, dir)
       DeltaMeta.statsPrune(s, out, "doc_id", 100L, 299L)
     }),
 
@@ -839,10 +668,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB applies the same coalesce(ict, ts) max-version
     // rule and replays the resolved snapshots.
     "meta_delta_ict" -> ((s, dir) => {
-      val out = "/tmp/graft_deltaict_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeIctFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltaict.at(s, dir)
       val ts0 = 1700000000000L
       Seq(5000L, 15000L, 99999L).map { off =>
         val v = DeltaMeta.versionAt(s, out, ts0 + off)
@@ -862,10 +688,7 @@ private[graft] object EntryLakeQueries {
     // delta.clustering) rather than vanishing. Oracle: DuckDB replays
     // the same actions with the same version arg_max.
     "meta_delta_domains" -> ((s, dir) => {
-      val out = "/tmp/graft_deltadm_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeDomainMetadataFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltadm.at(s, dir)
       DeltaMeta.domainMetadataReport(s, out)
     }),
 
@@ -884,12 +707,7 @@ private[graft] object EntryLakeQueries {
     // The raw inputs both engines read are a sibling query,
     // meta_iceberg_summary_inputs.
     "meta_iceberg_summary_audit2" -> ((s, dir) => {
-      val out = "/tmp/graft_icesum2_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeSummaryFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icesum2.at(s, dir)
       IcebergMeta.snapshotSummaryAuditCells(s, out)
     }),
 
@@ -905,12 +723,7 @@ private[graft] object EntryLakeQueries {
     // the same metadata JSON; the avro manifest-list side is the
     // fixture's writer contract (DuckDB cannot read avro).
     "meta_iceberg_summary_inputs" -> ((s, dir) => {
-      val out = "/tmp/graft_icesum2_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeSummaryFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icesum2.at(s, dir)
       IcebergMeta.summaryInputsReport(s, out)
     }),
 
@@ -925,10 +738,7 @@ private[graft] object EntryLakeQueries {
     // count over f0..f4) — a real cross-engine check of the binary
     // sketch decode.
     "meta_iceberg_ndv_audit" -> ((s, dir) => {
-      val out = "/tmp/graft_icendv_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeNdvFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icendv.at(s, dir)
       IcebergMeta.ndvAudit(s, out)
     }),
 
@@ -941,11 +751,7 @@ private[graft] object EntryLakeQueries {
     // audit; the codec layer must be invisible to the result. Oracle:
     // identical rule on the compressed fixture's path.
     "meta_iceberg_ndv_zstd" -> ((s, dir) => {
-      val out = "/tmp/graft_icendvz_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeNdvFixtureTable(
-        s, out, input(s, dir, "documents"),
-        blobCodec = Some("zstd"), lz4Footer = true)
+      val out = Fixtures.icendvz.at(s, dir)
       IcebergMeta.ndvAudit(s, out)
     }),
 
@@ -955,10 +761,7 @@ private[graft] object EntryLakeQueries {
     // that fails rollback mid-walk). Oracle: DuckDB parses the same
     // metadata-log and derives existence from a glob listing.
     "meta_iceberg_metadata_log" -> ((s, dir) => {
-      val out = "/tmp/graft_icemlog_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeMetadataLogFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icemlog.at(s, dir)
       IcebergMeta.metadataLogReport(s, out)
     }),
 
@@ -970,11 +773,7 @@ private[graft] object EntryLakeQueries {
     // version. Oracle: DuckDB reads the same pointer JSON and
     // recomputes everything from a glob listing of the same log.
     "meta_delta_last_ckpt" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       DeltaMeta.lastCheckpointAudit(s, out)
     }),
 
@@ -986,12 +785,7 @@ private[graft] object EntryLakeQueries {
     // expired id. Oracle: DuckDB parses the same refs map (json_each)
     // and the same snapshots list.
     "meta_iceberg_refs" -> ((s, dir) => {
-      val out = "/tmp/graft_icerefs_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) { // shared with meta_iceberg_ref_changelog
-        IcebergMeta.writeRefsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icerefs.at(s, dir)
       IcebergMeta.refsReport(s, out)
     }),
 
@@ -1003,12 +797,7 @@ private[graft] object EntryLakeQueries {
     // id-anchored (1,2] feed on this fixture. Oracle: DuckDB reads
     // the same files per the writer contract.
     "meta_iceberg_ref_changelog" -> ((s, dir) => {
-      val out = "/tmp/graft_icerefs_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeRefsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icerefs.at(s, dir)
       IcebergMeta.changelogScanRef(s, out, "v1", "main")
         .select(col("doc_id"), col("lang"), col("_change_type"))
     }),
@@ -1022,10 +811,7 @@ private[graft] object EntryLakeQueries {
     // the actual side from the data files themselves
     // (parquet_file_metadata rows + read_blob sizes).
     "meta_iceberg_partition_stats" -> ((s, dir) => {
-      val out = "/tmp/graft_icepstats_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writePartitionStatsFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icepstats.at(s, dir)
       IcebergMeta.partitionStatsAudit(s, out)
     }),
 
@@ -1038,9 +824,7 @@ private[graft] object EntryLakeQueries {
     // Puffin footer from raw bytes (read_blob → LE payload-size word →
     // unhex → JSON) and joins the same metadata JSON's declarations.
     "meta_iceberg_puffin_stats" -> ((s, dir) => {
-      val out = "/tmp/graft_icestats_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeStatsFixtureTable(s, out, input(s, dir, "documents"))
+      val out = Fixtures.icestats.at(s, dir)
       IcebergMeta.statisticsReport(s, out)
     }),
 
@@ -1050,8 +834,7 @@ private[graft] object EntryLakeQueries {
     // when a NEW metadata version arrives; the store's census must
     // equal DuckDB's independent read of the same data-file footers.
     "stream_iceberg_live" -> ((s, dir) => {
-      val out = "/tmp/graft_icestream_" + sfx(dir)
-      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
+      val out = Fixtures.icestream.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_icestore_",
         "graft_icestoreck_")
       IcebergMeta.maintainCurrentStore(s, out, store, ckpt)
@@ -1075,10 +858,9 @@ private[graft] object EntryLakeQueries {
     // by its snapshot (idempotent overwrite). Oracle: closed-form per
     // increment from the data files' own footers.
     "stream_iceberg_appends" -> ((s, dir) => {
-      val out = "/tmp/graft_iceapp_" + sfx(dir)
+      val out = Fixtures.iceapp.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_iceappstore_",
         "graft_iceappck_")
-      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       // pass A: rewind the table to current-snapshot 1 (v1 only)
       val v1 = new java.io.File(out, "metadata/v1.metadata.json")
       val full = new String(java.nio.file.Files.readAllBytes(v1.toPath),
@@ -1111,12 +893,7 @@ private[graft] object EntryLakeQueries {
     // files' distinct keys. Oracle: DuckDB reads the SAME delete
     // parquets and data files and joins IS NOT DISTINCT FROM.
     "meta_iceberg_eq_rows" -> ((s, dir) => {
-      val out = "/tmp/graft_iceeq_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeEqDeleteFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceeq.at(s, dir)
       IcebergMeta.equalityDeleteRows(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("eq_cols"), col("key_csv"))
@@ -1131,10 +908,7 @@ private[graft] object EntryLakeQueries {
     // so f0/f1 flag as backfill candidates. Oracle: DuckDB derives the
     // default-spec-id and spec renderings from the SAME metadata JSON.
     "meta_iceberg_spec_audit" -> ((s, dir) => {
-      val out = "/tmp/graft_icespec_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeSpecEvolutionFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icespec.at(s, dir)
       IcebergMeta.partitionSpecAudit(s, out)
         .select(regexp_extract(col("file_path"), "([^/]+)$", 1).as("file"),
           col("spec_id"), col("spec_csv"), col("is_default"))
@@ -1147,11 +921,7 @@ private[graft] object EntryLakeQueries {
     // delete manifests pack separately). Oracle: closed-form counts
     // from the writer contract + read_blob manifest sizes.
     "meta_iceberg_manifest_health" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       IcebergMeta.manifestHealthReport(s, out)
     }),
 
@@ -1163,10 +933,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: closed-form from the writer contract with real byte
     // sizes via read_blob.
     "meta_iceberg_expiry" -> ((s, dir) => {
-      val out = "/tmp/graft_icecomp_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeCompactedFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icecomp.at(s, dir)
       IcebergMeta.expiryPlan(s, out, 1700000000500L)
         .select(col("kind"),
           regexp_extract(col("object"), "([^/]+)$", 1).as("object"),
@@ -1181,10 +948,7 @@ private[graft] object EntryLakeQueries {
     // (manifest list, manifest, data file) is reclaimed. Oracle:
     // closed-form from the writer contract with read_blob sizes.
     "meta_iceberg_expiry_refs" -> ((s, dir) => {
-      val out = "/tmp/graft_icexpr_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeExpiryRefsFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icexpr.at(s, dir)
       IcebergMeta.expiryPlan(s, out, 1700000002500L)
         .select(col("kind"),
           regexp_extract(col("object"), "([^/]+)$", 1).as("object"),
@@ -1198,10 +962,7 @@ private[graft] object EntryLakeQueries {
     // a puffin to the surviving snap 2 (must not). Oracle: the expiry
     // closed form plus the declared stats entries from the same JSON.
     "meta_iceberg_expiry_stats" -> ((s, dir) => {
-      val out = "/tmp/graft_icexps_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeExpiryStatsFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icexps.at(s, dir)
       IcebergMeta.expiryPlan(s, out, 1700000000500L)
         .select(col("kind"),
           regexp_extract(col("object"), "([^/]+)$", 1).as("object"),
@@ -1214,10 +975,7 @@ private[graft] object EntryLakeQueries {
     // both listed=false and monotone=false must surface. Oracle:
     // DuckDB parses the same snapshot-log with the same window.
     "meta_iceberg_snapshot_log" -> ((s, dir) => {
-      val out = "/tmp/graft_icesnlog_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeSnapshotLogFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icesnlog.at(s, dir)
       IcebergMeta.snapshotLogReport(s, out)
     }),
 
@@ -1227,10 +985,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: writer-contract file sets per ref, rows from the files'
     // own footers.
     "meta_iceberg_ref_read" -> ((s, dir) => {
-      val out = "/tmp/graft_icerefrd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeRefsFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icerefrd.at(s, dir)
       def one(ref: String) = IcebergMeta.filesAtRef(s, out, ref)
         .filter(col("status") =!= 2 && col("content") === 0)
         .select(lit(ref).as("ref"),
@@ -1248,11 +1003,7 @@ private[graft] object EntryLakeQueries {
     // same files (position deletes = f0's positions 0,1 per the
     // writer contract; removal deletes = all of f5).
     "meta_iceberg_changelog" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       IcebergMeta.changelogScan(s, out, 1L, 2L)
         .select(col("doc_id"), col("lang"), col("_change_type"))
     }),
@@ -1264,10 +1015,9 @@ private[graft] object EntryLakeQueries {
     // two positions + all of the removed f5 as deletes). Oracle:
     // the batch changelog rule, per snapshot, on this fixture's path.
     "stream_iceberg_changelog" -> ((s, dir) => {
-      val out = "/tmp/graft_icecl_" + sfx(dir)
+      val out = Fixtures.icecl.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_iceclstore_",
         "graft_iceclck_")
-      IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
       // pass A: rewind the table to current-snapshot 1 (v1 only)
       val v1 = new java.io.File(out, "metadata/v1.metadata.json")
       val full = new String(java.nio.file.Files.readAllBytes(v1.toPath),
@@ -1297,12 +1047,7 @@ private[graft] object EntryLakeQueries {
     // survives the strictly-less scope and its rows are the inserts.
     // Oracle: DuckDB applies the same keys with IS NOT DISTINCT FROM.
     "meta_iceberg_changelog_eq" -> ((s, dir) => {
-      val out = "/tmp/graft_iceeq_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeEqDeleteFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceeq.at(s, dir)
       IcebergMeta.changelogScan(s, out, 1L, 2L)
         .select(col("doc_id"), col("lang"), col("_change_type"))
     }),
@@ -1316,10 +1061,7 @@ private[graft] object EntryLakeQueries {
     // selects the same file positions (the planted vectors are the
     // writer contract).
     "meta_iceberg_changelog_dv" -> ((s, dir) => {
-      val out = "/tmp/graft_icedvcl_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeDvChangelogFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icedvcl.at(s, dir)
       IcebergMeta.changelogScan(s, out, 1L, 2L)
         .withColumn("rng", lit("1-2"))
         .unionByName(IcebergMeta.changelogScan(s, out, 2L, 3L)
@@ -1336,12 +1078,7 @@ private[graft] object EntryLakeQueries {
     // per-snapshot incremental changelog would. Oracle: DuckDB reads
     // the same files per the writer contract.
     "meta_iceberg_changelog_transient" -> ((s, dir) => {
-      val out = "/tmp/graft_icetrans_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeTransientFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icetrans.at(s, dir)
       IcebergMeta.changelogScan(s, out, 1L, 3L)
         .select(col("doc_id"), col("lang"), col("_change_type"))
     }),
@@ -1354,11 +1091,7 @@ private[graft] object EntryLakeQueries {
     // would resurrect rows). Oracle: closed-form from the writer
     // contract, appended data files' rows from their own footers.
     "meta_iceberg_incremental" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       IcebergMeta.appendedFiles(s, out, 1L, 2L)
         .select(regexp_extract(col("file_path"), "([^/]+)$", 1).as("file"),
           col("content").cast("int").as("content"), col("record_count"))
@@ -1371,9 +1104,7 @@ private[graft] object EntryLakeQueries {
     // commit written late (young → the AGE gate keeps it). Oracle:
     // closed-form ages from the planted mtimes + read_blob sizes.
     "meta_delta_log_cleanup" -> ((s, dir) => {
-      val out = "/tmp/graft_deltaclean_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltaclean.at(s, dir)
       val log = new java.io.File(out, "_delta_log")
       val ts0 = 1700000000000L
       val hour = 3600000L
@@ -1400,11 +1131,7 @@ private[graft] object EntryLakeQueries {
     // removes with null num_records; gapped ranges refuse. Oracle:
     // DuckDB reads the same commits filtered by the same version range.
     "meta_delta_incremental" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       DeltaMeta.commitDiff(s, out, 2L, 4L)
     }),
 
@@ -1416,12 +1143,7 @@ private[graft] object EntryLakeQueries {
     // 0). Oracle: DuckDB resolves the same distinct row positions via
     // file_row_number + IS NOT DISTINCT FROM joins.
     "meta_iceberg_eq_census" -> ((s, dir) => {
-      val out = "/tmp/graft_iceeq_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeEqDeleteFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceeq.at(s, dir)
       IcebergMeta.equalityNetCensus(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("record_count"), col("eq_deleted"), col("net_rows"))
@@ -1436,12 +1158,7 @@ private[graft] object EntryLakeQueries {
     // stats and applies the same interval rule — a real cross-engine
     // check of the binary single-value decode.
     "meta_iceberg_bounds_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icebnd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeBoundsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icebnd.at(s, dir)
       IcebergMeta.manifestBoundsPrune(s, out, "doc_id", 100L, 200L)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("lower"), col("upper"), col("survives"))
@@ -1453,12 +1170,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB filters ALL the data (its planner prunes with
     // the same footer stats the fixture's bounds mirror).
     "meta_iceberg_pruned_read" -> ((s, dir) => {
-      val out = "/tmp/graft_icebnd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeBoundsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icebnd.at(s, dir)
       IcebergMeta.readBoundsPruned(s, out, "doc_id", 100L, 200L)
         .filter(col("doc_id").between(100L, 200L))
         .agg(count(lit(1)).cast("long").as("n_rows"),
@@ -1469,12 +1181,7 @@ private[graft] object EntryLakeQueries {
     // overlap-depth integers (span_sum/global_span at MANIFEST cost,
     // zero footer reads); the bounds-less file counts unbounded.
     "meta_iceberg_bounds_clustering" -> ((s, dir) => {
-      val out = "/tmp/graft_icebnd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeBoundsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icebnd.at(s, dir)
       IcebergMeta.boundsClusteringReport(s, out, "doc_id")
     }),
 
@@ -1486,10 +1193,7 @@ private[graft] object EntryLakeQueries {
     // closed-form from the fixture's writer contract; row counts
     // recomputed from the data files' own footers.
     "meta_iceberg_manifest_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icesumprune_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeSummaryPruneFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icesumprune.at(s, dir)
       IcebergMeta.manifestSummaryPrune(s, out, "part", 0L, 1L)
     }),
 
@@ -1499,12 +1203,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB recomputes both files' lang min/max from the data
     // and derives the SAME probe from s0 itself.
     "meta_iceberg_bounds_prune_str" -> ((s, dir) => {
-      val out = "/tmp/graft_icesbnd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeStringBoundsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icesbnd.at(s, dir)
       val probe = s.read.parquet(out + "/data/s0.parquet")
         .agg(max("lang")).head().getString(0)
       IcebergMeta.manifestBoundsPruneString(s, out, "lang", probe)
@@ -1519,12 +1218,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB recomputes both files' lang min/max from the
     // data and derives the SAME probes from s1 itself.
     "meta_iceberg_bounds_prune_str_range" -> ((s, dir) => {
-      val out = "/tmp/graft_icesbnd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeStringBoundsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icesbnd.at(s, dir)
       val mm = s.read.parquet(out + "/data/s1.parquet")
         .agg(min("lang"), max("lang")).head()
       IcebergMeta.manifestBoundsPruneStringRange(
@@ -1539,12 +1233,7 @@ private[graft] object EntryLakeQueries {
     // and late files provably disjoint. Oracle: DuckDB recomputes
     // each file's date min/max from the data itself.
     "meta_iceberg_bounds_prune_date" -> ((s, dir) => {
-      val out = "/tmp/graft_icetbnd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeTypedBoundsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icetbnd.at(s, dir)
       IcebergMeta.manifestBoundsPruneDate(
         s, out, "d", "2020-02-01", "2020-03-15")
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1558,12 +1247,7 @@ private[graft] object EntryLakeQueries {
     // decoder gets wrong). Oracle: DuckDB recomputes each file's
     // amount min/max from the data itself.
     "meta_iceberg_bounds_prune_dec" -> ((s, dir) => {
-      val out = "/tmp/graft_icetbnd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeTypedBoundsFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icetbnd.at(s, dir)
       IcebergMeta.manifestBoundsPruneDecimal(
         s, out, "amount", BigDecimal("10.00"), BigDecimal("17.25"))
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -1576,11 +1260,7 @@ private[graft] object EntryLakeQueries {
     // nothing needs re-adding (snap 2 reuses snap 1's manifest).
     // Oracle: writer-contract file sets, rows from the footers.
     "meta_iceberg_rollback" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       IcebergMeta.rollbackPlan(s, out, 1L)
         .select(col("action"),
           regexp_extract(col("path"), "([^/]+)$", 1).as("file"),
@@ -1593,10 +1273,7 @@ private[graft] object EntryLakeQueries {
     // deletes (v2). Three scans total regardless of range width.
     // Oracle: DuckDB reads the same files per the same rule.
     "meta_delta_cdf" -> ((s, dir) => {
-      val out = "/tmp/graft_deltacdf_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeCdfFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltacdf.at(s, dir)
       DeltaMeta.changeFeed(s, out, 0L, 2L)
         .select(col("doc_id"), col("lang"), col("_change_type"),
           col("_commit_version"))
@@ -1609,11 +1286,9 @@ private[graft] object EntryLakeQueries {
     // must equal the one-shot batch feed over [0,2] — the oracle is
     // meta_delta_cdf's, on this fixture's own path.
     "stream_delta_cdf" -> ((s, dir) => {
-      val out = "/tmp/graft_deltacdfstream_" + sfx(dir)
+      val out = Fixtures.deltacdfstream.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_deltacdfstore_",
         "graft_deltacdfck_")
-      DeltaMeta.writeCdfFixtureTable(
-        s, out, input(s, dir, "documents"))
       // pass A: commit 2 has not arrived yet (staged OUTSIDE the log)
       val v2 = new java.io.File(out,
         "_delta_log/00000000000000000002.json")
@@ -1637,10 +1312,7 @@ private[graft] object EntryLakeQueries {
     // file positions (the fixture's planted vectors are the
     // contract).
     "meta_delta_cdf_dv" -> ((s, dir) => {
-      val out = "/tmp/graft_deltacdfdv_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeCdfDvFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltacdfdv.at(s, dir)
       DeltaMeta.changeFeed(s, out, 0L, 3L)
         .select(col("doc_id"), col("lang"), col("_change_type"),
           col("_commit_version"))
@@ -1651,11 +1323,7 @@ private[graft] object EntryLakeQueries {
     // commits removed (f1, f2), remove what arrived after (f4-f6).
     // Oracle: writer-contract file sets, rows from the files' footers.
     "meta_delta_restore" -> ((s, dir) => {
-      val out = "/tmp/graft_delta_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        DeltaMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.delta.at(s, dir)
       DeltaMeta.restorePlan(s, out, 1L)
         .select(col("action"), col("path"), col("num_records"))
     }),
@@ -1666,10 +1334,7 @@ private[graft] object EntryLakeQueries {
     // range by three ids. Oracle: writer-contract bases + footer rows
     // with the same strict window rule.
     "meta_delta_row_tracking" -> ((s, dir) => {
-      val out = "/tmp/graft_deltart_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      DeltaMeta.writeRowTrackingFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.deltart.at(s, dir)
       DeltaMeta.rowTrackingAudit(s, out)
     }),
 
@@ -1680,10 +1345,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB derives the declared side from the writer
     // contract and the actual side from the same data files.
     "meta_iceberg_metrics_audit" -> ((s, dir) => {
-      val out = "/tmp/graft_icemet_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeMetricsFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icemet.at(s, dir)
       IcebergMeta.metricsAudit(s, out, "lang")
     }),
 
@@ -1694,10 +1356,7 @@ private[graft] object EntryLakeQueries {
     // where 0 overlaps an eq match and 5 is position-only evidence.
     // Oracle: DuckDB unions the same eq joins with the position rows.
     "meta_iceberg_merged_census" -> ((s, dir) => {
-      val out = "/tmp/graft_icemrg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeMergedDeleteFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icemrg.at(s, dir)
       IcebergMeta.mergedNetCensus(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("record_count"), col("deleted"), col("net_rows"))
@@ -1712,12 +1371,7 @@ private[graft] object EntryLakeQueries {
     // joins the SAME delete parquets against each partition's data
     // file per the spec's scope rule (no eq_part x fB join exists).
     "meta_iceberg_eq_part_rows" -> ((s, dir) => {
-      val out = "/tmp/graft_iceeqp_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeEqDeletePartitionedFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceeqp.at(s, dir)
       IcebergMeta.equalityDeleteRows(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("eq_cols"), col("key_csv"))
@@ -1727,12 +1381,7 @@ private[graft] object EntryLakeQueries {
     // distinct equality-deleted positions under BOTH scopes (partition
     // A loses its 0-2 keys plus key 7; partition B loses ONLY key 7).
     "meta_iceberg_eq_part_census" -> ((s, dir) => {
-      val out = "/tmp/graft_iceeqp_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeEqDeletePartitionedFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceeqp.at(s, dir)
       IcebergMeta.equalityNetCensus(s, out)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("record_count"), col("eq_deleted"), col("net_rows"))
@@ -1749,10 +1398,7 @@ private[graft] object EntryLakeQueries {
     // hardcoded) and recomputes the measured side from parquet_metadata
     // with the same window.
     "meta_iceberg_sort_order" -> ((s, dir) => {
-      val out = "/tmp/graft_icesort_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeSortOrderFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icesort.at(s, dir)
       IcebergMeta.sortOrderAudit(s, out)
     }),
 
@@ -1761,11 +1407,7 @@ private[graft] object EntryLakeQueries {
     // probes from the same JSON in DuckDB and cross-checks the rows
     // against the data files' own footers.
     "meta_iceberg_time_travel" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       val ts0 = 1700000000000L
       Seq(500L, 99999L).map { off =>
         val id = IcebergMeta.snapshotIdAt(s, out, ts0 + off)
@@ -1787,11 +1429,7 @@ private[graft] object EntryLakeQueries {
     // per-snapshot membership is the fixture contract, the row numbers
     // are the cross-engine check on the manifest decode.
     "meta_iceberg_travel" -> ((s, dir) => {
-      val out = "/tmp/graft_iceberg_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeFixtureTable(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.iceberg.at(s, dir)
       Seq(1L, 2L).map { id =>
         IcebergMeta.filesAt(s, out, Some(id))
           .filter(col("status") =!= 2 && col("content") === 0)
@@ -1812,12 +1450,7 @@ private[graft] object EntryLakeQueries {
     // data alone — cross-checking the prune logic, while the hash
     // itself is pinned to the spec's published vectors.
     "meta_iceberg_bucket_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icebkt_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeBucketFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icebkt.at(s, dir)
       IcebergMeta.bucketPrune(s, out, "doc_id", 7L)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_bucket"), col("survives"))
@@ -1827,12 +1460,7 @@ private[graft] object EntryLakeQueries {
     // scan ONLY them, push the residual equality — must equal a
     // full-scan filter (DuckDB reads all the data).
     "meta_iceberg_bucket_read" -> ((s, dir) => {
-      val out = "/tmp/graft_icebkt_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        IcebergMeta.writeBucketFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.icebkt.at(s, dir)
       IcebergMeta.readBucketPruned(s, out, "doc_id", 7L)
         .filter(col("doc_id") === 7L)
         .agg(count(lit(1)).cast("long").as("n_rows"),
@@ -1844,10 +1472,7 @@ private[graft] object EntryLakeQueries {
     // truncate(250)`. Oracle: DuckDB recomputes every tuple value AND
     // the truncated probe range in plain SQL — fully independent.
     "meta_iceberg_truncate_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icetrn_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeTruncateFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icetrn.at(s, dir)
       IcebergMeta.truncatePrune(s, out, "k", 120L, 250L)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_trunc"), col("survives"))
@@ -1858,12 +1483,7 @@ private[graft] object EntryLakeQueries {
     // commits with their requested/inflight markers plus a DANGLING
     // incomplete instant. Oracle: closed-form writer contract.
     "meta_hudi_timeline" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       HudiMeta.timelineReport(s, out)
     }),
 
@@ -1874,12 +1494,7 @@ private[graft] object EntryLakeQueries {
     // fid1 stat LIES by +1 and must flag. Oracle: DuckDB reads the
     // same footers; membership is the writer contract.
     "meta_hudi_live" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       HudiMeta.liveCensus(s, out)
         .select(col("file_id"), col("partition_path"), col("path"),
           col("instant_time"), col("declared_rows"), col("footer_rows"),
@@ -1892,12 +1507,7 @@ private[graft] object EntryLakeQueries {
     // declared side carries the planted lie). Oracle: same footers,
     // writer-contract membership.
     "meta_hudi_travel" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       Seq("20240101000000000", "20240102000000000").map { i =>
         HudiMeta.liveCensus(s, out, Some(i))
           .agg(lit(i).as("instant_time"),
@@ -1913,12 +1523,7 @@ private[graft] object EntryLakeQueries {
     // claimed; conformance is the census's job). Oracle: footers +
     // the writer contract.
     "meta_hudi_incremental" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       val (c1, c2) = ("20240101000000000", "20240102000000000")
       Seq(("0", c1), (c1, c2)).map { case (f, t) =>
         HudiMeta.incrementalPull(s, out, f, t)
@@ -1934,12 +1539,7 @@ private[graft] object EntryLakeQueries {
     // the same footers, membership and the +1 lie from the writer
     // contract.
     "meta_hudi_census" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       MetaValues.tableCensus(s, out)
     }),
 
@@ -1948,12 +1548,7 @@ private[graft] object EntryLakeQueries {
     // — never the live slices, never the undeclared orphan. Oracle:
     // writer contract + the reclaimed file's own footer.
     "meta_hudi_clean" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       HudiMeta.cleanPlan(s, out, 1)
         .select(col("file_id"), col("path"), col("instant_time"),
           col("declared_rows"))
@@ -1963,12 +1558,7 @@ private[graft] object EntryLakeQueries {
     // the planted fid3 leftover, surfaced with its footer rows.
     // Oracle: the same anti-join over DuckDB's footer listing.
     "meta_hudi_orphans" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       HudiMeta.orphanReport(s, out)
     }),
 
@@ -1978,12 +1568,7 @@ private[graft] object EntryLakeQueries {
     // NAME — zero I/O per row). Oracle: the same writer contract as
     // meta_hudi_timeline.
     "meta_hudi_source" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       s.read.format("metadata").load(out)
         .select(col("instant_time"), col("action"), col("state"))
     }),
@@ -1996,10 +1581,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: footers give every range width; bases are the spec's
     // closed-form inheritance.
     "meta_iceberg_row_lineage" -> ((s, dir) => {
-      val out = "/tmp/graft_icerl_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeRowLineageFixtureTable(
-        s, out, input(s, dir, "documents"))
+      val out = Fixtures.icerl.at(s, dir)
       IcebergMeta.rowLineageAudit(s, out)
         .select(regexp_extract(col("file_path"), "([^/]+)$", 1).as("file"),
           col("first_row_id"), col("record_count"), col("disjoint"),
@@ -2012,10 +1594,7 @@ private[graft] object EntryLakeQueries {
     // day. Oracle: DuckDB recomputes each file's month from its own
     // ts values and applies the same month-window rule.
     "meta_iceberg_months_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icemon_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeTimeTransformFixtureTable(
-        s, out, input(s, dir, "documents"), "month")
+      val out = Fixtures.icemon.at(s, dir)
       IcebergMeta.monthsPrune(s, out, "ts", "2023-08-15", "2023-11-02")
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_month"), col("survives"))
@@ -2027,10 +1606,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB recomputes each file's hour from its own ts
     // values (exact-hour by construction, so min(ts) IS the hour).
     "meta_iceberg_hours_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icehr_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeTimeTransformFixtureTable(
-        s, out, input(s, dir, "documents"), "hour")
+      val out = Fixtures.icehr.at(s, dir)
       IcebergMeta.hoursPrune(s, out, "ts",
         "2024-03-01T06:00:00", "2024-03-02T03:00:00")
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
@@ -2041,10 +1617,7 @@ private[graft] object EntryLakeQueries {
     // fixture spans 2023-2024, the probe keeps 2024 only. Oracle:
     // DuckDB recomputes each file's year from its own ts values.
     "meta_iceberg_years_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_iceyr_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeTimeTransformFixtureTable(
-        s, out, input(s, dir, "documents"), "year")
+      val out = Fixtures.iceyr.at(s, dir)
       IcebergMeta.yearsPrune(s, out, "ts", 2024, 2024)
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_year"), col("survives"))
@@ -2057,10 +1630,7 @@ private[graft] object EntryLakeQueries {
     // arithmetic-series sum all pin the per-row assignment. Oracle:
     // closed form from the footers' row counts.
     "meta_iceberg_row_ids" -> ((s, dir) => {
-      val out = "/tmp/graft_icerlc_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeRowLineageFixtureTable(
-        s, out, input(s, dir, "documents"), plantAnomaly = false)
+      val out = Fixtures.icerlc.at(s, dir)
       IcebergMeta.readWithRowIds(s, out)
         .agg(count(lit(1)).cast("long").as("n_rows"),
           countDistinct(col("_row_id")).cast("long").as("n_distinct_ids"),
@@ -2074,12 +1644,7 @@ private[graft] object EntryLakeQueries {
     // read touches ONLY fid2's base file (plan-asserted in the spec).
     // Oracle: DuckDB reads the same single file.
     "meta_hudi_partition_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       HudiMeta.readPartitionPruned(s, out, "p=1")
         .agg(count(lit(1)).cast("long").as("n_rows"),
           sum(col("doc_id")).cast("long").as("sum_id"))
@@ -2093,12 +1658,7 @@ private[graft] object EntryLakeQueries {
     // live files (the fixture declares truthful bytes) + the same
     // window rule.
     "compaction_plan_hudi" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       val files = HudiMeta.liveFiles(s, out).select(
         regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
         col("file_size").as("size"),
@@ -2112,12 +1672,7 @@ private[graft] object EntryLakeQueries {
     // declared schema (+quality). Oracle: DuckDB parses the same
     // escaped avro JSON out of the commit files independently.
     "meta_hudi_schema" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       HudiMeta.schemaHistory(s, out)
     }),
 
@@ -2128,12 +1683,7 @@ private[graft] object EntryLakeQueries {
     // footers via parquet_schema and the declared side from the
     // commit's own JSON.
     "meta_hudi_conformance" -> ((s, dir) => {
-      val out = "/tmp/graft_hudi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudi.at(s, dir)
       HudiMeta.schemaConformance(s, out)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
           col("n_declared"), col("n_present"), col("missing_csv"))
@@ -2147,12 +1697,7 @@ private[graft] object EntryLakeQueries {
     // the same footers; membership is the HoodieReplaceCommitMetadata
     // writer contract.
     "meta_hudi_clustered_census" -> ((s, dir) => {
-      val out = "/tmp/graft_hudicl_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiClusteredFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudicl.at(s, dir)
       HudiMeta.liveCensus(s, out)
         .select(col("file_id"), col("partition_path"), col("path"),
           col("instant_time"), col("declared_rows"), col("footer_rows"),
@@ -2164,12 +1709,7 @@ private[graft] object EntryLakeQueries {
     // replacement is instant-scoped, never retroactive. Oracle: the
     // same footers, writer-contract membership.
     "meta_hudi_clustered_travel" -> ((s, dir) => {
-      val out = "/tmp/graft_hudicl_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiClusteredFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudicl.at(s, dir)
       Seq("20240102000000000", "20240103000000000").map { i =>
         HudiMeta.liveCensus(s, out, Some(i))
           .agg(lit(i).as("instant_time"),
@@ -2185,12 +1725,7 @@ private[graft] object EntryLakeQueries {
     // as commit/inflight, never as a completed 'inflight' action).
     // Oracle: closed-form writer contract.
     "meta_hudi_mor_timeline" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimor_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimor.at(s, dir)
       HudiMeta.timelineReport(s, out)
     }),
 
@@ -2200,12 +1735,7 @@ private[graft] object EntryLakeQueries {
     // explicitly NOT performed (declared counts reported as declared).
     // Oracle: writer contract + the base footers.
     "meta_hudi_mor_groups" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimor_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimor.at(s, dir)
       HudiMeta.morFileGroups(s, out)
         .select(col("file_id"), col("partition_path"), col("base_instant"),
           col("base_path"), col("declared_base_rows"), col("n_logs"),
@@ -2219,12 +1749,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB reads the same base footers; log numbers are the
     // writer contract.
     "meta_hudi_mor_census" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimor_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimor.at(s, dir)
       HudiMeta.morCensus(s, out)
     }),
 
@@ -2235,12 +1760,7 @@ private[graft] object EntryLakeQueries {
     // Merging logs is the consumer's job; the declared counts are the
     // planning surface. Oracle: base footers + the writer contract.
     "meta_hudi_mor_incremental" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimor_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimor.at(s, dir)
       val (dc1, dc3) = ("20240101000000000", "20240103000000000")
       Seq(("0", dc1), (dc1, dc3)).map { case (f, t) =>
         HudiMeta.morIncrementalPull(s, out, f, t)
@@ -2260,12 +1780,7 @@ private[graft] object EntryLakeQueries {
     // false; deleted entries and the type-1 partitions record are
     // filtered. Oracle: closed-form writer contract + base footers.
     "meta_hudi_metadata_files" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMetadataFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimd.at(s, dir)
       HudiMeta.metadataFilesAudit(s, out)
     }),
 
@@ -2276,24 +1791,7 @@ private[graft] object EntryLakeQueries {
     // groups are untouched. Oracle: the writer contract in closed
     // form.
     "meta_hudi_mor_clean" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorclean_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorFixtureTable(
-          s, out, input(s, dir, "documents"))
-        val dc1 = "20240101000000000"
-        val dc4 = "20240104010000000"
-        val newRel = s"p=0/fid0_0-0-0_$dc4.parquet"
-        java.nio.file.Files.copy(
-          new java.io.File(out, s"p=0/fid0_0-0-0_$dc1.parquet").toPath,
-          new java.io.File(out, newRel).toPath)
-        java.nio.file.Files.write(
-          new java.io.File(out, s".hoodie/$dc4.commit").toPath,
-          (s"""{"partitionToWriteStats":{"p=0":[{"fileId":"fid0",""" +
-            s""""path":"$newRel","numWrites":7,"totalWriteBytes":1,""" +
-            s""""partitionPath":"p=0"}]},"operationType":"compact"}""")
-            .getBytes("UTF-8"))
-      }
+      val out = Fixtures.hudimorclean.at(s, dir)
       HudiMeta.morCleanPlan(s, out, 1)
     }),
 
@@ -2304,12 +1802,7 @@ private[graft] object EntryLakeQueries {
     // all decoded by the scan-only HFile reader; same planted stale
     // and lagging divergences. Oracle: footers + the writer contract.
     "meta_hudi_metadata_hfile" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimdh_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMetadataHFileFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimdh.at(s, dir)
       HudiMeta.metadataFilesAudit(s, out)
     }),
 
@@ -2323,12 +1816,7 @@ private[graft] object EntryLakeQueries {
     // clean — an answer only the log merge can produce. Oracle:
     // footers + the writer contract.
     "meta_hudi_metadata_hfile_log" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimdhl_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMetadataHFileLogFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimdhl.at(s, dir)
       HudiMeta.metadataFilesAudit(s, out)
     }),
 
@@ -2338,12 +1826,7 @@ private[graft] object EntryLakeQueries {
     // skipped, requested/inflight markers unchanged. Oracle:
     // closed-form writer contract.
     "meta_hudi_v1x_timeline" -> ((s, dir) => {
-      val out = "/tmp/graft_hudiv1x_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiV1xFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudiv1x.at(s, dir)
       HudiMeta.timelineReportFull(s, out)
     }),
 
@@ -2353,12 +1836,7 @@ private[graft] object EntryLakeQueries {
     // REQUEST times file slices embed while completion times order
     // only visibility. Oracle: the same base footers.
     "meta_hudi_v1x_census" -> ((s, dir) => {
-      val out = "/tmp/graft_hudiv1x_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiV1xFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudiv1x.at(s, dir)
       HudiMeta.liveCensus(s, out)
         .select(col("file_id"), col("partition_path"), col("path"),
           col("instant_time"), col("declared_rows"), col("footer_rows"),
@@ -2375,12 +1853,7 @@ private[graft] object EntryLakeQueries {
     // the merge relationally from the same deterministic event rules
     // over the documents table.
     "meta_hudi_mor_rows" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorlog_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorLogFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimorlog.at(s, dir)
       HudiMeta.morMergedRows(s, out)
     }),
 
@@ -2389,12 +1862,7 @@ private[graft] object EntryLakeQueries {
     // resolves to — the census depth the r17 tier refused. Oracle:
     // closed-form event arithmetic over the documents table.
     "meta_hudi_mor_merged_census" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorlog_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorLogFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimorlog.at(s, dir)
       HudiMeta.morMergedCensus(s, out)
     }),
 
@@ -2407,12 +1875,7 @@ private[graft] object EntryLakeQueries {
     // nothing, untouched groups are never read. Oracle: the same
     // classification recomputed relationally.
     "meta_hudi_cow_changes" -> ((s, dir) => {
-      val out = "/tmp/graft_hudicd_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiCowDiffFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudicd.at(s, dir)
       HudiMeta.cowIncrementalRows(s, out,
         "20240101000000000", "20240102000000000")
     }),
@@ -2425,12 +1888,7 @@ private[graft] object EntryLakeQueries {
     // Oracle: DuckDB recomputes the window classification relationally
     // from the same deterministic event rules.
     "meta_hudi_mor_changes" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorlog_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorLogFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimorlog.at(s, dir)
       HudiMeta.morIncrementalRows(s, out,
         "20240101000000000", "20240103000000000")
     }),
@@ -2445,12 +1903,7 @@ private[graft] object EntryLakeQueries {
     // die — last event wins). Oracle: DuckDB concatenates the same
     // rendering over the documents table.
     "meta_hudi_mor_composite" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorck_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorCompositeFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimorck.at(s, dir)
       HudiMeta.morIncrementalRows(s, out,
         "20240101000000000", "20240102000000000")
     }),
@@ -2464,12 +1917,7 @@ private[graft] object EntryLakeQueries {
     // and the delete (null ordering sorts lowest). Oracle: the same
     // resolution in closed form over the documents table.
     "meta_hudi_mor_precombine" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorpc_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorPrecombineFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudimorpc.at(s, dir)
       HudiMeta.morMergedRows(s, out)
     }),
 
@@ -2480,12 +1928,7 @@ private[graft] object EntryLakeQueries {
     // derived path (fid1), in one answer. Oracle: the images
     // recomputed from the fixture's event plan.
     "meta_hudi_cdc_changes" -> ((s, dir) => {
-      val out = "/tmp/graft_hudicdc_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      fixtureOnce(out) {
-        HudiMeta.writeHudiMorCdcFixtureTable(
-          s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.hudicdc.at(s, dir)
       HudiMeta.morIncrementalRows(s, out,
         "20240101000000000", "20240102000000000")
     }),
@@ -2497,11 +1940,9 @@ private[graft] object EntryLakeQueries {
     // as the batch incremental pull. Oracle: footers + writer
     // contract (fid1's declared +1 lie included).
     "stream_hudi_appends" -> ((s, dir) => {
-      val out = "/tmp/graft_hudistream_" + sfx(dir)
+      val out = Fixtures.hudistream.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_hudistore_",
         "graft_hudick_")
-      HudiMeta.writeHudiFixtureTable(
-        s, out, input(s, dir, "documents"))
       // pass A: c2's completion marker has not arrived yet
       val c2 = new java.io.File(out, ".hoodie/20240102000000000.commit")
       val aside = new java.io.File(out, "aside_c2.commit")
@@ -2524,11 +1965,9 @@ private[graft] object EntryLakeQueries {
     // the batch morIncrementalPull. Oracle: base footers + the writer
     // contract (fid1's +1 lie and the declared log rows included).
     "stream_hudi_mor_appends" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorstream_" + sfx(dir)
+      val out = Fixtures.hudimorstream.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_hudimorstore_",
         "graft_hudimorck_")
-      HudiMeta.writeHudiMorFixtureTable(
-        s, out, input(s, dir, "documents"))
       // pass A: dc3's completion marker has not arrived yet
       val dc3 = new java.io.File(out, ".hoodie/20240103000000000.deltacommit")
       val aside = new java.io.File(out, "aside_dc3.deltacommit")
@@ -2553,11 +1992,9 @@ private[graft] object EntryLakeQueries {
     // deletes), with per-instant attribution. Oracle: the same window
     // classification recomputed relationally.
     "stream_hudi_mor_changes" -> ((s, dir) => {
-      val out = "/tmp/graft_hudimorchg_" + sfx(dir)
+      val out = Fixtures.hudimorchg.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_hudimorchgstore_",
         "graft_hudimorchgck_")
-      HudiMeta.writeHudiMorLogFixtureTable(
-        s, out, input(s, dir, "documents"))
       // pass A: dc3's completion marker has not arrived yet
       val dc3 = new java.io.File(out, ".hoodie/20240103000000000.deltacommit")
       val aside = new java.io.File(out, "aside_dc3.deltacommit")
@@ -2578,11 +2015,9 @@ private[graft] object EntryLakeQueries {
     // old-value deletes). Oracle: the diff classification recomputed
     // relationally.
     "stream_hudi_cow_changes" -> ((s, dir) => {
-      val out = "/tmp/graft_hudicowchg_" + sfx(dir)
+      val out = Fixtures.hudicowchg.at(s, dir)
       val (store, ckpt) = freshStorePair(dir, "graft_hudicowchgstore_",
         "graft_hudicowchgck_")
-      HudiMeta.writeHudiCowDiffFixtureTable(
-        s, out, input(s, dir, "documents"))
       // pass A: c2's completion marker has not arrived yet
       val c2 = new java.io.File(out, ".hoodie/20240102000000000.commit")
       val aside = new java.io.File(out, "aside_c2.commit")
@@ -2601,10 +2036,7 @@ private[graft] object EntryLakeQueries {
     // int, surfaced as real DATEs. Oracle: DuckDB recomputes each
     // file's day from its own `ts` values.
     "meta_iceberg_days_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_icedays_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      IcebergMeta.writeDaysFixtureTable(
-        s, out, input(s, dir, "events"))
+      val out = Fixtures.icedays.at(s, dir)
       IcebergMeta.daysPrune(s, out, "ts", "2024-01-10", "2024-01-14")
         .select(regexp_extract(col("data_path"), "([^/]+)$", 1).as("file"),
           col("part_day"), col("survives"))

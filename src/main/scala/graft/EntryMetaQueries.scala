@@ -1,35 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.meta.{AvroMeta, DeltaMeta, FooterEdit, Fp16Fixture, IcebergMeta, MetaPrune, MetaValues, OrcPrune}
-import graft.ops.{Bpe, Bucketing, Clustering, ConnectedComponents, Decontam, Dedup, Drift, Layout, Lines, MediaRecord, Multimodal, Packing, PageRank, Profile, RangeJoin, Relevance, Sampling, Similarity, Sketches, Skew, SparseSim, SubstrSearch, TemporalJoin, TextOps}
+import graft.meta.{AvroMeta, FooterEdit, MetaPrune, MetaValues, OrcPrune}
 import org.apache.spark.sql.graft.ColumnBridge
 
-/**
- * Driver contract: the full query inventory with DuckDB oracles.
- *
- * Conventions that keep the oracle hash-compare deterministic:
- *  - every computed column is aliased identically in Spark and SQL;
- *  - integer outputs are cast to BIGINT on both sides;
- *  - double aggregates go through exact DECIMAL sums (order-independent)
- *    and only then cast to DOUBLE, so partition order cannot change a bit;
- *  - ANN/similarity queries emit integer ranks, not raw float scores;
- *  - all ratio-style doubles are exact small-integer rationals, identical
- *    in any IEEE-754 engine.
- *
- * The oracle SQL for metadata queries uses DuckDB's
- * `parquet_metadata`/`parquet_file_metadata`/`read_blob` table functions on
- * the sf0.01 files (the scale the driver verifies at).
- */
 /** Query + oracle inventory — raw parquet/ORC/Avro metadata tiers: levels, decode, pruning,
   * page/bloom/stats machinery, listing and census.
   * Assembled (disjointly) into the driver contract by
   * [[SparkEntry]]. */
 private[graft] object EntryMetaQueries {
   import EntryHelpers._
+  import Fixtures.fixtureDir
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- metadata datasource: the five levels --------------------------
@@ -106,8 +89,7 @@ private[graft] object EntryMetaQueries {
     // derives from the row-group row count. A missing offset index or a
     // drifting page walk each break the hash, independently.
     "meta_page_oi_match" -> ((s, dir) => {
-      val out = "/tmp/graft_pageoi_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_pageoi_")
       s.range(0, 20000, 1, 1)
         .write.mode("overwrite")
         .option("parquet.page.row.count.limit", "1000")
@@ -134,8 +116,7 @@ private[graft] object EntryMetaQueries {
     // a different column. The report itself reads zero data pages: it is
     // the row-level I/O bound a page-index-aware 100 TB reader gets.
     "meta_page_skip" -> ((s, dir) => {
-      val out = "/tmp/graft_pageskip_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_pageskip_")
       s.range(0, 20000, 1, 1)
         .write.mode("overwrite")
         .option("parquet.page.row.count.limit", "1000")
@@ -156,8 +137,7 @@ private[graft] object EntryMetaQueries {
     // page walk can get: every byte of every data page accounted for by
     // value, not just by size.
     "meta_page_values" -> ((s, dir) => {
-      val out = "/tmp/graft_pagevals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_pagevals_")
       s.range(0, 20000, 1, 1)
         .write.mode("overwrite")
         .option("compression", "none")
@@ -185,8 +165,7 @@ private[graft] object EntryMetaQueries {
     // the oracle recomputes the aggregate over ALL files — equality
     // proves per-row-group conjunction dropped no qualifying row.
     "meta_prune_multi" -> ((s, dir) => {
-      val out = "/tmp/graft_multiprune_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_multiprune_")
       val od = new java.io.File(out)
       od.mkdirs()
       od.listFiles().foreach(_.delete())
@@ -222,8 +201,7 @@ private[graft] object EntryMetaQueries {
     // sortedness from those stats; DuckDB's own parquet_metadata decode
     // must agree on every row — declaration, bounds, and monotonicity.
     "meta_sorting" -> ((s, dir) => {
-      val out = "/tmp/graft_sorting_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_sorting_")
       input(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey"))
         .repartition(1).sortWithinPartitions("k")
@@ -247,8 +225,7 @@ private[graft] object EntryMetaQueries {
     // alone — at 100 TB the difference between a metadata scan and
     // re-reading every chunk.
     "meta_encoding_stats" -> ((s, dir) => {
-      val out = "/tmp/graft_encstats_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_encstats_")
       input(s, dir, "documents").select(col("source"))
         .coalesce(1)
         .write.mode("overwrite")
@@ -272,8 +249,7 @@ private[graft] object EntryMetaQueries {
     // distinct decode routes all pinned against DuckDB over the same
     // files.
     "meta_values_any" -> ((s, dir) => {
-      val out = "/tmp/graft_valsany_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_valsany_")
       val base = input(s, dir, "documents")
         .select(col("doc_id").as("k"),
           when(col("doc_id") % 19 === 0, lit(null))
@@ -358,8 +334,7 @@ private[graft] object EntryMetaQueries {
     // repartition, row totals from the data, codec/version from the
     // writer contract (Spark 4 writes ZSTD, ORC file version 0.12).
     "meta_orc_file" -> ((s, dir) => {
-      val out = "/tmp/graft_orcfile_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orcfile_")
       input(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .repartition(2)
@@ -379,8 +354,7 @@ private[graft] object EntryMetaQueries {
     // roll up to the data's count, and the first stripe of every file
     // starts at offset 3 — directly past the "ORC" magic.
     "meta_orc_stripe" -> ((s, dir) => {
-      val out = "/tmp/graft_orcstripe_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orcstripe_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
         .repartition(2)
@@ -401,8 +375,7 @@ private[graft] object EntryMetaQueries {
     // column pins min/max only (an fp sum is accumulation-order
     // dependent — the same discipline as the parquet FP decodes).
     "meta_orc_column" -> ((s, dir) => {
-      val out = "/tmp/graft_orccol_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orccol_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey"),
           col("l_quantity").cast("double").as("qty"),
@@ -427,8 +400,7 @@ private[graft] object EntryMetaQueries {
     // (cross-checked against the stripe level — robust to however many
     // stripes the memory-driven flush produced).
     "meta_orc_rowindex" -> ((s, dir) => {
-      val out = "/tmp/graft_orcri_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orcri_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"),
           col("l_extendedprice").cast("double").as("price"))
@@ -465,8 +437,7 @@ private[graft] object EntryMetaQueries {
     // the rowindex level), soundness = covered rows bound the true
     // match count from above.
     "orc_rowindex_skip" -> ((s, dir) => {
-      val out = "/tmp/graft_orcriskip_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orcriskip_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_quantity").as("q"))
         .repartition(1).sortWithinPartitions("k")
@@ -504,8 +475,7 @@ private[graft] object EntryMetaQueries {
     // report covers. Blooms have no false negatives, so covered rows
     // bound the true matches from above (`sound`).
     "orc_bloom_skip" -> ((s, dir) => {
-      val out = "/tmp/graft_orcbloom_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orcbloom_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_partkey").as("pk"))
         .repartition(1).sortWithinPartitions("k")
@@ -543,8 +513,7 @@ private[graft] object EntryMetaQueries {
     // invariants the layout fixes: totals equal the data, a sorted
     // layout skips stripes, coverage never undercuts the matches.
     "orc_stripe_skip" -> ((s, dir) => {
-      val out = "/tmp/graft_orcskip_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orcskip_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"),
           concat(col("l_returnflag"), lit("_pad_"), col("l_partkey"),
@@ -580,8 +549,7 @@ private[graft] object EntryMetaQueries {
     // distinct codecs by construction, and the file-level totals must
     // agree with the block-level rollup.
     "meta_avro_file" -> ((s, dir) => {
-      val out = "/tmp/graft_avrofile_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_avrofile_")
       val outF = new java.io.File(out)
       if (outF.exists()) outF.listFiles().foreach(_.delete())
       outF.mkdirs()
@@ -614,8 +582,7 @@ private[graft] object EntryMetaQueries {
     // data. The pruned file set is strictly smaller than the layout
     // (range-partitioned: most files cannot hold the probe range).
     "orc_prune_scan" -> ((s, dir) => {
-      val out = "/tmp/graft_orcprune_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_orcprune_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_quantity"))
         .repartitionByRange(6, col("k"))
@@ -634,8 +601,7 @@ private[graft] object EntryMetaQueries {
     // data page; at 100 TB that difference IS the feature). DuckDB
     // recomputes every count from the data itself.
     "meta_token_accounting" -> ((s, dir) => {
-      val out = "/tmp/graft_tokacct_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_tokacct_")
       input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null))
@@ -666,13 +632,7 @@ private[graft] object EntryMetaQueries {
     // form (DuckDB 1.0.0 surfaces FLOAT16 as BLOB, so re-reading the
     // file would verify nothing).
     "meta_fp16_values" -> ((s, dir) => {
-      val out = "/tmp/graft_fp16_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      // pure deterministic fixture, never mutated after the write — the
-      // same once-per-JVM memoization every other pure fixture uses
-      fixtureOnce(out) {
-        Fp16Fixture.writeFp16Table(s, out, input(s, dir, "documents"))
-      }
+      val out = Fixtures.fp16.at(s, dir)
       val statF16 = (c: Column) => ColumnBridge.column(
         graft.functions.PlainStatDouble(ColumnBridge.expression(c),
           ColumnBridge.expression(lit("FLOAT16"))))
@@ -703,8 +663,7 @@ private[graft] object EntryMetaQueries {
     // missing on the %5 rows. Oracle: the same routing in closed form
     // over the documents table.
     "meta_variant_shred" -> ((s, dir) => {
-      val out = "/tmp/graft_varshred_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_varshred_")
       val js = when(col("doc_id") % 5 === 0,
           concat(lit("{\"n\":"), col("doc_id").cast("string"), lit("}")))
         .otherwise(when(col("doc_id") % 3 === 0,
@@ -730,8 +689,7 @@ private[graft] object EntryMetaQueries {
     // array<long>, PLAIN fp), every per-column invariant recomputed by
     // DuckDB from the data alone.
     "meta_decode_table" -> ((s, dir) => {
-      val out = "/tmp/graft_decodetable_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_decodetable_")
       input(s, dir, "documents")
         .select(col("doc_id").as("k"),
           col("lang").as("s"),
@@ -782,8 +740,7 @@ private[graft] object EntryMetaQueries {
     // deprecates INT96 statistics and writers omit them) — the payload
     // decode is the only audit path, which is exactly why it exists.
     "meta_int96_values" -> ((s, dir) => {
-      val out = "/tmp/graft_int96vals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_int96vals_")
       val prev = s.conf.getOption("spark.sql.parquet.outputTimestampType")
       s.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
       try {
@@ -833,8 +790,7 @@ private[graft] object EntryMetaQueries {
     // nulls exercise the definition-level path. Closes the last payload
     // gap in the physical-type decode matrix.
     "meta_flba_values" -> ((s, dir) => {
-      val out = "/tmp/graft_flbavals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_flbavals_")
       input(s, dir, "lineitem")
         .select(when(col("l_orderkey") % 13 === 0, lit(null))
           .otherwise(col("l_extendedprice").cast("decimal(20,2)")).as("price"))
@@ -877,8 +833,7 @@ private[graft] object EntryMetaQueries {
     // record counts, list-slot counts, element counts, and the element
     // sum must equal DuckDB's len()/list_sum() over the data itself.
     "meta_nested_values" -> ((s, dir) => {
-      val out = "/tmp/graft_nestedvals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_nestedvals_")
       input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null))
@@ -927,8 +882,7 @@ private[graft] object EntryMetaQueries {
     // values region), non-null counts straight from the v2 header's
     // num_nulls field, which also derives the NULL group.
     "meta_dict_values_v2" -> ((s, dir) => {
-      val out = "/tmp/graft_dictvals2_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_dictvals2_")
       input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 5 === 0, lit(null).cast("string"))
@@ -988,8 +942,7 @@ private[graft] object EntryMetaQueries {
     // encoding a v1/v2 parquet-mr writer emits reconstructs from
     // page_content.
     "meta_v2_strings" -> ((s, dir) => {
-      val out = "/tmp/graft_v2strings_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_v2strings_")
       input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, lit(null).cast("string"))
@@ -1039,8 +992,7 @@ private[graft] object EntryMetaQueries {
     // dispatcher's new string invariants (lsum = payload byte mass,
     // lmn/lmx = length extrema) must agree with the reconstruction.
     "meta_plain_strings" -> ((s, dir) => {
-      val out = "/tmp/graft_plainstrings_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_plainstrings_")
       // low-cardinality head, unique tail: the dictionary must COMPRESS
       // at the first page flush (all-unique values fail parquet-mr's
       // compression-satisfying check and fall back before any dict page
@@ -1133,8 +1085,7 @@ private[graft] object EntryMetaQueries {
     // and that the writer's original keys survived — via DuckDB's
     // independent parquet_kv_metadata decode of the EDITED footer.
     "meta_kv_stamp" -> ((s, dir) => {
-      val out = "/tmp/graft_kvstamp_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_kvstamp_")
       input(s, dir, "documents")
         .select(col("doc_id"), col("source"))
         .coalesce(1).write.mode("overwrite").parquet(out)
@@ -1156,8 +1107,7 @@ private[graft] object EntryMetaQueries {
     // alone; the oracle re-derives it from the data as the page-set
     // INTERSECT under the pinned 1000-row page layout.
     "meta_page_skip_multi" -> ((s, dir) => {
-      val out = "/tmp/graft_pageskip2_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_pageskip2_")
       s.range(0, 20000, 1, 1)
         .select(col("id").as("a"), (lit(19999L) - col("id")).as("b"))
         .write.mode("overwrite")
@@ -1177,8 +1127,7 @@ private[graft] object EntryMetaQueries {
     // compression via PageInflate; the v2 RLE boolean form is spec-pinned
     // (PhysicalDecodeSpec runs both writer versions).
     "meta_bool_values" -> ((s, dir) => {
-      val out = "/tmp/graft_boolvals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_boolvals_")
       input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 13 === 0, lit(null).cast("boolean"))
@@ -1210,8 +1159,7 @@ private[graft] object EntryMetaQueries {
     // per page; the global roll-up must equal DuckDB's count/min/max of
     // the column. Values avoid zeros so ±0.0 rendering cannot diverge.
     "meta_fp_values" -> ((s, dir) => {
-      val out = "/tmp/graft_fpvals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_fpvals_")
       input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 9 === 0, lit(null).cast("double"))
@@ -1246,8 +1194,7 @@ private[graft] object EntryMetaQueries {
     // which oracles it) can: the transposed read reconstructs the same
     // (count, min, max) invariants PLAIN pages pin.
     "meta_bss_values" -> ((s, dir) => {
-      val out = "/tmp/graft_bssvals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_bssvals_")
       val od = new java.io.File(out)
       od.mkdirs()
       od.listFiles().foreach(_.delete())
@@ -1281,8 +1228,7 @@ private[graft] object EntryMetaQueries {
     // compressed representation. Detection of actual corruption is
     // spec-pinned (PageCrcSpec flips a byte and the mismatch surfaces).
     "meta_page_crc" -> ((s, dir) => {
-      val out = "/tmp/graft_pagecrc_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_pagecrc_")
       s.range(0, 20000, 1, 1)
         .write.mode("overwrite")
         .option("parquet.enable.dictionary", "false")
@@ -1313,8 +1259,7 @@ private[graft] object EntryMetaQueries {
     // header num_values minus decoded indexes. Every data page byte
     // accounted for by value, through real compression.
     "meta_dict_values" -> ((s, dir) => {
-      val out = "/tmp/graft_dictvals_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_dictvals_")
       input(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 7 === 0, lit(null).cast("string"))
@@ -1428,8 +1373,7 @@ private[graft] object EntryMetaQueries {
     // independent engine — equality proves pruning dropped no rows; the
     // MetaPruneSpec proves it drops files.
     "meta_prune_date" -> ((s, dir) => {
-      val out = "/tmp/graft_prune_date_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_prune_date_")
       input(s, dir, "orders")
         .select(to_date(col("o_orderdate")).as("od"), col("o_orderkey"))
         .repartitionByRange(6, col("od"))
@@ -1450,8 +1394,7 @@ private[graft] object EntryMetaQueries {
     // expression). Prefix "src1" covers src1 and src10..src19, exercising
     // the [prefix, nextPrefix) upper bound.
     "meta_prune_prefix" -> ((s, dir) => {
-      val out = "/tmp/graft_prune_prefix_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_prune_prefix_")
       input(s, dir, "documents")
         .select(col("doc_id"), col("source"))
         .repartitionByRange(5, col("source"))
@@ -1468,8 +1411,7 @@ private[graft] object EntryMetaQueries {
     // are big-endian two's complement — the PlainStatUnscaled decode path;
     // bounds are unscaled at the declared scale (1000.00 -> 100000).
     "meta_prune_decimal" -> ((s, dir) => {
-      val out = "/tmp/graft_prune_decimal_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_prune_decimal_")
       input(s, dir, "lineitem")
         .select(col("l_orderkey"),
           col("l_extendedprice").cast("decimal(20,2)").as("price"))
@@ -1491,8 +1433,7 @@ private[graft] object EntryMetaQueries {
     // (n_hits == n_probes == distinct (file, value) pairs). Probes are one
     // codegen pass (SbbfHash -> SbbfMightContain), no driver loop.
     "meta_bloom_probe" -> ((s, dir) => {
-      val out = "/tmp/graft_bloom_probe_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_bloom_probe_")
       input(s, dir, "documents")
         .select(col("doc_id"), col("source"))
         .repartition(4, col("doc_id"))
@@ -1543,8 +1484,7 @@ private[graft] object EntryMetaQueries {
     // equality proves bloom pruning dropped no rows (BloomFilterSpec
     // proves it drops files).
     "bloom_prune_scan" -> ((s, dir) => {
-      val out = "/tmp/graft_bloom_prune_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_bloom_prune_")
       input(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
         .repartition(6, col("doc_id"))
@@ -1572,8 +1512,7 @@ private[graft] object EntryMetaQueries {
     // SizeStatistics, which a pre-2.10 writer simply omits — itself
     // covered by the zero-rows contract in MetadataSourceSpec)
     "meta_size_stats" -> ((s, dir) => {
-      val out = "/tmp/graft_sizestats_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_sizestats_")
       input(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"), col("source"))
         .coalesce(2)
@@ -1606,8 +1545,7 @@ private[graft] object EntryMetaQueries {
     // Proves the page-content byte walk AND the PLAIN BYTE_ARRAY layout
     // decode (<u32 LE length><bytes>), not just page accounting.
     "meta_dict" -> ((s, dir) => {
-      val out = "/tmp/graft_dict_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_dict_")
       input(s, dir, "documents").select(col("source"))
         .repartition(3)
         // uncompressed so page_content is the PLAIN payload itself
@@ -1628,8 +1566,7 @@ private[graft] object EntryMetaQueries {
     // recomputes the IN-list aggregate over all written files; equality
     // proves no key's file was dropped.
     "bloom_prune_in" -> ((s, dir) => {
-      val out = "/tmp/graft_bloom_in_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_bloom_in_")
       input(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"))
         .repartition(6, col("doc_id"))
@@ -1652,8 +1589,7 @@ private[graft] object EntryMetaQueries {
     // the type-parity path (Sbbf.hashInt, bit-pinned against parquet-mr in
     // BloomFilterSpec) exercised end-to-end through written files.
     "bloom_prune_int" -> ((s, dir) => {
-      val out = "/tmp/graft_bloom_int_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_bloom_int_")
       input(s, dir, "documents")
         .select(col("doc_id").cast("int").as("k"), col("n_chars"))
         .repartition(6, col("k"))
@@ -1677,8 +1613,7 @@ private[graft] object EntryMetaQueries {
     // come from the bloom side (Sbbf.hashUnscaled, bit-pinned against
     // parquet-mr in BloomFilterSpec) through written files end-to-end.
     "bloom_prune_decimal" -> ((s, dir) => {
-      val out = "/tmp/graft_bloom_dec_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_bloom_dec_")
       input(s, dir, "documents")
         .select((col("doc_id").cast("decimal(18,2)") +
             lit(java.math.BigDecimal.valueOf(0.25)))
@@ -1705,8 +1640,7 @@ private[graft] object EntryMetaQueries {
     // probe checks both). The probe values are exact binary fractions so
     // the oracle's literal comparison is bit-identical.
     "bloom_prune_double" -> ((s, dir) => {
-      val out = "/tmp/graft_bloom_dbl_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_bloom_dbl_")
       input(s, dir, "documents")
         .select((col("doc_id") * lit(0.25d)).as("v"), col("n_chars"),
           col("doc_id"))
@@ -1733,8 +1667,7 @@ private[graft] object EntryMetaQueries {
     // an independent engine — the index is pinned against the rows it
     // promises to describe, byte-decoded, never trusted.
     "meta_page_index" -> ((s, dir) => {
-      val out = "/tmp/graft_pageindex_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_pageindex_")
       s.range(0, 20000, 1, 1)
         .write.mode("overwrite")
         .option("parquet.page.row.count.limit", "1000")
@@ -1757,8 +1690,7 @@ private[graft] object EntryMetaQueries {
     // at footer-read cost (no data scan on either side). The oracle
     // re-derives the same diff from DuckDB's parquet_metadata.
     "meta_schema_diff" -> ((s, dir) => {
-      val out = "/tmp/graft_schema_diff_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_schema_diff_")
       input(s, dir, "orders")
         .withColumn("o_priority_rank", (col("o_orderkey") % 5).cast("int"))
         .withColumn("o_custkey", col("o_custkey").cast("int"))
@@ -1793,8 +1725,7 @@ private[graft] object EntryMetaQueries {
     // qty added; the oracle pins the declarations closed-form from the
     // construction. Footer cost only — no data pages touched.
     "meta_schema_diff_logical" -> ((s, dir) => {
-      val base = "/tmp/graft_schema_logical_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = fixtureDir(dir, "graft_schema_logical_")
       val l = input(s, dir, "lineitem")
       l.select(col("l_orderkey"),
           to_date(col("l_shipdate")).as("ship"),

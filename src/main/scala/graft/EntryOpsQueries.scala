@@ -1,35 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.meta.{AvroMeta, DeltaMeta, FooterEdit, IcebergMeta, MetaPrune, MetaValues, OrcPrune}
+import graft.meta.MetaPrune
 import graft.ops.{Bpe, Bucketing, Clustering, ConnectedComponents, Decontam, Dedup, Drift, Layout, Lines, MediaRecord, Multimodal, Packing, PageRank, Profile, RangeJoin, Relevance, Sampling, Similarity, Sketches, Skew, SparseSim, SubstrSearch, TemporalJoin, TextOps}
-import org.apache.spark.sql.graft.ColumnBridge
 
-/**
- * Driver contract: the full query inventory with DuckDB oracles.
- *
- * Conventions that keep the oracle hash-compare deterministic:
- *  - every computed column is aliased identically in Spark and SQL;
- *  - integer outputs are cast to BIGINT on both sides;
- *  - double aggregates go through exact DECIMAL sums (order-independent)
- *    and only then cast to DOUBLE, so partition order cannot change a bit;
- *  - ANN/similarity queries emit integer ranks, not raw float scores;
- *  - all ratio-style doubles are exact small-integer rationals, identical
- *    in any IEEE-754 engine.
- *
- * The oracle SQL for metadata queries uses DuckDB's
- * `parquet_metadata`/`parquet_file_metadata`/`read_blob` table functions on
- * the sf0.01 files (the scale the driver verifies at).
- */
 /** Query + oracle inventory — the LLM-data-pipeline operator inventory: dedup, ANN, text,
   * multimodal, sampling, sketches, layout, graph, core SQL.
   * Assembled (disjointly) into the driver contract by
   * [[SparkEntry]]. */
 private[graft] object EntryOpsQueries {
   import EntryHelpers._
+  import Fixtures.fixtureDir
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -42,8 +26,7 @@ private[graft] object EntryOpsQueries {
     // DuckDB computes the same integers from parquet_metadata's own
     // stats over the same files.
     "clustering_report" -> ((s, dir) => {
-      val out = "/tmp/graft_cluster_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_cluster_")
       input(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("r"))
         .repartition(1).sortWithinPartitions("k")
@@ -62,11 +45,10 @@ private[graft] object EntryOpsQueries {
     // (multi-dimension pruning works). Oracle: DuckDB aggregates the
     // same integers from parquet_metadata over both layouts.
     "zorder_clustering" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
       val base = input(s, dir, "orders")
         .select(col("o_custkey").as("k"), col("o_orderkey").as("r"))
-      val lin = "/tmp/graft_zclin_" + sfx
-      val zo = "/tmp/graft_zczo_" + sfx
+      val lin = fixtureDir(dir, "graft_zclin_")
+      val zo = fixtureDir(dir, "graft_zczo_")
       base.repartition(1).sortWithinPartitions("k")
         .write.mode("overwrite")
         .option("parquet.block.size", "65536").parquet(lin)
@@ -95,8 +77,7 @@ private[graft] object EntryOpsQueries {
     "export_manifest" -> ((s, dir) => {
       // path keyed by scale dir so a bench/audit run at another sf cannot
       // overwrite the export the (sf0.01-pinned) oracle reads
-      val out = "/tmp/graft_export_manifest_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_export_manifest_")
       input(s, dir, "documents")
         .repartition(col("lang"))
         .write.mode("overwrite").partitionBy("lang").parquet(out)
@@ -115,8 +96,7 @@ private[graft] object EntryOpsQueries {
     // total rows — is then read from OUR metadata source and the oracle
     // re-derives it from the written files with an independent engine.
     "sized_write" -> ((s, dir) => {
-      val out = "/tmp/graft_sized_write_" +
-        new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = fixtureDir(dir, "graft_sized_write_")
       Bucketing.writeSized(input(s, dir, "documents"), out,
         targetBytes = 256L << 10)
       meta(s, out, "rowgroup")

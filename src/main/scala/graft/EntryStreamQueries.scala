@@ -1,35 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.meta.{AvroMeta, DeltaMeta, FooterEdit, IcebergMeta, MetaPrune, MetaValues, OrcPrune}
-import graft.ops.{Bpe, Bucketing, Clustering, ConnectedComponents, Decontam, Dedup, Drift, Layout, Lines, MediaRecord, Multimodal, Packing, PageRank, Profile, RangeJoin, Relevance, Sampling, Similarity, Sketches, Skew, SparseSim, SubstrSearch, TemporalJoin, TextOps}
-import org.apache.spark.sql.graft.ColumnBridge
+import graft.meta.MetaValues
+import graft.ops.{Dedup, TextOps}
 
-/**
- * Driver contract: the full query inventory with DuckDB oracles.
- *
- * Conventions that keep the oracle hash-compare deterministic:
- *  - every computed column is aliased identically in Spark and SQL;
- *  - integer outputs are cast to BIGINT on both sides;
- *  - double aggregates go through exact DECIMAL sums (order-independent)
- *    and only then cast to DOUBLE, so partition order cannot change a bit;
- *  - ANN/similarity queries emit integer ranks, not raw float scores;
- *  - all ratio-style doubles are exact small-integer rationals, identical
- *    in any IEEE-754 engine.
- *
- * The oracle SQL for metadata queries uses DuckDB's
- * `parquet_metadata`/`parquet_file_metadata`/`read_blob` table functions on
- * the sf0.01 files (the scale the driver verifies at).
- */
 /** Query + oracle inventory — structured-streaming operators (sessions, windows, state,
   * budget gates, ingest loops).
   * Assembled (disjointly) into the driver contract by
   * [[SparkEntry]]. */
 private[graft] object EntryStreamQueries {
   import EntryHelpers._
+  import Fixtures.fixtureDir
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -42,9 +25,8 @@ private[graft] object EntryStreamQueries {
     // over everything that ever arrived. Still zero page I/O — a live
     // corpus's token census at footer cost.
     "stream_token_accounting" -> ((s, dir) => withStreamShuffle(s, 8) {
-      val suffix = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val src = "/tmp/graft_stracct_src_" + suffix
-      val out = scratch("graft_stracct_out_" + suffix)
+      val src = fixtureDir(dir, "graft_stracct_src_")
+      val out = scratch("graft_stracct_out_" + sfx(dir))
       val ckpt = scratchTempDir("graft_stracct_ckpt")
       for (p <- Seq(src, out)) {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))

@@ -1,12 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.meta.{AvroMeta, DeltaMeta, FooterEdit, IcebergMeta, MetaPrune, MetaValues, OrcPrune}
-import graft.ops.{Bpe, Bucketing, Clustering, ConnectedComponents, Decontam, Dedup, Drift, Layout, Lines, MediaRecord, Multimodal, Packing, PageRank, Profile, RangeJoin, Relevance, Sampling, Similarity, Sketches, Skew, SparseSim, SubstrSearch, TemporalJoin, TextOps}
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Driver contract: the full query inventory with DuckDB oracles.
